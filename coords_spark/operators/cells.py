@@ -110,17 +110,6 @@ def cell_col(lat_col, lon_col, level: int) -> Column:
     return _cell(lat_col, lon_col)
 
 
-def cell_of_z_col(z_col, level: int) -> Column:
-    """Cell at `level` from a MAX_LEVEL Z code (cheap re-level without
-    re-projecting)."""
-    shift = 2 * (zcurve.MAX_LEVEL - level)
-    return (
-        F.shiftleft(F.shiftrightunsigned(z_col.cast("long"), shift), zcurve.LEVEL_BITS)
-        .bitwiseOR(F.lit(level))
-        .cast("long")
-    )
-
-
 def ancestor_expr(cell_sql: str, level: int) -> Column:
     """z_ancestor as a pure SQL expression (JVM-side, codegen-friendly, no
     UDF). `cell_sql` is a column name or SQL sub-expression; the variable
@@ -142,42 +131,6 @@ def ancestor_expr_col(cell_sql: str, level_sql: str) -> Column:
         f"2 * ((({cell_sql}) & {int(zcurve.LEVEL_MASK)}) - ({level_sql}))), {zcurve.LEVEL_BITS}) "
         f"| ({level_sql}) as long)"
     )
-
-
-def grid_envelope_cell_col(gx0, gy0, gx1, gy1, max_level: int = zcurve.MAX_LEVEL) -> Column:
-    """Deepest cell fully containing an envelope in MERCATOR GRID units
-    (T4). For lat/lon-int32 envelopes use
-    operators.geometry.envelope_cell_col — same shape, different domain;
-    the names differ on purpose so a wrong import can't silently produce
-    garbage cells."""
-
-    @F.pandas_udf(LongType())
-    def _env(a: pd.Series, b: pd.Series, c: pd.Series, d: pd.Series) -> pd.Series:
-        return pd.Series(
-            zcurve.deepest_common_cell(
-                a.to_numpy(), b.to_numpy(), c.to_numpy(), d.to_numpy(), max_level
-            ).astype("int64")
-        )
-
-    return _env(gx0, gy0, gx1, gy1)
-
-
-def grid_xy_cols(lat_col, lon_col) -> tuple[Column, Column]:
-    """MAX_LEVEL integer grid coords as two columns (for envelope math)."""
-
-    @F.pandas_udf(LongType())
-    def _gx(lat: pd.Series, lon: pd.Series) -> pd.Series:
-        ux, uy = mercator.latlon_i32_to_unit(lat.to_numpy(), lon.to_numpy())
-        gx, _ = zcurve.unit_to_grid(ux, uy)
-        return pd.Series(gx)
-
-    @F.pandas_udf(LongType())
-    def _gy(lat: pd.Series, lon: pd.Series) -> pd.Series:
-        ux, uy = mercator.latlon_i32_to_unit(lat.to_numpy(), lon.to_numpy())
-        _, gy = zcurve.unit_to_grid(ux, uy)
-        return pd.Series(gy)
-
-    return _gx(lat_col, lon_col), _gy(lat_col, lon_col)
 
 
 def unit_xy_cols(lat_col, lon_col) -> tuple[Column, Column]:

@@ -27,17 +27,13 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from coords_spark import bounded
 from coords_spark.operators import tiling
 from coords_spark.operators.update import _apply_way_rewrite
 from coords_spark.sources.icepick import IcepickTable
 
 DEFAULT_ID_SHIFT = 14  # 16k ids per chunk
 _SIDECAR = "_entity_store.json"
-
-# upsert planning collects the diff's distinct ids when they fit under
-# this cap (one Spark job instead of three) — env-tunable; bigger diffs
-# keep the fully distributed planning path
-_DIFF_COLLECT_CAP = int(os.environ.get("COORDS_DIFF_ID_COLLECT_CAP", "500000"))
 
 
 def with_id_chunk(df: DataFrame, id_col: str = "id", id_shift: int = DEFAULT_ID_SHIFT) -> DataFrame:
@@ -229,16 +225,14 @@ def _collect_upserts_arrow(spark, upserts, deleted_ids, id_col, id_shift):
     Arrow collect."""
     import pyarrow as pa
 
-    try:
-        up_tbl = upserts.limit(_DIFF_COLLECT_CAP + 1).toArrow()
-    except Exception:
-        return None
-    if up_tbl.num_rows > _DIFF_COLLECT_CAP:
+    cap = bounded.DIFF_ID_COLLECT_CAP
+    up_tbl = bounded.bounded_arrow(upserts, cap)
+    if up_tbl is None:
         return None
     del_vals: list = []
     if deleted_ids is not None:
-        del_rows = deleted_ids.limit(_DIFF_COLLECT_CAP + 1).collect()
-        if len(del_rows) > _DIFF_COLLECT_CAP:
+        del_rows = deleted_ids.limit(cap + 1).collect()
+        if len(del_rows) > cap:
             return None
         del_vals = [r[0] for r in del_rows]
     try:

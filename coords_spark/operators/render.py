@@ -24,53 +24,24 @@ Ways shorter than 2 vertices emit no segments (nothing to draw).
 
 from __future__ import annotations
 
-import os as _env_os
-
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from coords_spark import bounded
 from coords_spark.kernels import codec, mercator, raster
 from coords_spark.operators import ingest, tiling
-
-# a pyramid level whose viewport holds at most this many tiles is
-# collected as Arrow and written driver-side (one job instead of
-# checkpoint + range-sampling + write); env-tunable — bigger viewports
-# keep the distributed range write
-_SMALL_LEVEL_TILES = int(_env_os.environ.get("COORDS_SMALL_LEVEL_TILES", "16384"))
-
-# the driver-side overzoom decodes/encodes every child single-threaded, so
-# its cap is the per-level CHILD count where ~1 s of local codec work
-# still beats a Spark shuffle + UDF job — far smaller than the write cap
-_SMALL_OVERZOOM_TILES = int(_env_os.environ.get("COORDS_SMALL_OVERZOOM_TILES", "512"))
 
 # deflate level for TILE payloads (masks): level 1 encodes ~4x faster for
 # ~1.7x the bytes (measured on line-work masks) and any level decodes
 # identically — raster goldens pin px_crc of the RAW mask, never payload
 # bytes, and every product path shares this constant so splice==rebuild
 # byte-equality holds. Archival image fixtures keep codec's default 6.
-_TILE_PNGZ_LEVEL = int(_env_os.environ.get("COORDS_TILE_PNGZ_LEVEL", "1"))
+_TILE_PNGZ_LEVEL = 1
 
-
-def _write_level_files_arrow(tbl, stage: str, n_files: int) -> None:
-    """Write a collected tile level as `n_files` contiguous slices of the
-    (tile_x, tile_y)-sorted table — the same tight per-file tile_x
-    lineage the repartitionByRange write produces, without the sampling
-    pass or the write job."""
-    import os
-
-    import pyarrow.parquet as _pq
-
-    if tbl.num_rows == 0:
-        return
-    tbl = tbl.sort_by([("tile_x", "ascending"), ("tile_y", "ascending")])
-    n = min(max(1, n_files), tbl.num_rows)
-    step = -(-tbl.num_rows // n)
-    for i, lo in enumerate(range(0, tbl.num_rows, step)):
-        _pq.write_table(
-            tbl.slice(lo, step), os.path.join(stage, f"part-{i:04d}.parquet")
-        )
+# pyramid level files cluster on tile position
+_TILE_KEYS = ["tile_x", "tile_y"]
 
 
 def bbox_tile_range(bbox, zoom: int, tile_px: int = 256) -> tuple[int, int, int, int]:
@@ -461,7 +432,7 @@ def _overzoom_level_local(
             )
         parents = overzoom_rows_local(rows, tile_px, fmt)
         stage = tempfile.mkdtemp(prefix=f"pyr_z{z}_")
-        _write_level_files_arrow(_level_table_arrow(z, parents), stage, level_partitions)
+        bounded.write_sorted(_level_table_arrow(z, parents), stage, _TILE_KEYS, level_partitions)
         t.commit_staged(stage, group=f"z{z}", chunk_col="tile_x", extra_stats={"zoom": z})
         return True
     except Exception:
@@ -493,42 +464,20 @@ def render_tile_pyramid(
         .select(*cols)
     )
     tx0, tx1, ty0, ty1 = bbox_tile_range(bbox, zoom, tile_px)
-    if (tx1 - tx0 + 1) * (ty1 - ty0 + 1) <= _SMALL_OVERZOOM_TILES:
+    tbl = None
+    if (tx1 - tx0 + 1) * (ty1 - ty0 + 1) <= bounded.SMALL_OVERZOOM_TILES:
         # viewport-bounded pyramid: collect the base level once (the only
         # expensive subtree) and roll every coarser level driver-side via
         # the shared _pool_group rule — replaces one localCheckpoint +
         # shuffle + UDF job per level with plain numpy over a few MB
-        tbl = None
-        try:
-            tbl = base_df.toArrow()
-        except Exception:
-            tbl = None
-        if tbl is not None:
-            data = {c: tbl.column(c).to_pylist() for c in cols}
-            cur = list(zip(data["tile_x"], data["tile_y"], data["payload"]))
-            for z in range(zoom - 1, min_zoom - 1, -1):
-                parents = overzoom_rows_local(cur, tile_px, fmt)
-                for ptx, pty, n_ch, n_px, crc, payload in parents:
-                    data["zoom"].append(z)
-                    data["tile_x"].append(ptx)
-                    data["tile_y"].append(pty)
-                    data["n_src"].append(n_ch)
-                    data["n_px"].append(n_px)
-                    data["px_crc"].append(crc)
-                    data["payload"].append(payload)
-                cur = [(p[0], p[1], p[5]) for p in parents]
-            out_t = pa.table(
-                {
-                    "zoom": pa.array(data["zoom"], pa.int64()),
-                    "tile_x": pa.array(data["tile_x"], pa.int64()),
-                    "tile_y": pa.array(data["tile_y"], pa.int64()),
-                    "n_src": pa.array(data["n_src"], pa.int64()),
-                    "n_px": pa.array(data["n_px"], pa.int64()),
-                    "px_crc": pa.array(data["px_crc"], pa.int64()),
-                    "payload": pa.array(data["payload"], pa.binary()),
-                }
-            )
-            return spark.createDataFrame(out_t)
+        tbl = bounded.bounded_arrow(base_df)
+    if tbl is not None:
+        rows = list(zip(*(tbl.column(c).to_pylist() for c in cols[1:])))
+        parts = [_level_table_arrow(zoom, rows)]
+        for z in range(zoom - 1, min_zoom - 1, -1):
+            rows = overzoom_rows_local([(r[0], r[1], r[5]) for r in rows], tile_px, fmt)
+            parts.append(_level_table_arrow(z, rows))
+        return spark.createDataFrame(pa.concat_tables(parts))
     base = base_df.localCheckpoint()
     levels = [base]
     cur = base
@@ -584,13 +533,10 @@ def build_pyramid_table(
         # re-rendering). Bigger levels keep that classic path.
         tx0_, tx1_, ty0_, ty1_ = bbox_tile_range(bbox, z, tile_px)
         tbl = None
-        if (tx1_ - tx0_ + 1) * (ty1_ - ty0_ + 1) <= _SMALL_LEVEL_TILES:
-            try:
-                tbl = df.toArrow()
-            except Exception:
-                tbl = None
+        if (tx1_ - tx0_ + 1) * (ty1_ - ty0_ + 1) <= bounded.SMALL_LEVEL_TILES:
+            tbl = bounded.bounded_arrow(df)
         if tbl is not None:
-            _write_level_files_arrow(tbl, stage, level_partitions)
+            bounded.write_sorted(tbl, stage, _TILE_KEYS, level_partitions)
         else:
             df = df.localCheckpoint()
             # range-cluster by tile so each file's tile_x lineage is TIGHT —
@@ -627,8 +573,13 @@ def build_pyramid_table(
             for e in t.files()
             if e.get("zoom") in (z + 1, None)
         ]
+        if not child_paths:
+            # the level above committed no file (an empty viewport): there
+            # is nothing to roll up, and Spark cannot read zero paths
+            t.mark_group_committed(f"z{z}")
+            continue
         ctx0, ctx1, cty0, cty1 = bbox_tile_range(bbox, z + 1, tile_px)
-        if (ctx1 - ctx0 + 1) * (cty1 - cty0 + 1) <= _SMALL_OVERZOOM_TILES and (
+        if (ctx1 - ctx0 + 1) * (cty1 - cty0 + 1) <= bounded.SMALL_OVERZOOM_TILES and (
             _overzoom_level_local(t, child_paths, z, tile_px, fmt, level_partitions)
         ):
             continue
@@ -697,7 +648,7 @@ def _refresh_level_local(
                 parts.append(ft.take(keep_idx).select(cols).cast(parts[0].schema))
         tbl = pa.concat_tables(parts) if len(parts) > 1 else parts[0]
         stage = tempfile.mkdtemp(prefix=f"pyr_refresh_z{z}_")
-        _write_level_files_arrow(tbl, stage, 1)
+        bounded.write_sorted(tbl, stage, _TILE_KEYS, 1)
         t.commit_replace(
             stage,
             [e["path"] for e in aff_entries],
@@ -723,8 +674,6 @@ def refresh_pyramid_table(
     fmt: str = "pngz",
     group: str = "refresh",
     level_partitions: int = 4,
-    merge_levels: bool | None = None,
-    merge_threshold: int = 512,
 ) -> dict:
     """Apply a tile-expiry list to an existing sink pyramid — the
     incremental tile pipeline's last mile. `dirty` is the dirty_tiles
@@ -789,10 +738,7 @@ def refresh_pyramid_table(
             by_z.setdefault(z, set()).add((tx, ty))
     cols = ["zoom", "tile_x", "tile_y", "n_src", "n_px", "px_crc", "payload"]
     stats: dict = {}
-    committed = t.committed_groups()
     levels = list(range(zoom, min_zoom - 1, -1))
-    if f"{group}-allz" in committed:
-        return {z: "replayed" for z in levels}
 
     def _aff_files(z: int, tiles: list) -> list[dict]:
         txs = {tx for tx, _ in tiles}
@@ -826,17 +772,13 @@ def refresh_pyramid_table(
         the render executes exactly once inside the write job); large sets
         keep the range write, checkpointed first so sampling cannot
         re-render (CLAUDE.md gotcha)."""
-        if n_dirty <= 64:
+        if n_dirty <= bounded.SMALL_REFRESH_TILES:
             # r8: collect the (dirty-bounded) staged level as Arrow and
             # write the single sorted file driver-side — one job, no
             # parquet-committer fixed cost
-            tbl = None
-            try:
-                tbl = staged.toArrow()
-            except Exception:
-                tbl = None
+            tbl = bounded.bounded_arrow(staged)
             if tbl is not None:
-                _write_level_files_arrow(tbl, stage, 1)
+                bounded.write_sorted(tbl, stage, _TILE_KEYS, 1)
             else:
                 staged.coalesce(1).sortWithinPartitions(
                     "tile_x", "tile_y"
@@ -846,149 +788,6 @@ def refresh_pyramid_table(
             staged.repartitionByRange(
                 level_partitions, "tile_x", "tile_y"
             ).write.mode("overwrite").parquet(stage)
-
-    # merged path (VERDICT r6 ask #6): when the dirty set is small and no
-    # level of this refresh has committed yet, compute every level in
-    # memory (each coarser level's dirty parents read their REFRESHED dirty
-    # children from the previous level's checkpoint and their clean
-    # siblings from the sink) and land the whole pyramid as ONE
-    # commit_replace spanning levels — per-file zoom stamps intact via
-    # commit_replace_multi, per-level ledger groups marked inside the same
-    # sweep so a later resume sees the levels as done. Shaves the
-    # per-level commit + read-back fixed cost that made refresh ~= rebuild
-    # at toy scale.
-    total_dirty = sum(len(v) for v in by_z.values())
-    if merge_levels is None:
-        # measured on local[8] (small dirty sets, 3 levels): merged is
-        # CONSISTENTLY ~1 s slower — the lazy chain recomputes one
-        # overzoom per extra consumer while local commits cost ~0.02 s, so
-        # there is nothing to amortize. The merged path exists for
-        # commit-EXPENSIVE stores (object-store manifest round-trips),
-        # where one commit_replace spanning levels beats one per level;
-        # opt in with merge_levels=True.
-        merge_levels = False
-    if (
-        merge_levels
-        and 0 < total_dirty <= merge_threshold
-        and not any(f"{group}-z{z}" in committed for z in levels)
-    ):
-        # the merged path assumes an ancestor-CLOSED dirty set (coarser
-        # levels re-roll only listed parents); dirty_tiles output always
-        # satisfies this, but an arbitrary caller's set might not — a
-        # dirty parent whose level below is silently absent would overzoom
-        # from stale sink children (ADVICE r7). Refuse loudly instead.
-        for z in range(min_zoom, zoom):
-            below = by_z.get(z + 1, set())
-            for tx, ty in by_z.get(z, ()):
-                if not any(
-                    (2 * tx + dx, 2 * ty + dy) in below
-                    for dx in (0, 1)
-                    for dy in (0, 1)
-                ):
-                    raise ValueError(
-                        "merge_levels=True needs an ancestor-closed dirty set "
-                        f"(tile z{z}/{tx}/{ty} has no dirty child at z{z + 1}); "
-                        "pass dirty_tiles output or merge_levels=False"
-                    )
-        # the whole multi-level refresh is TWO data jobs: (1) the base
-        # dirty re-render (the only expensive subtree — checkpointed so
-        # the lazy overzoom chain never recomputes it), (2) ONE checkpoint
-        # of the unioned staged rows of every level, whose DAG chains the
-        # coarser overzooms through in-memory dirty children + sink-read
-        # clean siblings. Per-level writes then read memory, and the whole
-        # pyramid lands as one commit_replace spanning levels. The lazy
-        # chain recomputes an overzoom subtree once per extra consumer —
-        # dirty-bounded and cheap next to a job launch, which is the cost
-        # this path exists to shave.
-        new_by_z: dict[int, DataFrame | None] = {}
-        aff_by_z: dict[int, list] = {}
-        staged_parts: list[DataFrame] = []
-        for z in levels:
-            tiles = sorted(by_z.get(z, ()))
-            if not tiles:
-                stats[z] = {"dirty": 0, "files_rewritten": 0}
-                new_by_z[z] = None
-                continue
-            if z == zoom:
-                nr = (
-                    render_dirty_tiles(
-                        spark, chunk_table_path, bbox, tiles, z, tile_px,
-                        base_level, fmt,
-                    )
-                    .withColumnRenamed("n_ways", "n_src")
-                    .withColumn("zoom", F.lit(z).cast("long"))
-                    .localCheckpoint()
-                )
-            else:
-                child_set = [
-                    (2 * tx + dx, 2 * ty + dy)
-                    for tx, ty in tiles
-                    for dx in (0, 1)
-                    for dy in (0, 1)
-                ]
-                child_df = spark.createDataFrame(
-                    child_set, "tile_x long, tile_y long"
-                )
-                # manifest tile_x pruning: only files that can hold a
-                # needed child are read — the children fetch is
-                # dirty-proportional, not level-proportional
-                ctxs = {tx for tx, _ty in child_set}
-                upper = [
-                    e
-                    for e in t.files()
-                    if e.get("zoom") == z + 1
-                    and (
-                        e["chunk_min"] is None
-                        or any(e["chunk_min"] <= tx <= e["chunk_max"] for tx in ctxs)
-                    )
-                ]
-                children = (
-                    spark.read.parquet(
-                        *[_os.path.join(t.path, e["path"]) for e in upper]
-                    )
-                    .join(F.broadcast(child_df), ["tile_x", "tile_y"])
-                    .select("tile_x", "tile_y", "payload")
-                )
-                up_dirty = sorted(by_z.get(z + 1, ()))
-                if up_dirty:
-                    # dirty children: their sink rows are STALE — replace
-                    # with the refreshed in-memory level (absent = dropped)
-                    up_df = spark.createDataFrame(
-                        up_dirty, "tile_x long, tile_y long"
-                    )
-                    children = children.join(
-                        F.broadcast(up_df), ["tile_x", "tile_y"], "left_anti"
-                    )
-                    mem = new_by_z[z + 1]
-                    if mem is not None:
-                        children = children.unionByName(
-                            mem.select("tile_x", "tile_y", "payload").join(
-                                F.broadcast(child_df), ["tile_x", "tile_y"]
-                            )
-                        )
-                nr = (
-                    overzoom_tiles(children, tile_px, fmt)
-                    .withColumnRenamed("n_children", "n_src")
-                    .withColumn("zoom", F.lit(z).cast("long"))
-                )
-            new_by_z[z] = nr
-            aff = aff_by_z[z] = _aff_files(z, tiles)
-            staged_parts.append(_staged_level(z, nr, aff))
-            stats[z] = {"dirty": len(tiles), "files_rewritten": len(aff), "merged": True}
-        staged_dirs: list[tuple[str, dict]] = []
-        drops: list[str] = []
-        for z in levels:
-            if new_by_z.get(z) is None:
-                continue
-            stage = tempfile.mkdtemp(prefix=f"pyr_refresh_z{z}_")
-            _write_staged(staged_parts.pop(0), stage, len(by_z[z]))
-            staged_dirs.append((stage, {"zoom": z}))
-            drops += [e["path"] for e in aff_by_z[z]]
-        t.commit_replace_multi(
-            staged_dirs, drops, group=f"{group}-allz", chunk_col="tile_x"
-        )
-        t.mark_groups_committed([f"{group}-z{z}" for z in levels])
-        return stats
 
     for z in levels:
         gname = f"{group}-z{z}"
@@ -1026,7 +825,10 @@ def refresh_pyramid_table(
             ]
             # dirty-bounded coarser level: children fetch + pool + carry-
             # over + commit all run driver-side (zero Spark jobs)
-            if len(tiles) <= 64 and len(child_set) <= _SMALL_OVERZOOM_TILES:
+            if (
+                len(tiles) <= bounded.SMALL_REFRESH_TILES
+                and len(child_set) <= bounded.SMALL_OVERZOOM_TILES
+            ):
                 aff_pre = _aff_files(z, tiles)
                 if _refresh_level_local(
                     t, upper, aff_pre, tiles, child_set, z, tile_px, fmt, gname,

@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
+from coords_spark import bounded
 from coords_spark.kernels import zcurve
 from coords_spark.operators.cells import ancestor_expr
 from coords_spark.sources.icepick import IcepickTable
@@ -93,14 +94,6 @@ def subtree_sizes(df: DataFrame, cell: str, nbytes: str, base_level: int) -> Dat
     return _ancestor_rollup(_capped_per_cell(df, cell, nbytes, base_level))
 
 
-# the distinct-cell table is bounded by 4^base_level; up to this many
-# rows it collects (one Arrow job) and the ancestor rollup runs in numpy
-# driver-side — one pass over the data instead of two shuffles plus a
-# second rollup job. Env-tunable; bigger per-cell tables keep the
-# distributed rollup.
-_PER_CELL_COLLECT_CAP = int(os.environ.get("COORDS_PER_CELL_COLLECT_CAP", "4000000"))
-
-
 def _rollup_split_np(
     cells: np.ndarray, b: np.ndarray, max_bytes: int, base_level: int
 ) -> np.ndarray:
@@ -133,21 +126,6 @@ def _rollup_split_np(
     return np.sort(np.concatenate(out))
 
 
-def _per_cell_arrow(per_cell: DataFrame):
-    """(cells, bytes) numpy pair when the distinct-cell table fits under
-    the collect cap, else None (caller keeps the distributed path)."""
-    try:
-        tbl = per_cell.limit(_PER_CELL_COLLECT_CAP + 1).toArrow()
-    except Exception:
-        return None
-    if tbl.num_rows > _PER_CELL_COLLECT_CAP:
-        return None
-    return (
-        tbl.column("c").to_numpy(zero_copy_only=False),
-        tbl.column("b").to_numpy(zero_copy_only=False),
-    )
-
-
 def compute_split_set(
     df: DataFrame,
     cell: str = "cell",
@@ -158,9 +136,14 @@ def compute_split_set(
     """Collect the (small) set of quadtree nodes whose subtree exceeds
     max_bytes — the only data that ever reaches the driver."""
     per_cell = _capped_per_cell(df, cell, nbytes, base_level)
-    got = _per_cell_arrow(per_cell)
-    if got is not None:
-        return _rollup_split_np(got[0], got[1], max_bytes, base_level)
+    tbl = bounded.bounded_arrow(per_cell, bounded.PER_CELL_COLLECT_CAP)
+    if tbl is not None:
+        return _rollup_split_np(
+            tbl.column("c").to_numpy(zero_copy_only=False),
+            tbl.column("b").to_numpy(zero_copy_only=False),
+            max_bytes,
+            base_level,
+        )
     rows = (
         _ancestor_rollup(per_cell)
         .filter(F.col("sub_bytes") > max_bytes)
@@ -189,12 +172,13 @@ def compute_split_set_and_weights(
     sampling is a second full evaluation of the input (including the
     Python anchor stage) at 10^12 rows. See materialize_chunk_table."""
     per_cell = _capped_per_cell(df, cell, nbytes, base_level)
-    got = _per_cell_arrow(per_cell)
-    if got is not None:
+    tbl = bounded.bounded_arrow(per_cell, bounded.PER_CELL_COLLECT_CAP)
+    if tbl is not None:
         # ONE job total: the rollup, the split filter AND the per-chunk
         # weights all derive in numpy from the collected per-cell pairs
         # (assign_chunks_np is the same vectorized rule the executors run)
-        c, b = got
+        c = tbl.column("c").to_numpy(zero_copy_only=False)
+        b = tbl.column("b").to_numpy(zero_copy_only=False)
         split = _rollup_split_np(c, b, max_bytes, base_level)
         chunk = assign_chunks_np(np.asarray(c, dtype=np.int64), split, base_level)
         uniq, inv = np.unique(chunk, return_inverse=True)

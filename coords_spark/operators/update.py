@@ -26,6 +26,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from coords_spark import bounded
 from coords_spark.operators import geometry, resolve, tiling
 from coords_spark.sources.icepick import IcepickTable
 
@@ -132,13 +133,6 @@ def patched_nodes(nodes: DataFrame, nodes_diff: DataFrame) -> DataFrame:
     )
 
 
-# r8: a diff-sized rewrite (the streaming steady state) writes its staged
-# rows as ONE sorted file — no repartitionByRange, so no boundary-sampling
-# re-pass and one job instead of four (guide §2.4). Past these thresholds
-# the range write returns; both are env-tunable for other deployments.
-_SMALL_REWRITE_BYTES = int(os.environ.get("COORDS_SMALL_REWRITE_BYTES", str(48 << 20)))
-_SMALL_REWRITE_ROWS = int(os.environ.get("COORDS_SMALL_REWRITE_ROWS", "200000"))
-
 _LOCATOR_DIR = "_locator"
 
 
@@ -201,7 +195,7 @@ def _locator_old_lists(
     paths = loc_t.data_paths_ranges(ranges)
     if not paths:
         return {}, 0
-    if sum(os.path.getsize(p) for p in paths) <= _SMALL_REWRITE_BYTES:
+    if sum(os.path.getsize(p) for p in paths) <= bounded.SMALL_REWRITE_BYTES:
         try:
             import pyarrow.parquet as _pq
 
@@ -252,11 +246,7 @@ def _stage_small_rewrite_arrow(
                 surv = ft.filter(pc.fill_null(pc.invert(mask), True))
                 parts.append(surv.select(new_tbl.column_names).cast(new_tbl.schema))
         tbl = pa.concat_tables(parts) if len(parts) > 1 else parts[0]
-        if tbl.num_rows:
-            _pq.write_table(
-                tbl.sort_by([("chunk_id", "ascending")]),
-                os.path.join(staging, "updated.parquet"),
-            )
+        bounded.write_sorted(tbl, staging, ["chunk_id"], 1)
         return True
     except Exception:
         return False
@@ -317,11 +307,8 @@ def _apply_way_rewrite(
         # collected ONCE as Arrow and reused by the staged write below.
         if aff_keys is None:
             aff_keys = [r[0] for r in aff.collect()]
-        if new_tbl is None and n_aff <= _SMALL_REWRITE_ROWS:
-            try:
-                new_tbl = new_rows.toArrow()
-            except Exception:
-                new_tbl = None
+        if new_tbl is None and n_aff <= bounded.SMALL_REWRITE_ROWS:
+            new_tbl = bounded.bounded_arrow(new_rows)
         if new_tbl is not None:
             for kk, cc in zip(
                 new_tbl.column(key).to_pylist(),
@@ -386,7 +373,9 @@ def _apply_way_rewrite(
     # re-chunked affected ways append beside existing coverage (reads
     # union overlapping ranges, so untouched files stay untouched)
     replace_bytes = sum(os.path.getsize(p) for p in replace_paths)
-    small = replace_bytes <= _SMALL_REWRITE_BYTES and n_aff <= _SMALL_REWRITE_ROWS
+    small = (
+        replace_bytes <= bounded.SMALL_REWRITE_BYTES and n_aff <= bounded.SMALL_REWRITE_ROWS
+    )
     staged_small = False
     if small:
         # diff-sized rewrite (the streaming steady state): survivors + new
@@ -398,10 +387,7 @@ def _apply_way_rewrite(
         # write job costs ~0.4-0.6 s fixed on local (committer setup, task
         # temp dirs, renames); this path pays a collect instead.
         if new_tbl is None:
-            try:
-                new_tbl = new_rows.toArrow()
-            except Exception:
-                new_tbl = None  # exotic type: Spark write below
+            new_tbl = bounded.bounded_arrow(new_rows)  # None: Spark write below
         if new_tbl is not None and aff_keys is None:
             aff_keys = [r[0] for r in aff.collect()]
         if new_tbl is not None:

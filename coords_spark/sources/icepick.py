@@ -37,12 +37,9 @@ import shutil
 
 import pyarrow.parquet as pq
 
-_CURRENT = "CURRENT"
+from coords_spark import bounded
 
-# compact() packs signature groups up to this size driver-side with
-# pyarrow (skipping Spark job fixed costs); env-tunable for deployments
-# with bigger driver memory or remote storage (where it must be 0)
-_SMALL_COMPACT_BYTES = int(os.environ.get("COORDS_SMALL_COMPACT_BYTES", str(64 << 20)))
+_CURRENT = "CURRENT"
 
 
 def _sha256_file(path: str, bufsize: int = 1 << 20) -> str:
@@ -376,7 +373,7 @@ class IcepickTable:
             # + write jobs whose fixed cost dominates a small compact.
             # Bigger groups keep the distributed path; any schema surprise
             # falls back to it too.
-            if size <= _SMALL_COMPACT_BYTES and self._pack_arrow(
+            if size <= bounded.SMALL_COMPACT_BYTES and self._pack_arrow(
                 paths, staging, nparts, chunk_col
             ):
                 staged.append((staging, dict(sig) or None))
@@ -424,16 +421,8 @@ class IcepickTable:
                 if len(tables) > 1
                 else tables[0]
             )
-            if tbl.num_rows == 0:
-                return True
-            if chunk_col in tbl.column_names:
-                tbl = tbl.sort_by([(chunk_col, "ascending")])
-            n = min(max(1, nparts), tbl.num_rows)
-            step = -(-tbl.num_rows // n)
-            for i, lo in enumerate(range(0, tbl.num_rows, step)):
-                _pq.write_table(
-                    tbl.slice(lo, step), os.path.join(staging, f"packed-{i:04d}.parquet")
-                )
+            keys = [chunk_col] if chunk_col in tbl.column_names else []
+            bounded.write_sorted(tbl, staging, keys, nparts)
             return True
         except Exception:
             return False
@@ -476,8 +465,7 @@ class IcepickTable:
         self.mark_groups_committed([group])
 
     def mark_groups_committed(self, groups) -> None:
-        """Commit several empty groups in ONE manifest write (e.g. the
-        per-level resume groups of a merged multi-level refresh)."""
+        """Commit several empty groups in ONE manifest write."""
         man = self.current_manifest()
         missing = [str(g) for g in groups if str(g) not in man["committed_groups"]]
         if missing:

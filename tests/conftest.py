@@ -24,3 +24,18 @@ def fixture_dir(tmp_path_factory):
     d = tmp_path_factory.mktemp("fixtures")
     write_fixtures(str(d), sf=0.0004)  # ~2000 images, 8000 nodes, 800 ways
     return str(d)
+
+
+@pytest.fixture()
+def force_distributed(monkeypatch):
+    """Call it to set every driver-side staging cap in coords_spark.bounded
+    to 0: from then on, for the rest of the test, each bounded operator
+    takes its distributed path. Calling it mid-test lets one test compare
+    the default path's result with the distributed one."""
+    from coords_spark import bounded
+
+    def force():
+        for name in [n for n in vars(bounded) if n.isupper()]:
+            monkeypatch.setattr(bounded, name, 0)
+
+    return force

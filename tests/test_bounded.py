@@ -1,0 +1,107 @@
+"""coords_spark.bounded: the two driver-side staging primitives, plus the
+guard that keeps the driver-vs-distributed rule in that one module."""
+
+import os
+import pathlib
+import re
+import uuid
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+from pyspark.errors import PythonException
+from pyspark.sql import functions as F
+
+from coords_spark import bounded
+
+_PKG = pathlib.Path(__file__).resolve().parent.parent / "coords_spark"
+
+
+def _with_jobs(spark, fn):
+    """(fn(), number of Spark jobs fn ran)."""
+    sc = spark.sparkContext
+    group = f"bounded-{uuid.uuid4().hex[:8]}"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_bounded_arrow_under_cap_returns_table(spark):
+    tbl = bounded.bounded_arrow(spark.range(5), 5)
+    assert tbl.column("id").to_pylist() == [0, 1, 2, 3, 4]
+    assert bounded.bounded_arrow(spark.range(3)).num_rows == 3  # caller-bounded
+
+
+def test_bounded_arrow_over_cap_runs_one_probe_only(spark):
+    df = spark.range(0, 50, numPartitions=2)
+    got, jobs = _with_jobs(spark, lambda: bounded.bounded_arrow(df, 5))
+    assert got is None
+    # exactly the jobs of the capped probe itself: nothing runs a second time
+    _, probe_jobs = _with_jobs(spark, lambda: df.limit(6).toArrow())
+    assert jobs == probe_jobs
+
+
+def test_bounded_arrow_unsupported_type_runs_no_job(spark):
+    df = spark.sql("SELECT interval 1 year AS iv")
+    got, jobs = _with_jobs(spark, lambda: bounded.bounded_arrow(df, 10))
+    assert got is None
+    assert jobs == 0
+
+
+def test_bounded_arrow_query_error_raises(spark):
+    @F.udf("long")
+    def boom(x):
+        raise ValueError("planted query error")
+
+    df = spark.range(3).select(boom("id").alias("v"))
+    with pytest.raises(PythonException, match="planted query error"):
+        bounded.bounded_arrow(df, 10)
+
+
+def _read_parts(stage):
+    names = sorted(os.listdir(stage))
+    return names, [pq.read_table(os.path.join(stage, n)) for n in names]
+
+
+def test_write_sorted_contiguous_sorted_slices(tmp_path):
+    keys = [(k * 7919) % 101 for k in range(101)]
+    tbl = pa.table({"k": pa.array(keys, pa.int64()), "v": pa.array(range(101), pa.int64())})
+    bounded.write_sorted(tbl, str(tmp_path), ["k"], 4)
+    names, parts = _read_parts(str(tmp_path))
+    assert names == [f"part-{i:04d}.parquet" for i in range(4)]
+    flat = [k for p in parts for k in p.column("k").to_pylist()]
+    assert flat == sorted(keys)
+    assert sorted(v for p in parts for v in p.column("v").to_pylist()) == list(range(101))
+
+
+def test_write_sorted_file_count_bounded_by_rows(tmp_path):
+    tbl = pa.table({"k": pa.array([3, 1], pa.int64())})
+    bounded.write_sorted(tbl, str(tmp_path), ["k"], 5)
+    names, parts = _read_parts(str(tmp_path))
+    assert 1 <= len(names) <= min(5, tbl.num_rows)
+    assert [k for p in parts for k in p.column("k").to_pylist()] == [1, 3]
+
+
+def test_write_sorted_empty_table_writes_nothing(tmp_path):
+    tbl = pa.table({"k": pa.array([], pa.int64())})
+    bounded.write_sorted(tbl, str(tmp_path), ["k"], 3)
+    assert os.listdir(str(tmp_path)) == []
+
+
+def test_staging_rule_lives_in_bounded():
+    """No COORDS_* environment knob anywhere in the package, and every
+    Arrow collect goes through bounded.bounded_arrow."""
+    to_arrow = re.compile(r"\.toArrow\(")
+    offenders = []
+    for path in sorted(_PKG.rglob("*.py")):
+        rel = path.relative_to(_PKG).as_posix()
+        for no, line in enumerate(path.read_text().splitlines(), 1):
+            if "COORDS_" in line:
+                offenders.append(f"{rel}:{no}: COORDS_ knob: {line.strip()}")
+            if rel != "bounded.py" and to_arrow.search(line):
+                offenders.append(f"{rel}:{no}: toArrow outside bounded.py: {line.strip()}")
+    assert not offenders, "\n".join(offenders)

@@ -54,8 +54,9 @@ def test_payload_verification_detects_corruption(spark, imgs):
 
 
 def test_malformed_payload_flags_row_not_job(spark, imgs):
-    """A truncated buffer / empty payload / garbage stream must mark the ROW
-    payload_ok=False — never raise out of the UDF and kill the job."""
+    """A truncated buffer / empty payload / garbage stream / null width
+    must mark the ROW payload_ok=False — never raise out of the UDF and
+    kill the job."""
     mangled = imgs.limit(12).withColumn(
         "_r", F.monotonically_increasing_id() % 3
     ).withColumn(
@@ -64,6 +65,9 @@ def test_malformed_payload_flags_row_not_job(spark, imgs):
         .when(F.col("_r") == 1, F.lit(b""))  # empty
         .otherwise(F.lit(b"\x00\xff garbage not a codec stream")),
     ).drop("_r")
+    # an intact payload whose w is null
+    null_w = imgs.limit(1).withColumn("w", F.lit(None).cast(imgs.schema["w"].dataType))
+    mangled = mangled.unionByName(null_w)
     v = images.with_payload_verification(mangled)
     rows = v.select("payload_ok").collect()  # must not raise
     assert all(not r["payload_ok"] for r in rows)

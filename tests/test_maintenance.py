@@ -168,3 +168,26 @@ def test_compact_preserves_extra_stats_and_chunk_col(spark, tmp_path):
         for z in (7, 8)
     }
     assert after == before
+
+
+def test_compact_forced_distributed_matches_default(spark, many_small, tmp_path, force_distributed):
+    """compact() on two copies of one table: the default driver-side pack
+    and, with every bounded cap at 0, the Spark rewrite. Same content,
+    same chunk lineage, same stats apart from the file count."""
+    import shutil
+
+    forced = IcepickTable(str(tmp_path / "forced"))
+    shutil.copytree(many_small.path, forced.path)
+    want = many_small.compact(spark, target_bytes=1 << 20)
+    force_distributed()
+    got = forced.compact(spark, target_bytes=1 << 20)
+    assert {k: got[k] for k in ("files_compacted", "bytes_in")} == {
+        k: want[k] for k in ("files_compacted", "bytes_in")
+    }
+    assert _content(spark, forced) == _content(spark, many_small)
+
+    def span(t):
+        return (min(e["chunk_min"] for e in t.files()), max(e["chunk_max"] for e in t.files()))
+
+    assert span(forced) == span(many_small)
+    assert forced.verify_checksums()

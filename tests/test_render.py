@@ -475,17 +475,28 @@ def test_build_pyramid_table(spark, chunk_table, tmp_path):
     assert IcepickTable(out).current_manifest()["version"] == v_after_base + 2
 
 
-def test_refresh_pyramid_table(spark, tmp_path):
-    """Incremental pyramid refresh == full rebuild, through the SINK:
-    build the pre pyramid table, apply the dirty list against the post
-    chunk table, and the refreshed table must equal a from-scratch build
-    on the post world byte-for-byte — with untouched files carried (not
-    rewritten) and a replayed refresh a per-level no-op."""
+def _sink_rows(spark, path):
+    """{(zoom, tile_x, tile_y): (n_src, n_px, px_crc, payload)} of a
+    pyramid sink table."""
+    from coords_spark.sources.icepick import IcepickTable
+
+    return {
+        (r["zoom"], r["tile_x"], r["tile_y"]): (
+            r["n_src"], r["n_px"], r["px_crc"], bytes(r["payload"])
+        )
+        for r in spark.read.parquet(*IcepickTable(path).data_paths()).collect()
+    }
+
+
+@pytest.fixture(scope="module")
+def refresh_world(spark, tmp_path_factory):
+    """Pre and post chunk tables of a small local world, and the dirty
+    tile list between them: the shared input of the refresh tests."""
     import pyarrow as pa
 
     from coords_spark.operators import geometry, render, resolve, tiling
-    from coords_spark.sources.icepick import IcepickTable
 
+    tmp_path = tmp_path_factory.mktemp("refresh_world")
     # purpose-built LOCAL world: 8 clusters of short chain-ways, each
     # confined to its own lon band (gen_ways' random global refs would
     # make every way span the planet, dirtying every x range — a real
@@ -563,7 +574,24 @@ def test_refresh_pyramid_table(spark, tmp_path):
     dirty = render.dirty_tiles(
         geoms["pre"].unionByName(geoms["post"]), zoom, min_zoom, tp
     )
+    return {
+        "paths": paths, "dirty": dirty, "bbox": bbox,
+        "zoom": zoom, "min_zoom": min_zoom, "tp": tp,
+    }
 
+
+def test_refresh_pyramid_table(spark, refresh_world, tmp_path):
+    """Incremental pyramid refresh == full rebuild, through the SINK:
+    build the pre pyramid table, apply the dirty list against the post
+    chunk table, and the refreshed table must equal a from-scratch build
+    on the post world byte-for-byte — with untouched files carried (not
+    rewritten) and a replayed refresh a per-level no-op."""
+    from coords_spark.operators import render
+    from coords_spark.sources.icepick import IcepickTable
+
+    w = refresh_world
+    paths, dirty, bbox = w["paths"], w["dirty"], w["bbox"]
+    zoom, min_zoom, tp = w["zoom"], w["min_zoom"], w["tp"]
     pyr = str(tmp_path / "pyr")
     render.build_pyramid_table(spark, paths["pre"], pyr, bbox, zoom, min_zoom, tp)
     pre_files = {e["path"]: e["checksum"] for e in IcepickTable(pyr).files()}
@@ -576,15 +604,7 @@ def test_refresh_pyramid_table(spark, tmp_path):
     fresh = str(tmp_path / "fresh")
     render.build_pyramid_table(spark, paths["post"], fresh, bbox, zoom, min_zoom, tp)
 
-    def rows_of(p):
-        return {
-            (r["zoom"], r["tile_x"], r["tile_y"]): (
-                r["n_src"], r["n_px"], r["px_crc"], bytes(r["payload"])
-            )
-            for r in spark.read.parquet(*IcepickTable(p).data_paths()).collect()
-        }
-
-    assert rows_of(pyr) == rows_of(fresh)
+    assert _sink_rows(spark, pyr) == _sink_rows(spark, fresh)
 
     # blast radius: untouched files survive the refresh with identical
     # checksums, and at least one file per build was NOT rewritten
@@ -602,6 +622,73 @@ def test_refresh_pyramid_table(spark, tmp_path):
     )
     assert all(v == "replayed" for v in stats2.values())
     assert IcepickTable(pyr).current_manifest()["version"] == v0
+
+
+def test_build_pyramid_forced_distributed_matches_default(
+    spark, chunk_table, tmp_path, force_distributed
+):
+    """With every bounded cap at 0, the sink build (range-partitioned
+    level writes, Spark overzoom) and the in-memory pyramid (checkpointed
+    levels) must land the same tiles as the default driver-side paths."""
+    from coords_spark.operators import render
+
+    path, _ = chunk_table
+    bbox = (int(50.0e7), int(-2.0e7), int(53.0e7), int(1.8e7))
+    args = (bbox, 8, 6, 256)
+    default = str(tmp_path / "default")
+    render.build_pyramid_table(spark, path, default, *args)
+    want = _sink_rows(spark, default)
+    force_distributed()
+    forced = str(tmp_path / "forced")
+    render.build_pyramid_table(spark, path, forced, *args)
+    assert _sink_rows(spark, forced) == want
+    mem = {
+        (r["zoom"], r["tile_x"], r["tile_y"]): (
+            r["n_src"], r["n_px"], r["px_crc"], bytes(r["payload"])
+        )
+        for r in render.render_tile_pyramid(spark, path, *args).collect()
+    }
+    assert mem == want
+
+
+def test_refresh_forced_distributed_matches_default(
+    spark, refresh_world, tmp_path, force_distributed
+):
+    """A refresh with every bounded cap at 0 (range-partitioned level
+    writes, Spark overzoom of every coarser level) must equal a fresh
+    default build of the post world, as the default refresh does."""
+    from coords_spark.operators import render
+
+    w = refresh_world
+    paths, bbox = w["paths"], w["bbox"]
+    args = (w["zoom"], w["min_zoom"], w["tp"])
+    fresh = str(tmp_path / "fresh")
+    render.build_pyramid_table(spark, paths["post"], fresh, bbox, *args)
+    pyr = str(tmp_path / "pyr")
+    render.build_pyramid_table(spark, paths["pre"], pyr, bbox, *args)
+    force_distributed()
+    stats = render.refresh_pyramid_table(
+        spark, paths["post"], pyr, bbox, w["dirty"], *args
+    )
+    assert all(isinstance(v, dict) and v["dirty"] > 0 for v in stats.values())
+    assert _sink_rows(spark, pyr) == _sink_rows(spark, fresh)
+
+
+def test_build_pyramid_empty_viewport_distributed(spark, refresh_world, tmp_path, monkeypatch):
+    """A viewport with no geometry commits an empty base level; the
+    distributed overzoom of the next level must not read zero paths
+    (Spark cannot infer a schema from none). Every level commits empty."""
+    from coords_spark import bounded
+    from coords_spark.operators import render
+    from coords_spark.sources.icepick import IcepickTable
+
+    monkeypatch.setattr(bounded, "SMALL_OVERZOOM_TILES", 0)
+    bbox = (int(-45.0e7), int(-155.0e7), int(-44.0e7), int(-154.0e7))  # mid-Pacific
+    out = str(tmp_path / "empty")
+    render.build_pyramid_table(spark, refresh_world["paths"]["pre"], out, bbox, 10, 8, 256)
+    t = IcepickTable(out)
+    assert sorted(t.committed_groups()) == ["z10", "z8", "z9"]
+    assert t.files() == []
 
 
 def test_vector_tiles(spark, chunk_table):

@@ -190,3 +190,49 @@ def test_apply_way_diff_modify_add_delete(spark, tmp_path):
     for p in set(before) & set(after):
         assert after[p] == before[p]
     assert t.verify_checksums()
+
+
+def test_way_diff_forced_distributed_matches_default(spark, tmp_path, force_distributed):
+    """The same way diff (re-route, add, delete) applied to two copies of
+    one table: once on the default driver-side path, once with every
+    bounded cap at 0 (distributed rewrite, distributed locator upsert
+    planning, Spark-read locator lookup). Table and locator must match."""
+    import shutil
+
+    from coords_spark.operators import geometry, resolve
+
+    nodes = spark.createDataFrame(gen_nodes(600)).localCheckpoint()
+    ways = spark.createDataFrame(gen_ways(80, 600)).localCheckpoint()
+    g = geometry.with_geometry_cell(
+        geometry.with_envelope(resolve.resolve_ways(ways, nodes))
+    ).withColumn("nbytes", (F.size("pts") * 8 + 64).cast("long"))
+    split = tiling.compute_split_set(g, max_bytes=4 * 1024, base_level=tiling.DEFAULT_BASE_LEVEL)
+    default, forced = str(tmp_path / "default"), str(tmp_path / "forced")
+    update.build_way_chunk_table(spark, nodes, ways, default, split, locator_id_shift=3)
+    shutil.copytree(default, forced)
+
+    ids = sorted(r["id"] for r in ways.select("id").collect())
+    refs_mod = ways.filter(F.col("id") == ids[0]).collect()[0]["refs"][:3][::-1]
+    some_nodes = [r["id"] for r in nodes.select("id").limit(4).collect()]
+    diff = spark.createDataFrame(
+        [(int(ids[0]), 2, refs_mod, {"k": "re-routed"}),
+         (int(max(ids) + 1000), 1, some_nodes, {"k": "new"})],
+        "id long, version int, refs array<long>, tags map<string,string>",
+    )
+    deleted = spark.createDataFrame([(int(ids[1]),)], "way_id long")
+
+    def apply(path):
+        stats = update.apply_way_diff(spark, path, nodes, diff, deleted_way_ids=deleted)
+        locator = spark.read.parquet(*IcepickTable(update._locator_path(path)).data_paths())
+        return (
+            {k: v for k, v in stats.items() if k not in ("entries", "files_added")},
+            _rows_of(spark.read.parquet(*IcepickTable(path).data_paths())),
+            sorted(tuple(r) for r in locator.select("way_id", "chunk_ids").collect()),
+        )
+
+    want = apply(default)
+    force_distributed()
+    got = apply(forced)
+    assert got == want
+    assert want[0]["affected_ways"] == 3
+    assert IcepickTable(forced).verify_checksums()
