@@ -235,24 +235,21 @@ def _collect_upserts_arrow(spark, upserts, deleted_ids, id_col, id_shift):
         if len(del_rows) > cap:
             return None
         del_vals = [r[0] for r in del_rows]
-    try:
-        idvals = up_tbl.column(id_col).to_pylist()
-        chunk_arr = pa.array(
-            [None if v is None else int(v) >> id_shift for v in idvals], pa.int64()
+    idvals = up_tbl.column(id_col).to_pylist()
+    chunk_arr = pa.array(
+        [None if v is None else int(v) >> id_shift for v in idvals], pa.int64()
+    )
+    if "chunk_id" in up_tbl.column_names:
+        new_tbl = up_tbl.set_column(
+            up_tbl.column_names.index("chunk_id"), "chunk_id", chunk_arr
         )
-        if "chunk_id" in up_tbl.column_names:
-            new_tbl = up_tbl.set_column(
-                up_tbl.column_names.index("chunk_id"), "chunk_id", chunk_arr
-            )
-        else:
-            new_tbl = up_tbl.append_column("chunk_id", chunk_arr)
-        ids = sorted({v for v in idvals if v is not None} | {v for v in del_vals if v is not None})
-        if any(v is None for v in idvals) or any(v is None for v in del_vals):
-            ids.append(None)
-        chunks = {int(i) >> id_shift for i in ids if i is not None}
-        aff_df = spark.createDataFrame(
-            [(i,) for i in ids], upserts.select(F.col(id_col)).schema
-        )
-        return aff_df, new_tbl, ids, chunks
-    except Exception:
-        return None
+    else:
+        new_tbl = up_tbl.append_column("chunk_id", chunk_arr)
+    ids = sorted({v for v in idvals if v is not None} | {v for v in del_vals if v is not None})
+    if any(v is None for v in idvals) or any(v is None for v in del_vals):
+        ids.append(None)
+    chunks = {int(i) >> id_shift for i in ids if i is not None}
+    aff_df = spark.createDataFrame(
+        [(i,) for i in ids], upserts.select(F.col(id_col)).schema
+    )
+    return aff_df, new_tbl, ids, chunks

@@ -408,35 +408,30 @@ def _level_table_arrow(z: int, parents: list) -> "pa.Table":
 
 def _overzoom_level_local(
     t, child_paths: list[str], z: int, tile_px: int, fmt: str, level_partitions: int
-) -> bool:
+) -> None:
     """Roll ONE sink pyramid level driver-side: read the (small, local,
     zoom-pruned) children files with pyarrow, pool with the shared
-    _pool_group rule, write + commit the level — zero Spark jobs. Returns
-    False on any surprise so the caller runs the distributed overzoom."""
+    _pool_group rule, write + commit the level — zero Spark jobs."""
     import tempfile
 
-    try:
-        import pyarrow.compute as pc
-        import pyarrow.parquet as _pq
+    import pyarrow.compute as pc
+    import pyarrow.parquet as _pq
 
-        rows: list = []
-        for p in child_paths:
-            ft = _pq.read_table(p, columns=["zoom", "tile_x", "tile_y", "payload"])
-            ft = ft.filter(pc.equal(ft.column("zoom"), z + 1))
-            rows.extend(
-                zip(
-                    ft.column("tile_x").to_pylist(),
-                    ft.column("tile_y").to_pylist(),
-                    ft.column("payload").to_pylist(),
-                )
+    rows: list = []
+    for p in child_paths:
+        ft = _pq.read_table(p, columns=["zoom", "tile_x", "tile_y", "payload"])
+        ft = ft.filter(pc.equal(ft.column("zoom"), z + 1))
+        rows.extend(
+            zip(
+                ft.column("tile_x").to_pylist(),
+                ft.column("tile_y").to_pylist(),
+                ft.column("payload").to_pylist(),
             )
-        parents = overzoom_rows_local(rows, tile_px, fmt)
-        stage = tempfile.mkdtemp(prefix=f"pyr_z{z}_")
-        bounded.write_sorted(_level_table_arrow(z, parents), stage, _TILE_KEYS, level_partitions)
-        t.commit_staged(stage, group=f"z{z}", chunk_col="tile_x", extra_stats={"zoom": z})
-        return True
-    except Exception:
-        return False
+        )
+    parents = overzoom_rows_local(rows, tile_px, fmt)
+    stage = tempfile.mkdtemp(prefix=f"pyr_z{z}_")
+    bounded.write_sorted(_level_table_arrow(z, parents), stage, _TILE_KEYS, level_partitions)
+    t.commit_staged(stage, group=f"z{z}", chunk_col="tile_x", extra_stats={"zoom": z})
 
 
 def render_tile_pyramid(
@@ -579,9 +574,8 @@ def build_pyramid_table(
             t.mark_group_committed(f"z{z}")
             continue
         ctx0, ctx1, cty0, cty1 = bbox_tile_range(bbox, z + 1, tile_px)
-        if (ctx1 - ctx0 + 1) * (cty1 - cty0 + 1) <= bounded.SMALL_OVERZOOM_TILES and (
+        if (ctx1 - ctx0 + 1) * (cty1 - cty0 + 1) <= bounded.SMALL_OVERZOOM_TILES:
             _overzoom_level_local(t, child_paths, z, tile_px, fmt, level_partitions)
-        ):
             continue
         children = (
             spark.read.parquet(*child_paths)
@@ -608,57 +602,52 @@ def _refresh_level_local(
     tile_px: int,
     fmt: str,
     gname: str,
-) -> bool:
+) -> None:
     """Refresh ONE coarser pyramid level driver-side: read the refreshed
     children of the dirty parents from the (small, zoom+range-pruned)
     level-above files, pool with the shared _pool_group rule, carry the
-    affected files' non-dirty rows over, commit — zero Spark jobs.
-    Returns False on any surprise so the caller runs the Spark path."""
+    affected files' non-dirty rows over, commit — zero Spark jobs."""
     import os as _os
     import tempfile
 
-    try:
-        import pyarrow.parquet as _pq
+    import pyarrow.parquet as _pq
 
-        cols = ["zoom", "tile_x", "tile_y", "n_src", "n_px", "px_crc", "payload"]
-        want = set(map(tuple, child_set))
-        rows = []
-        for e in upper_entries:
-            ft = _pq.read_table(_os.path.join(t.path, e["path"]), columns=["tile_x", "tile_y", "payload"])
-            for tx, ty, payload in zip(
-                ft.column("tile_x").to_pylist(),
-                ft.column("tile_y").to_pylist(),
-                ft.column("payload").to_pylist(),
-            ):
-                if (tx, ty) in want:
-                    rows.append((tx, ty, payload))
-        parents = overzoom_rows_local(rows, tile_px, fmt)
-        parts = [_level_table_arrow(z, parents)]
-        dirty_set = set(map(tuple, tiles))
-        for e in aff_entries:
-            ft = _pq.read_table(_os.path.join(t.path, e["path"]))
-            keep_idx = [
-                i
-                for i, (tx, ty) in enumerate(
-                    zip(ft.column("tile_x").to_pylist(), ft.column("tile_y").to_pylist())
-                )
-                if (tx, ty) not in dirty_set
-            ]
-            if keep_idx:
-                parts.append(ft.take(keep_idx).select(cols).cast(parts[0].schema))
-        tbl = pa.concat_tables(parts) if len(parts) > 1 else parts[0]
-        stage = tempfile.mkdtemp(prefix=f"pyr_refresh_z{z}_")
-        bounded.write_sorted(tbl, stage, _TILE_KEYS, 1)
-        t.commit_replace(
-            stage,
-            [e["path"] for e in aff_entries],
-            group=gname,
-            chunk_col="tile_x",
-            extra_stats={"zoom": z},
-        )
-        return True
-    except Exception:
-        return False
+    cols = ["zoom", "tile_x", "tile_y", "n_src", "n_px", "px_crc", "payload"]
+    want = set(map(tuple, child_set))
+    rows = []
+    for e in upper_entries:
+        ft = _pq.read_table(_os.path.join(t.path, e["path"]), columns=["tile_x", "tile_y", "payload"])
+        for tx, ty, payload in zip(
+            ft.column("tile_x").to_pylist(),
+            ft.column("tile_y").to_pylist(),
+            ft.column("payload").to_pylist(),
+        ):
+            if (tx, ty) in want:
+                rows.append((tx, ty, payload))
+    parents = overzoom_rows_local(rows, tile_px, fmt)
+    parts = [_level_table_arrow(z, parents)]
+    dirty_set = set(map(tuple, tiles))
+    for e in aff_entries:
+        ft = _pq.read_table(_os.path.join(t.path, e["path"]))
+        keep_idx = [
+            i
+            for i, (tx, ty) in enumerate(
+                zip(ft.column("tile_x").to_pylist(), ft.column("tile_y").to_pylist())
+            )
+            if (tx, ty) not in dirty_set
+        ]
+        if keep_idx:
+            parts.append(ft.take(keep_idx).select(cols).cast(parts[0].schema))
+    tbl = pa.concat_tables(parts) if len(parts) > 1 else parts[0]
+    stage = tempfile.mkdtemp(prefix=f"pyr_refresh_z{z}_")
+    bounded.write_sorted(tbl, stage, _TILE_KEYS, 1)
+    t.commit_replace(
+        stage,
+        [e["path"] for e in aff_entries],
+        group=gname,
+        chunk_col="tile_x",
+        extra_stats={"zoom": z},
+    )
 
 
 def refresh_pyramid_table(
@@ -767,22 +756,16 @@ def refresh_pyramid_table(
         return staged
 
     def _write_staged(staged, stage: str, n_dirty: int):
-        """Small dirty sets write ONE sorted file per level (no
-        repartitionByRange = no sampling pass = no pre-write checkpoint —
-        the render executes exactly once inside the write job); large sets
+        """Small dirty sets collect the staged level as Arrow and write
+        ONE sorted file driver-side (one job: no range sampling, no
+        pre-write checkpoint, no parquet-committer fixed cost); large sets
         keep the range write, checkpointed first so sampling cannot
         re-render (CLAUDE.md gotcha)."""
+        tbl = None
         if n_dirty <= bounded.SMALL_REFRESH_TILES:
-            # r8: collect the (dirty-bounded) staged level as Arrow and
-            # write the single sorted file driver-side — one job, no
-            # parquet-committer fixed cost
             tbl = bounded.bounded_arrow(staged)
-            if tbl is not None:
-                bounded.write_sorted(tbl, stage, _TILE_KEYS, 1)
-            else:
-                staged.coalesce(1).sortWithinPartitions(
-                    "tile_x", "tile_y"
-                ).write.mode("overwrite").parquet(stage)
+        if tbl is not None:
+            bounded.write_sorted(tbl, stage, _TILE_KEYS, 1)
         else:
             staged = staged.localCheckpoint()
             staged.repartitionByRange(
@@ -813,37 +796,28 @@ def refresh_pyramid_table(
                 for dx in (0, 1)
                 for dy in (0, 1)
             ]
-            ctxs = {tx for tx, _ty in child_set}
-            upper = [
-                e
-                for e in t.files()
-                if e.get("zoom") == z + 1
-                and (
-                    e["chunk_min"] is None
-                    or any(e["chunk_min"] <= tx <= e["chunk_max"] for tx in ctxs)
-                )
-            ]
+            upper = _aff_files(z + 1, child_set)
             # dirty-bounded coarser level: children fetch + pool + carry-
             # over + commit all run driver-side (zero Spark jobs)
             if (
                 len(tiles) <= bounded.SMALL_REFRESH_TILES
                 and len(child_set) <= bounded.SMALL_OVERZOOM_TILES
             ):
-                aff_pre = _aff_files(z, tiles)
-                if _refresh_level_local(
-                    t, upper, aff_pre, tiles, child_set, z, tile_px, fmt, gname,
-                ):
-                    stats[z] = {
-                        "dirty": len(tiles),
-                        "files_rewritten": len(aff_pre),
-                    }
-                    continue
-            child_df = spark.createDataFrame(child_set, "tile_x long, tile_y long")
-            children = (
-                spark.read.parquet(*[_os.path.join(t.path, e["path"]) for e in upper])
-                .join(F.broadcast(child_df), ["tile_x", "tile_y"])
-                .select("tile_x", "tile_y", "payload")
-            )
+                aff = _aff_files(z, tiles)
+                _refresh_level_local(t, upper, aff, tiles, child_set, z, tile_px, fmt, gname)
+                stats[z] = {"dirty": len(tiles), "files_rewritten": len(aff)}
+                continue
+            if upper:
+                child_df = spark.createDataFrame(child_set, "tile_x long, tile_y long")
+                children = (
+                    spark.read.parquet(*[_os.path.join(t.path, e["path"]) for e in upper])
+                    .join(F.broadcast(child_df), ["tile_x", "tile_y"])
+                    .select("tile_x", "tile_y", "payload")
+                )
+            else:
+                # no file of the level above can hold a child, and Spark
+                # cannot read zero paths
+                children = spark.createDataFrame([], "tile_x long, tile_y long, payload binary")
             new_rows = (
                 overzoom_tiles(children, tile_px, fmt)
                 .withColumnRenamed("n_children", "n_src")

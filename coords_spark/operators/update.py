@@ -196,60 +196,53 @@ def _locator_old_lists(
     if not paths:
         return {}, 0
     if sum(os.path.getsize(p) for p in paths) <= bounded.SMALL_REWRITE_BYTES:
-        try:
-            import pyarrow.parquet as _pq
+        import pyarrow.parquet as _pq
 
-            affset = set(aff_keys)
-            old_map: dict = {}
-            for p in paths:
-                lt = _pq.read_table(p, columns=[key, "chunk_ids"])
-                for kk, cl in zip(
-                    lt.column(key).to_pylist(), lt.column("chunk_ids").to_pylist()
-                ):
-                    if kk in affset:
-                        old_map[kk] = list(cl)
-            return old_map, len(paths)
-        except Exception:
-            pass  # schema surprise: executor path below
+        affset = set(aff_keys)
+        old_map: dict = {}
+        for p in paths:
+            lt = _pq.read_table(p, columns=[key, "chunk_ids"])
+            for kk, cl in zip(
+                lt.column(key).to_pylist(), lt.column("chunk_ids").to_pylist()
+            ):
+                if kk in affset:
+                    old_map[kk] = list(cl)
+        return old_map, len(paths)
     rows = spark.read.parquet(*paths).join(F.broadcast(aff), key, "semi").collect()
     return {r[0]: list(r[1]) for r in rows}, len(paths)
 
 
 def _stage_small_rewrite_arrow(
     staging: str, replace_paths: list[str], aff_keys: list, new_tbl, key: str
-) -> bool:
+) -> None:
     """Stage a diff-sized rewrite entirely driver-side: filter the
     affected keys out of the (small, local) replaced files with pyarrow,
-    concat the already-collected new rows, write ONE sorted parquet.
-    Returns False on any schema surprise so the caller can fall back to
-    the Spark write — results are identical either way, this path only
-    removes the fixed cost of a Spark write job per streaming batch."""
-    try:
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        import pyarrow.parquet as _pq
+    concat the already-collected new rows, write ONE sorted parquet —
+    the same rows as the range write, without the fixed cost of a Spark
+    write job per streaming batch."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as _pq
 
-        parts = [new_tbl]
-        if replace_paths:
-            keyvals = [k for k in aff_keys if k is not None]
-            for p in replace_paths:
-                ft = _pq.read_table(p)
-                if set(ft.column_names) != set(new_tbl.column_names):
-                    # schema drift between file and new rows: the Spark
-                    # path keeps the file's own columns — don't narrow
-                    return False
-                mask = pc.is_in(
-                    ft.column(key),
-                    value_set=pa.array(keyvals, ft.schema.field(key).type),
-                )
-                # null keys never match an anti-join: keep them
-                surv = ft.filter(pc.fill_null(pc.invert(mask), True))
-                parts.append(surv.select(new_tbl.column_names).cast(new_tbl.schema))
-        tbl = pa.concat_tables(parts) if len(parts) > 1 else parts[0]
-        bounded.write_sorted(tbl, staging, ["chunk_id"], 1)
-        return True
-    except Exception:
-        return False
+    parts = [new_tbl]
+    keyvals = [k for k in aff_keys if k is not None]
+    for p in replace_paths:
+        ft = _pq.read_table(p)
+        if set(ft.column_names) != set(new_tbl.column_names):
+            # one staged file holds one column set
+            raise ValueError(
+                f"column drift between {p} {sorted(ft.column_names)} "
+                f"and the new rows {sorted(new_tbl.column_names)}"
+            )
+        mask = pc.is_in(
+            ft.column(key),
+            value_set=pa.array(keyvals, ft.schema.field(key).type),
+        )
+        # null keys never match an anti-join: keep them
+        surv = ft.filter(pc.fill_null(pc.invert(mask), True))
+        parts.append(surv.select(new_tbl.column_names).cast(new_tbl.schema))
+    tbl = pa.concat_tables(parts) if len(parts) > 1 else parts[0]
+    bounded.write_sorted(tbl, staging, ["chunk_id"], 1)
 
 
 def _apply_way_rewrite(
@@ -272,14 +265,12 @@ def _apply_way_rewrite(
     preserved). Used by the node/way diffs (key=way_id), the relation diff
     (key=relation_id) and the entity stores (key=id).
 
-    Locating the affected chunks costs, in order of preference:
+    The affected chunks come from one of two places:
     - `old_chunks` precomputed by the caller (entity stores: arithmetic
       id >> shift — zero scan);
     - the table's `_locator` sidecar (key -> chunk_ids entity store): an
-      id-range-pruned lookup reading O(diff keys / 2^shift) locator files;
-    - legacy fallback (pre-locator tables): semi-join over ALL data files
-      — correct but table-proportional, the r6 scale finding this refactor
-      removes from every maintained path.
+      id-range-pruned lookup reading O(diff keys / 2^shift) locator files.
+    A table with neither raises ValueError.
 
     Locator crash ordering: the lookup's result is committed back as the
     UNION of old and new chunk ids BEFORE the table commit, and trimmed to
@@ -293,7 +284,13 @@ def _apply_way_rewrite(
     if n_aff == 0:
         return {stat: 0, "files_replaced": 0, "files_added": 0}
 
-    locator = old_chunks is None and has_locator(table_path)
+    locator = old_chunks is None
+    if locator and not has_locator(table_path):
+        raise ValueError(
+            f"{table_path} has no {_LOCATOR_DIR} sidecar: build the table with "
+            "build_way_chunk_table or build_relation_chunk_table (or add the "
+            "sidecar with build_locator)"
+        )
     loc_files_read = 0
     new_map: dict = {}
     if locator:
@@ -337,23 +334,8 @@ def _apply_way_rewrite(
             spark.createDataFrame(union_rows, f"{key} bigint, chunk_ids array<bigint>"),
             group=f"{group}-pre",
         )
-    elif old_chunks is not None:
-        old_aff_chunks = set(old_chunks) if table.data_paths() else set()
     else:
-        # legacy: no locator sidecar (pre-r7 table) — table-wide semi-join
-        all_paths = table.data_paths()
-        old_aff_chunks = (
-            {
-                r["chunk_id"]
-                for r in spark.read.parquet(*all_paths)
-                .join(aff, key, "semi")
-                .select("chunk_id")
-                .distinct()
-                .collect()
-            }
-            if all_paths
-            else set()  # empty table: nothing to rewrite, new rows just append
-        )
+        old_aff_chunks = set(old_chunks) if table.data_paths() else set()
     # a file with no chunk stats could hold ANY affected way — rewrite it
     # conservatively rather than leave a stale duplicate behind
     replace = [
@@ -376,8 +358,9 @@ def _apply_way_rewrite(
     small = (
         replace_bytes <= bounded.SMALL_REWRITE_BYTES and n_aff <= bounded.SMALL_REWRITE_ROWS
     )
-    staged_small = False
-    if small:
+    if small and new_tbl is None:
+        new_tbl = bounded.bounded_arrow(new_rows)  # None: range write below
+    if small and new_tbl is not None:
         # diff-sized rewrite (the streaming steady state): survivors + new
         # rows land as ONE sorted file, staged DRIVER-SIDE. Everything
         # involved is bounded by the thresholds (the same diff-bounded
@@ -386,28 +369,9 @@ def _apply_way_rewrite(
         # small local replaced files filter with pyarrow. A Spark parquet
         # write job costs ~0.4-0.6 s fixed on local (committer setup, task
         # temp dirs, renames); this path pays a collect instead.
-        if new_tbl is None:
-            new_tbl = bounded.bounded_arrow(new_rows)  # None: Spark write below
-        if new_tbl is not None and aff_keys is None:
+        if aff_keys is None:
             aff_keys = [r[0] for r in aff.collect()]
-        if new_tbl is not None:
-            staged_small = _stage_small_rewrite_arrow(
-                staging, replace_paths, aff_keys, new_tbl, key
-            )
-        if not staged_small:
-            rows = new_rows
-            if replace_paths:
-                rows = (
-                    spark.read.parquet(*replace_paths)
-                    .join(F.broadcast(aff), key, "left_anti")
-                    .unionByName(new_rows)
-                )
-            (
-                rows.coalesce(1)
-                .sortWithinPartitions("chunk_id")
-                .write.mode("append")
-                .parquet(os.path.join(staging, "updated"))
-            )
+        _stage_small_rewrite_arrow(staging, replace_paths, aff_keys, new_tbl, key)
     else:
         if replace_paths:
             (

@@ -371,23 +371,18 @@ class IcepickTable:
             # DRIVER-SIDE with pyarrow — threaded reads, one global sort,
             # contiguous slices — skipping the Spark read + range-sampling
             # + write jobs whose fixed cost dominates a small compact.
-            # Bigger groups keep the distributed path; any schema surprise
-            # falls back to it too.
-            if size <= bounded.SMALL_COMPACT_BYTES and self._pack_arrow(
-                paths, staging, nparts, chunk_col
-            ):
-                staged.append((staging, dict(sig) or None))
-                compacted += es
-                total += size
-                continue
-            df = spark.read.parquet(*paths)
-            if chunk_col in df.columns:
-                df = df.repartitionByRange(nparts, chunk_col).sortWithinPartitions(
-                    chunk_col
-                )
+            # Bigger groups keep the distributed path.
+            if size <= bounded.SMALL_COMPACT_BYTES:
+                self._pack_arrow(paths, staging, nparts, chunk_col)
             else:
-                df = df.repartition(nparts)
-            df.write.mode("append").parquet(os.path.join(staging, "packed"))
+                df = spark.read.parquet(*paths)
+                if chunk_col in df.columns:
+                    df = df.repartitionByRange(nparts, chunk_col).sortWithinPartitions(
+                        chunk_col
+                    )
+                else:
+                    df = df.repartition(nparts)
+                df.write.mode("append").parquet(os.path.join(staging, "packed"))
             staged.append((staging, dict(sig) or None))
             compacted += es
             total += size
@@ -403,29 +398,24 @@ class IcepickTable:
         }
 
     @staticmethod
-    def _pack_arrow(paths: list[str], staging: str, nparts: int, chunk_col: str) -> bool:
+    def _pack_arrow(paths: list[str], staging: str, nparts: int, chunk_col: str) -> None:
         """Driver-side bin-pack of small local files: threaded pyarrow
         reads, one sort by chunk_col (when present), nparts contiguous
-        slices. Returns False on any read/schema surprise so compact()
-        can fall back to the Spark rewrite."""
-        try:
-            from concurrent.futures import ThreadPoolExecutor
+        slices."""
+        from concurrent.futures import ThreadPoolExecutor
 
-            import pyarrow as pa
-            import pyarrow.parquet as _pq
+        import pyarrow as pa
+        import pyarrow.parquet as _pq
 
-            with ThreadPoolExecutor(max_workers=min(8, len(paths))) as ex:
-                tables = list(ex.map(_pq.read_table, paths))
-            tbl = (
-                pa.concat_tables(tables, promote_options="default")
-                if len(tables) > 1
-                else tables[0]
-            )
-            keys = [chunk_col] if chunk_col in tbl.column_names else []
-            bounded.write_sorted(tbl, staging, keys, nparts)
-            return True
-        except Exception:
-            return False
+        with ThreadPoolExecutor(max_workers=min(8, len(paths))) as ex:
+            tables = list(ex.map(_pq.read_table, paths))
+        tbl = (
+            pa.concat_tables(tables, promote_options="default")
+            if len(tables) > 1
+            else tables[0]
+        )
+        keys = [chunk_col] if chunk_col in tbl.column_names else []
+        bounded.write_sorted(tbl, staging, keys, nparts)
 
     def expire_snapshots(self, keep_n: int = 1) -> dict:
         """Drop all manifests but the newest keep_n and DELETE data files no

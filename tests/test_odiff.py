@@ -6,6 +6,8 @@ per-batch file reads — while results stay byte-identical to the legacy
 full-scan path. Locator staleness (crash-window supersets) must only widen
 reads, never lose rows, and must self-heal on the next touch."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -91,6 +93,12 @@ WAY_COLS = ["way_id", "chunk_id", "to_json(pts) as p"]
 REL_COLS = [
     "relation_id", "poly_idx", "chunk_id", "to_json(outer) as o", "to_json(inners) as i"
 ]
+STORE_COLS = (
+    ("nodes", ["id", "version", "lat", "lon"]),
+    ("ways", ["id", "version", "to_json(refs) as r"]),
+    ("rels", ["id", "version", "to_json(members) as m"]),
+)
+DIRTY_COLS = ["zoom", "tile_x", "tile_y", "batch_group"]
 
 
 def _apply_all(spark, tmp, stores, way_table, rel_table, kw):
@@ -120,16 +128,11 @@ def test_rindex_path_results_identical(spark, tmp_path):
     dirty_a, _ = _apply_all(spark, d_a, st_a, wt_a, rt_a, {})
     dirty_b, stats_b = _apply_all(spark, d_b, st_b, wt_b, rt_b, kw)
 
-    for k, cols in (
-        ("nodes", ["id", "version", "lat", "lon"]),
-        ("ways", ["id", "version", "to_json(refs) as r"]),
-        ("rels", ["id", "version", "to_json(members) as m"]),
-    ):
+    for k, cols in STORE_COLS:
         assert _rows(spark, st_a[k], cols) == _rows(spark, st_b[k], cols), k
     assert _rows(spark, wt_a, WAY_COLS) == _rows(spark, wt_b, WAY_COLS)
     assert _rows(spark, rt_a, REL_COLS) == _rows(spark, rt_b, REL_COLS)
-    dcols = ["zoom", "tile_x", "tile_y", "batch_group"]
-    assert _rows(spark, dirty_a, dcols) == _rows(spark, dirty_b, dcols)
+    assert _rows(spark, dirty_a, DIRTY_COLS) == _rows(spark, dirty_b, DIRTY_COLS)
 
     # the lookups actually ran through the index (stats carry file counts)
     assert "rindex_lookup" in stats_b[0]["files_read"]
@@ -159,6 +162,43 @@ def test_rindex_path_results_identical(spark, tmp_path):
         for r in ES.read_entity_store(spark, kw["rel_rindex_store"]).collect()
     )
     assert got_wr == want_wr
+
+
+def test_diff_batch_forced_distributed_matches_default(spark, tmp_path, force_distributed):
+    """One diff batch applied to two copies of the smallest world: once on
+    the default driver-side paths, once with every bounded cap at 0
+    (distributed upsert planning, range-write rewrites, Spark-read locator
+    lookups). The three stores, the way and relation tables, both
+    locators and the dirty log end equal."""
+    import shutil
+
+    default, forced = tmp_path / "default", tmp_path / "forced"
+    default.mkdir()
+    stores, way_table, rel_table, _ = _build_world(spark, default, 10, with_rindex=False)
+    shutil.copytree(default, forced)
+    b1, _ = _batches(spark)
+
+    def apply(d):
+        st = {k: str(d / os.path.basename(p)) for k, p in stores.items()}
+        wt, rt = str(d / os.path.basename(way_table)), str(d / os.path.basename(rel_table))
+        dirty = str(d / "dirty")
+        US.apply_diff_batch(
+            spark, b1, st["nodes"], st["ways"], st["rels"], wt, rt,
+            group="diff-0", dirty_table=dirty,
+        )
+        out = {k: _rows(spark, st[k], cols) for k, cols in STORE_COLS}
+        out["way_table"] = _rows(spark, wt, WAY_COLS)
+        out["rel_table"] = _rows(spark, rt, REL_COLS)
+        for name, tbl, key in (("way_locator", wt, "way_id"), ("rel_locator", rt, "relation_id")):
+            out[name] = _rows(spark, update._locator_path(tbl), [key, "to_json(chunk_ids) as c"])
+        out["dirty"] = _rows(spark, dirty, DIRTY_COLS)
+        return out
+
+    want = apply(default)
+    force_distributed()
+    got = apply(forced)
+    assert got == want
+    assert want["way_table"] and want["way_locator"] and want["dirty"]
 
 
 def test_per_batch_reads_do_not_grow_with_world(spark, tmp_path):

@@ -691,6 +691,69 @@ def test_build_pyramid_empty_viewport_distributed(spark, refresh_world, tmp_path
     assert t.files() == []
 
 
+def test_refresh_distributed_level_with_empty_level_above(spark, refresh_world, tmp_path):
+    """Default caps: an empty-viewport pyramid gets an ancestor-closed
+    dirty list with more than SMALL_REFRESH_TILES tiles one level below
+    the base. That level refreshes on the distributed path with no file
+    above it; it must refresh to empty (as a fresh build is), not ask
+    Spark to read zero paths."""
+    from coords_spark import bounded
+    from coords_spark.operators import render
+    from coords_spark.sources.icepick import IcepickTable
+
+    bbox = (int(-50.0e7), int(-160.0e7), int(-42.0e7), int(-152.0e7))  # mid-Pacific
+    zoom, min_zoom, tp = 10, 8, 256
+    pyr = str(tmp_path / "pyr")
+    render.build_pyramid_table(spark, refresh_world["paths"]["pre"], pyr, bbox, zoom, min_zoom, tp)
+    tx0, tx1, ty0, ty1 = render.bbox_tile_range(bbox, zoom - 1, tp)
+    below = [(tx, ty) for tx in range(tx0, tx1 + 1) for ty in range(ty0, ty1 + 1)]
+    assert len(below) > bounded.SMALL_REFRESH_TILES
+    dirty = [(zoom - 1, tx, ty) for tx, ty in below]
+    dirty += [(zoom - 2, tx, ty) for tx, ty in sorted({(tx // 2, ty // 2) for tx, ty in below})]
+
+    stats = render.refresh_pyramid_table(
+        spark, refresh_world["paths"]["post"], pyr, bbox, dirty, zoom, min_zoom, tp
+    )
+    assert stats[zoom - 1]["dirty"] == len(below)
+    t = IcepickTable(pyr)
+    assert {f"refresh-z{zoom - 1}", f"refresh-z{zoom - 2}"} <= t.committed_groups()
+    assert t.total_rows() == 0
+
+
+def test_refresh_driver_level_error_raises(spark, refresh_world, tmp_path, monkeypatch):
+    """An error inside a driver-side refresh level (here its commit)
+    propagates. The level does not run again on the distributed path:
+    overzoom_tiles never runs and the level is never committed."""
+    from coords_spark.operators import render
+    from coords_spark.sources.icepick import IcepickTable
+
+    w = refresh_world
+    args = (w["zoom"], w["min_zoom"], w["tp"])
+    pyr = str(tmp_path / "pyr")
+    render.build_pyramid_table(spark, w["paths"]["pre"], pyr, w["bbox"], *args)
+    target = f"refresh-z{w['zoom'] - 1}"
+    real = IcepickTable.commit_replace
+    groups = []
+
+    def fail_once(self, *a, **kw):
+        groups.append(kw.get("group"))
+        if groups.count(target) == 1 and groups[-1] == target:
+            raise OSError("commit failed")
+        return real(self, *a, **kw)
+
+    def overzoom_tiles(*a, **kw):
+        raise AssertionError("the distributed overzoom ran")
+
+    monkeypatch.setattr(IcepickTable, "commit_replace", fail_once)
+    monkeypatch.setattr(render, "overzoom_tiles", overzoom_tiles)
+    with pytest.raises(OSError, match="commit failed"):
+        render.refresh_pyramid_table(
+            spark, w["paths"]["post"], pyr, w["bbox"], w["dirty"], *args
+        )
+    assert groups.count(target) == 1
+    assert target not in IcepickTable(pyr).committed_groups()
+
+
 def test_vector_tiles(spark, chunk_table):
     """Vector tiles vs an independent scalar assembly: same piece-rect
     membership, runs of consecutive segments -> one LINE blob each in

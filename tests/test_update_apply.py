@@ -114,6 +114,43 @@ def test_apply_empty_diff_is_noop(spark, built):
     assert t.current_manifest()["version"] == v
 
 
+def test_table_without_locator_raises(spark, built, tmp_path):
+    """A chunk table with no _locator sidecar cannot locate a diff's
+    chunks: the node diff raises, naming the sidecar, and commits
+    nothing (no table-wide scan stands in for the lookup)."""
+    import shutil
+
+    nodes, ways, _split, path = built
+    bare = str(tmp_path / "bare")
+    shutil.copytree(path, bare)
+    shutil.rmtree(update._locator_path(bare))
+    v = IcepickTable(bare).current_manifest()["version"]
+    nid = ways.select(F.explode("refs").alias("id")).limit(1).collect()[0]["id"]
+    diff = spark.createDataFrame([(int(nid), 0, 0)], "id long, lat int, lon int")
+    with pytest.raises(ValueError, match="_locator"):
+        update.apply_node_diff(spark, bare, nodes, ways, diff)
+    assert IcepickTable(bare).current_manifest()["version"] == v
+
+
+def test_small_rewrite_column_drift_raises(tmp_path):
+    """A replaced file whose columns differ from the new rows' cannot
+    share one staged file with them: the driver-side rewrite raises
+    ValueError naming both column lists and stages nothing."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    same = str(tmp_path / "same.parquet")
+    drift = str(tmp_path / "drift.parquet")
+    pq.write_table(pa.table({"way_id": [1, 2], "chunk_id": [0, 0]}), same)
+    pq.write_table(pa.table({"way_id": [3], "chunk_id": [1], "extra": ["x"]}), drift)
+    new_tbl = pa.table({"way_id": [1], "chunk_id": [5]})
+    stage = tmp_path / "stage"
+    stage.mkdir()
+    with pytest.raises(ValueError, match=r"\['chunk_id', 'extra', 'way_id'\].*\['chunk_id', 'way_id'\]"):
+        update._stage_small_rewrite_arrow(str(stage), [same, drift], [1], new_tbl, "way_id")
+    assert list(stage.iterdir()) == []
+
+
 def test_affected_way_ids_via_reverse_index(spark, built):
     nodes, ways, split, path = built
     from coords_spark.operators import resolve
