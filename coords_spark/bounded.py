@@ -79,6 +79,15 @@ def bounded_arrow(df: DataFrame, cap: int | None = None) -> pa.Table | None:
     return tbl if tbl.num_rows <= cap else None
 
 
+def arrow_frame(spark, tbl: pa.Table) -> DataFrame:
+    """`tbl`, already on the driver, as a DataFrame over a local relation:
+    reading it back runs no scan of a checkpoint or a file. Each column is
+    rebuilt as one array, because createDataFrame rejects a column with
+    zero chunks (what filtering a table down to no rows leaves)."""
+    cols = [c.combine_chunks() for c in tbl.columns]
+    return spark.createDataFrame(pa.Table.from_arrays(cols, schema=tbl.schema))
+
+
 def write_sorted(tbl: pa.Table, stage: str, sort_keys: list[str], n_files: int) -> None:
     """Write `tbl`, sorted ascending by `sort_keys`, as at most `n_files`
     contiguous slices `part-NNNN.parquet` under `stage` — the tight

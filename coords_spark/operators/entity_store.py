@@ -24,6 +24,9 @@ from __future__ import annotations
 import json
 import os
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -87,17 +90,7 @@ def read_entity_store(spark, table_path: str, with_chunk: bool = False) -> DataF
     """Current snapshot of the store. Empty tables plan from the manifest
     schema (LocalTableScan) — never open a data file on the miss path."""
     t = IcepickTable(table_path)
-    paths = t.data_paths()
-    if not paths:
-        schema = t.spark_schema()
-        if schema is None:
-            raise ValueError(
-                f"entity store {table_path} is empty AND its manifest carries "
-                "no schema stamp (pre-r5 table?) — cannot plan the miss path"
-            )
-        df = spark.createDataFrame([], schema)
-    else:
-        df = spark.read.parquet(*paths)
+    df = t.read(spark, t.data_paths())
     return df if with_chunk else df.drop("chunk_id")
 
 
@@ -130,35 +123,48 @@ def chunk_set_for_ids(ids_df: DataFrame, id_shift: int, id_col: str | None = Non
     }
 
 
+def id_array(values) -> np.ndarray:
+    """Sorted distinct non-null int64 ids of an Arrow array, chunked array
+    or sequence: the driver-side form of an id set."""
+    if isinstance(values, (pa.Array, pa.ChunkedArray)):
+        values = pc.drop_null(values).to_numpy(zero_copy_only=False)
+    return np.unique(np.asarray(values, dtype=np.int64))
+
+
+def id_frame(spark, ids, name: str = "id") -> DataFrame:
+    """Driver-side ids (an int64 array or a list) as a one-column bigint
+    DataFrame (a local relation, so joining it runs no scan)."""
+    return bounded.arrow_frame(spark, pa.table({name: pa.array(ids, pa.int64())}))
+
+
 def read_entities_for_ids(
-    spark, table_path: str, ids_df: DataFrame, with_chunk: bool = False
+    spark, table_path: str, ids_df, with_chunk: bool = False
 ) -> tuple[DataFrame, int]:
     """Pruned store read: only files whose manifest chunk range can hold
-    one of `ids_df`'s ids are opened (O(diff ids / 2^shift) files, never
+    one of the ids are opened (O(diff ids / 2^shift) files, never
     table-proportional). Returns (rows, n_files_read); rows are NOT
     filtered to the ids — callers semi-join, keeping the filter inside the
-    plan. The diff side is collected driver-side as merged chunk ranges
-    (bounded by the diff, the same contract as every other planning list
-    in this engine)."""
+    plan. `ids_df` is a one-column DataFrame, whose chunk set is collected
+    driver-side as merged ranges (bounded by the diff, the same contract
+    as every other planning list in this engine), or a sorted int64 id
+    array already on the driver, whose chunk ranges are ids >> shift with
+    no Spark job."""
     _id_col, id_shift = load_contract(table_path)
     t = IcepickTable(table_path)
-    ranges = _merge_ranges(sorted(chunk_set_for_ids(ids_df, id_shift)))
-    paths = t.data_paths_ranges(ranges)
-    if not paths:
-        schema = t.spark_schema()
-        if schema is None:
-            raise ValueError(f"store {table_path} has no schema stamp for the miss path")
-        df = spark.createDataFrame([], schema)
+    if isinstance(ids_df, DataFrame):
+        chunks = chunk_set_for_ids(ids_df, id_shift)
     else:
-        df = spark.read.parquet(*paths)
+        chunks = np.unique(np.asarray(ids_df, dtype=np.int64) >> id_shift).tolist()
+    paths = t.data_paths_ranges(_merge_ranges(chunks))
+    df = t.read(spark, paths)
     return (df if with_chunk else df.drop("chunk_id")), len(paths)
 
 
 def upsert_entities(
     spark,
     table_path: str,
-    upserts: DataFrame | None = None,
-    deleted_ids: DataFrame | None = None,
+    upserts: DataFrame | pa.Table | None = None,
+    deleted_ids=None,
     group: str = "upsert",
 ) -> dict:
     """Apply an entity diff to the store: drop every upserted/deleted id
@@ -170,36 +176,58 @@ def upsert_entities(
     rewrite set scans zero data files, so a store upsert plans O(diff)
     regardless of table size (VERDICT r6 ask #1).
 
-    `upserts` rows must match the store schema minus chunk_id; brand-new
-    ids simply append (their id range holds no existing file). Delete-only
-    diffs pass upserts=None."""
+    `upserts` rows (a DataFrame or an Arrow table) must match the store
+    schema minus chunk_id; brand-new ids simply append (their id range
+    holds no existing file). Delete-only diffs pass upserts=None.
+    `deleted_ids` is a one-column DataFrame or an int64 id array.
+
+    Up to bounded.DIFF_ID_COLLECT_CAP rows the diff is planned on the
+    driver: DataFrame inputs are collected in ONE Arrow query (upserts and
+    deleted ids side by side, told apart by a flag column), driver-side
+    inputs are not collected at all. Past the cap the distributed
+    planning path runs."""
     id_col, id_shift = load_contract(table_path)
     t = IcepickTable(table_path)
-    if upserts is None:
-        upserts = spark.createDataFrame([], t.spark_schema()).drop("chunk_id")
-    new_rows = with_id_chunk(upserts, id_col, id_shift)
-    # r8: ONE bounded Arrow collect of the upserts replaces the r7
-    # distinct+checkpoint job, the chunk-set collect, the count inside the
-    # rewrite AND the separate staged-write evaluation — the diff is
-    # driver-side-bounded by contract, so the whole plan executes exactly
-    # once. Past the cap (a backfill-sized diff) the distributed planning
-    # path below returns unchanged.
-    small = _collect_upserts_arrow(spark, upserts, deleted_ids, id_col, id_shift)
-    if small is not None:
-        aff_df, new_tbl, ids, chunks = small
+    diff = _collect_diff(upserts, deleted_ids, id_col)
+    if diff is not None:
+        up_tbl, del_ids = diff
+        if up_tbl is None:
+            up_tbl = t.arrow_schema().empty_table().drop_columns(["chunk_id"])
+        chunk_arr = pc.shift_right(up_tbl.column(id_col).cast(pa.int64()), id_shift)
+        if "chunk_id" in up_tbl.column_names:
+            new_tbl = up_tbl.set_column(
+                up_tbl.column_names.index("chunk_id"), "chunk_id", chunk_arr
+            )
+        else:
+            new_tbl = up_tbl.append_column("chunk_id", chunk_arr)
+        parts = [up_tbl.column(id_col)] + ([] if del_ids is None else [del_ids])
+        all_ids = pa.chunked_array(
+            [a for p in parts for a in pa.chunked_array(p).cast(pa.int64()).chunks],
+            pa.int64(),
+        )
+        ids = id_array(all_ids).tolist()
+        if all_ids.null_count:
+            ids.append(None)
         return _apply_way_rewrite(
             spark,
             table_path,
-            aff_df,
-            new_rows,
+            None,
+            None,
             group,
             key=id_col,
             stat="affected_entities",
-            old_chunks=chunks,
+            old_chunks={i >> id_shift for i in ids if i is not None},
             n_aff=len(ids),
             aff_keys=ids,
             new_tbl=new_tbl,
         )
+    if upserts is None:
+        upserts = spark.createDataFrame([], t.spark_schema()).drop("chunk_id")
+    elif isinstance(upserts, pa.Table):
+        upserts = bounded.arrow_frame(spark, upserts)
+    if deleted_ids is not None and not isinstance(deleted_ids, DataFrame):
+        deleted_ids = id_frame(spark, id_array(deleted_ids), id_col)
+    new_rows = with_id_chunk(upserts, id_col, id_shift)
     aff = upserts.select(F.col(id_col))
     if deleted_ids is not None:
         aff = aff.unionAll(
@@ -218,38 +246,44 @@ def upsert_entities(
     )
 
 
-def _collect_upserts_arrow(spark, upserts, deleted_ids, id_col, id_shift):
-    """(aff_df, new_tbl, ids, chunks) when the diff fits under the collect
-    cap, else None. new_tbl is the upserts WITH their chunk_id column —
-    the exact rows with_id_chunk produces — computed locally from the one
-    Arrow collect."""
-    import pyarrow as pa
+_DELETED = "_deleted"
 
+
+def _collect_diff(upserts, deleted_ids, id_col):
+    """(upsert rows as Arrow or None, deleted ids as an Arrow array or
+    None) when the diff holds at most bounded.DIFF_ID_COLLECT_CAP rows,
+    else None. DataFrame inputs are collected in one query: the deleted
+    ids ride beside the upserts under a boolean flag column."""
     cap = bounded.DIFF_ID_COLLECT_CAP
-    up_tbl = bounded.bounded_arrow(upserts, cap)
-    if up_tbl is None:
-        return None
-    del_vals: list = []
-    if deleted_ids is not None:
-        del_rows = deleted_ids.limit(cap + 1).collect()
-        if len(del_rows) > cap:
-            return None
-        del_vals = [r[0] for r in del_rows]
-    idvals = up_tbl.column(id_col).to_pylist()
-    chunk_arr = pa.array(
-        [None if v is None else int(v) >> id_shift for v in idvals], pa.int64()
-    )
-    if "chunk_id" in up_tbl.column_names:
-        new_tbl = up_tbl.set_column(
-            up_tbl.column_names.index("chunk_id"), "chunk_id", chunk_arr
+    up_df = upserts if isinstance(upserts, DataFrame) else None
+    del_df = deleted_ids if isinstance(deleted_ids, DataFrame) else None
+    if up_df is not None and del_df is not None:
+        id_type = up_df.schema[id_col].dataType
+        flagged = up_df.withColumn(_DELETED, F.lit(False)).unionByName(
+            del_df.select(
+                F.col(del_df.columns[0]).cast(id_type).alias(id_col),
+                F.lit(True).alias(_DELETED),
+            ),
+            allowMissingColumns=True,
         )
-    else:
-        new_tbl = up_tbl.append_column("chunk_id", chunk_arr)
-    ids = sorted({v for v in idvals if v is not None} | {v for v in del_vals if v is not None})
-    if any(v is None for v in idvals) or any(v is None for v in del_vals):
-        ids.append(None)
-    chunks = {int(i) >> id_shift for i in ids if i is not None}
-    aff_df = spark.createDataFrame(
-        [(i,) for i in ids], upserts.select(F.col(id_col)).schema
+        tbl = bounded.bounded_arrow(flagged, cap)
+        if tbl is None:
+            return None
+        deleted = tbl.column(_DELETED)
+        upserts = tbl.filter(pc.invert(deleted)).drop_columns([_DELETED])
+        deleted_ids = tbl.filter(deleted).column(id_col)
+    elif up_df is not None:
+        upserts = bounded.bounded_arrow(up_df, cap)
+        if upserts is None:
+            return None
+    elif del_df is not None:
+        tbl = bounded.bounded_arrow(del_df.select(del_df.columns[0]), cap)
+        if tbl is None:
+            return None
+        deleted_ids = tbl.column(0)
+    if deleted_ids is not None and not isinstance(deleted_ids, (pa.Array, pa.ChunkedArray)):
+        deleted_ids = pa.array(deleted_ids, pa.int64())
+    n = (0 if upserts is None else upserts.num_rows) + (
+        0 if deleted_ids is None else len(deleted_ids)
     )
-    return aff_df, new_tbl, ids, chunks
+    return (upserts, deleted_ids) if n <= cap else None

@@ -158,18 +158,11 @@ def render_read(
     ranges = zcurve.bbox_cover_ranges(gx0, gy0, gx1, gy1, zoom, max_level=base_level)
     t = IcepickTable(table_path)
     paths = t.data_paths_ranges(ranges)
+    # viewport miss: schema comes from MANIFEST lineage — the plan is a
+    # LocalTableScan, zero parquet files opened (r4 verdict ask #8)
+    df = t.read(spark, paths)
     if not paths:
-        # viewport miss: schema comes from MANIFEST lineage — the plan is a
-        # LocalTableScan, zero parquet files opened (r4 verdict ask #8)
-        schema = t.spark_schema()
-        if schema is not None:
-            return spark.createDataFrame([], schema)
-        # pre-schema-stamp table: fall back to the first file's footer
-        all_paths = t.data_paths()
-        if not all_paths:
-            raise FileNotFoundError(f"empty table at {table_path}")
-        return spark.read.parquet(all_paths[0]).limit(0)
-    df = spark.read.parquet(*paths)
+        return df
     if 0 < len(ranges) <= max_chunk_filter_ranges:
         cond = None
         for lo, hi in ranges:
@@ -183,12 +176,11 @@ def render_read(
 
 def read_chunk_table(spark, table_path: str, chunk_min: int | None = None, chunk_max: int | None = None) -> DataFrame:
     """Manifest-pruned read: only files overlapping [chunk_min, chunk_max]
-    reach Spark; parquet row-group pruning then applies within files."""
+    reach Spark; parquet row-group pruning then applies within files. A
+    range no file overlaps reads as an empty frame of the table schema,
+    as render_read's viewport miss does."""
     t = IcepickTable(table_path)
-    paths = t.data_paths(chunk_min, chunk_max)
-    if not paths:
-        raise FileNotFoundError(f"no data files for range in {table_path}")
-    df = spark.read.parquet(*paths)
+    df = t.read(spark, t.data_paths(chunk_min, chunk_max))
     if chunk_min is not None:
         df = df.filter(F.col("chunk_id") >= chunk_min)
     if chunk_max is not None:

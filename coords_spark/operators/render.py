@@ -578,7 +578,7 @@ def build_pyramid_table(
             _overzoom_level_local(t, child_paths, z, tile_px, fmt, level_partitions)
             continue
         children = (
-            spark.read.parquet(*child_paths)
+            t.read(spark, child_paths)
             .filter(F.col("zoom") == z + 1)
             .select("tile_x", "tile_y", "payload")
         )
@@ -748,7 +748,7 @@ def refresh_pyramid_table(
                 sorted(by_z[z]), "tile_x long, tile_y long"
             )
             keep = (
-                spark.read.parquet(*[_os.path.join(t.path, e["path"]) for e in aff])
+                t.read(spark, [_os.path.join(t.path, e["path"]) for e in aff])
                 .join(F.broadcast(tiles_df), ["tile_x", "tile_y"], "left_anti")
                 .select(*cols)
             )
@@ -810,7 +810,7 @@ def refresh_pyramid_table(
             if upper:
                 child_df = spark.createDataFrame(child_set, "tile_x long, tile_y long")
                 children = (
-                    spark.read.parquet(*[_os.path.join(t.path, e["path"]) for e in upper])
+                    t.read(spark, [_os.path.join(t.path, e["path"]) for e in upper])
                     .join(F.broadcast(child_df), ["tile_x", "tile_y"])
                     .select("tile_x", "tile_y", "payload")
                 )
@@ -889,11 +889,8 @@ def render_dirty_tiles(
     lat0, lon0, lat1, lon1 = bbox
     lat0, lat1 = min(lat0, lat1), max(lat0, lat1)
     lon0, lon1 = min(lon0, lon1), max(lon0, lon1)
-    if paths:
-        ways = spark.read.parquet(*paths)
-    else:  # miss path: plan from the manifest schema, open no data file
-        ways = spark.createDataFrame([], t.spark_schema())
-    ways = ways.filter(
+    # miss path: plan from the manifest schema, open no data file
+    ways = t.read(spark, paths).filter(
         F.col("lat").between(lat0, lat1) & F.col("lon").between(lon0, lon1)
     ).select("way_id", "pts")
     out = render_tile_images(
@@ -1156,11 +1153,7 @@ def render_polygon_tiles(
         ranges = zcurve.bbox_cover_ranges(gx0, gy0, gx1, gy1, zoom, max_level=base_level)
         t = IcepickTable(table_path)
         paths = t.data_paths_ranges(ranges)
-        if paths:
-            polys = spark.read.parquet(*paths)
-        else:
-            polys = spark.createDataFrame([], t.spark_schema())
-        polys = polys.filter(
+        polys = t.read(spark, paths).filter(
             F.expr("element_at(outer, 1).lat").between(lat0, lat1)
             & F.expr("element_at(outer, 1).lon").between(lon0, lon1)
         ).select("relation_id", "poly_idx", "outer", "inners")

@@ -28,9 +28,15 @@ batch's upsert.
 
 from __future__ import annotations
 
+import functools
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from coords_spark import bounded
 from coords_spark.operators import entity_store as ES
 
 
@@ -61,15 +67,20 @@ def build_rindex_store(
     return ES.build_entity_store(rows, store_path, id_col=ref_col, id_shift=id_shift)
 
 
-def rindex_lookup(spark, store_path: str, ids_df: DataFrame) -> tuple[DataFrame, int]:
-    """Referencing parent ids for `ids_df` (single ref-id column): pruned
-    read + semi-join + explode. Returns (one-column DataFrame of distinct
-    parent ids named '<ids_col minus s>', n_store_files_read)."""
+def rindex_lookup(spark, store_path: str, ids_df) -> tuple[DataFrame, int]:
+    """Referencing parent ids for `ids_df` (a single ref-id column
+    DataFrame, or a sorted int64 id array on the driver, which prunes the
+    store read with no Spark job): pruned read + semi-join + explode.
+    Returns (one-column DataFrame of distinct parent ids named '<ids_col
+    minus s>', n_store_files_read)."""
     ref_col, _shift = ES.load_contract(store_path)
     rows, n_files = ES.read_entities_for_ids(spark, store_path, ids_df)
     ids_col = [c for c in rows.columns if c != ref_col][0]
     out_col = ids_col[:-1] if ids_col.endswith("s") else f"{ids_col}_id"
-    ids = ids_df.select(F.col(ids_df.columns[0]).alias(ref_col)).distinct()
+    if isinstance(ids_df, DataFrame):
+        ids = ids_df.select(F.col(ids_df.columns[0]).alias(ref_col)).distinct()
+    else:
+        ids = ES.id_frame(spark, ids_df, ref_col)
     parents = (
         rows.join(F.broadcast(ids), ref_col)
         .select(F.explode(ids_col).alias(out_col))
@@ -78,12 +89,21 @@ def rindex_lookup(spark, store_path: str, ids_df: DataFrame) -> tuple[DataFrame,
     return parents, n_files
 
 
+def _on_driver(x, cap: int):
+    """`x` (a DataFrame, an Arrow table or array, or None) on the driver:
+    a DataFrame is collected once, None when it holds more than `cap`
+    rows."""
+    if isinstance(x, DataFrame):
+        return bounded.bounded_arrow(x, cap)
+    return x
+
+
 def upsert_rindex(
     spark,
     store_path: str,
-    old_parent_refs: DataFrame,
-    new_parent_refs: DataFrame,
-    deleted_parent_ids: DataFrame | None = None,
+    old_parent_refs,
+    new_parent_refs,
+    deleted_parent_ids=None,
     group: str = "rindex",
 ) -> dict:
     """Apply one diff's parent changes to the index. `old_parent_refs` are
@@ -97,35 +117,64 @@ def upsert_rindex(
     — one pruned store read + diff-bounded joins, then a bounded-file
     entity-store upsert. Refs whose rebuilt list is empty are deleted.
 
+    Each input is a DataFrame or already on the driver (the refs as Arrow
+    tables, the deleted ids as an int64 array). Up to
+    bounded.DIFF_ID_COLLECT_CAP rows each, DataFrame inputs are collected
+    once and the changed-parent and affected-ref sets are computed on the
+    driver, so the store read prunes with no Spark job; past the cap both
+    sets are checkpointed DataFrames.
+
     A replayed batch may see post-diff rows as `old_parent_refs` (the
     parent store already committed); the rebuilt lists then miss refs the
     parent DROPPED this batch, leaving stale entries — supersets, safe by
     the module invariant, healed the next time those refs are touched."""
-    changed = (
-        old_parent_refs.select("id")
-        .unionAll(new_parent_refs.select("id"))
-    )
-    if deleted_parent_ids is not None:
-        changed = changed.unionAll(
-            deleted_parent_ids.select(
-                F.col(deleted_parent_ids.columns[0]).alias("id")
-            )
-        )
-    changed = changed.distinct().localCheckpoint()
     ref_col, _shift = ES.load_contract(store_path)
-
-    aff_refs = (
-        old_parent_refs.select(F.explode("refs").alias(ref_col))
-        .unionAll(new_parent_refs.select(F.explode("refs").alias(ref_col)))
-        .distinct()
-        .localCheckpoint()
-    )
-    cur, n_files = ES.read_entities_for_ids(spark, store_path, aff_refs)
+    cap = bounded.DIFF_ID_COLLECT_CAP
+    old = _on_driver(old_parent_refs, cap)
+    new = _on_driver(new_parent_refs, cap)
+    dele = _on_driver(deleted_parent_ids, cap)
+    if old is not None and new is not None and (dele is not None or deleted_parent_ids is None):
+        if isinstance(dele, pa.Table):
+            dele = dele.column(0)
+        changed_ids = functools.reduce(
+            np.union1d,
+            [ES.id_array(old.column("id")), ES.id_array(new.column("id"))]
+            + ([] if dele is None else [ES.id_array(dele)]),
+        )
+        aff_ids = np.union1d(
+            *(ES.id_array(pc.list_flatten(t.column("refs"))) for t in (old, new))
+        )
+        changed = ES.id_frame(spark, changed_ids, "_pid")
+        aff_refs = ES.id_frame(spark, aff_ids, ref_col)
+        new_parent_refs = bounded.arrow_frame(spark, new.select(["id", "refs"]))
+    else:
+        old_df, new_parent_refs = (
+            x if isinstance(x, DataFrame) else bounded.arrow_frame(spark, x)
+            for x in (old_parent_refs, new_parent_refs)
+        )
+        changed = old_df.select("id").unionAll(new_parent_refs.select("id"))
+        if deleted_parent_ids is not None:
+            if not isinstance(deleted_parent_ids, DataFrame):
+                deleted_parent_ids = ES.id_frame(spark, ES.id_array(deleted_parent_ids))
+            changed = changed.unionAll(
+                deleted_parent_ids.select(
+                    F.col(deleted_parent_ids.columns[0]).alias("id")
+                )
+            )
+        changed = changed.distinct().withColumnRenamed("id", "_pid").localCheckpoint()
+        aff_refs = (
+            old_df.select(F.explode("refs").alias(ref_col))
+            .unionAll(new_parent_refs.select(F.explode("refs").alias(ref_col)))
+            .distinct()
+            .localCheckpoint()
+        )
+        aff_ids = aff_refs
+    cur, n_files = ES.read_entities_for_ids(spark, store_path, aff_ids)
     ids_col = [c for c in cur.columns if c != ref_col][0]
     keep = (
         cur.join(F.broadcast(aff_refs), ref_col)
         .select(ref_col, F.explode(ids_col).alias("_pid"))
-        .join(F.broadcast(changed.withColumnRenamed("id", "_pid")), "_pid", "left_anti")
+        .join(F.broadcast(changed), "_pid", "left_anti")
     )
     new_pairs = new_parent_refs.select(
         F.col("id").alias("_pid"), F.explode("refs").alias(ref_col)

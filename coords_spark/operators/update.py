@@ -23,6 +23,8 @@ import os
 import tempfile
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -160,7 +162,7 @@ def build_locator(spark, table_path: str, key: str, id_shift: int | None = None)
     paths = table.data_paths()
     if paths:
         pairs = (
-            spark.read.parquet(*paths)
+            table.read(spark, paths)
             .select(key, "chunk_id")
             .groupBy(key)
             .agg(F.array_sort(F.collect_set("chunk_id")).alias("chunk_ids"))
@@ -176,14 +178,16 @@ def build_locator(spark, table_path: str, key: str, id_shift: int | None = None)
 
 
 def _locator_old_lists(
-    spark, table_path: str, aff: DataFrame, aff_keys: list, key: str
+    spark, table_path: str, aff: DataFrame | None, aff_keys: list, key: str
 ) -> tuple[dict, int]:
     """(key -> old chunk_ids, files_read) for the diff's keys from the
     `_locator` sidecar. The pruned file set is O(diff keys / 2^shift);
     when those files are also small (the streaming steady state) they are
-    read DRIVER-SIDE with pyarrow — zero Spark jobs — else through the
-    pruned Spark read + semi-join collect (post-compact locators can be
-    one large file; scanning that belongs on executors)."""
+    read DRIVER-SIDE with pyarrow — zero Spark jobs, and only the rows
+    holding an affected key reach Python — else through the pruned Spark
+    read + semi-join collect (post-compact locators can be one large
+    file; scanning that belongs on executors). `aff` None means the keys
+    exist only as `aff_keys`."""
     from coords_spark.operators import entity_store as ES
 
     loc_path = _locator_path(table_path)
@@ -198,17 +202,19 @@ def _locator_old_lists(
     if sum(os.path.getsize(p) for p in paths) <= bounded.SMALL_REWRITE_BYTES:
         import pyarrow.parquet as _pq
 
-        affset = set(aff_keys)
+        keyset = pa.array([k for k in aff_keys if k is not None], pa.int64())
         old_map: dict = {}
         for p in paths:
             lt = _pq.read_table(p, columns=[key, "chunk_ids"])
+            lt = lt.filter(pc.is_in(lt.column(key), value_set=keyset))
             for kk, cl in zip(
                 lt.column(key).to_pylist(), lt.column("chunk_ids").to_pylist()
             ):
-                if kk in affset:
-                    old_map[kk] = list(cl)
+                old_map[kk] = list(cl)
         return old_map, len(paths)
-    rows = spark.read.parquet(*paths).join(F.broadcast(aff), key, "semi").collect()
+    if aff is None:
+        aff = ES.id_frame(spark, aff_keys, key)
+    rows = loc_t.read(spark, paths).join(F.broadcast(aff), key, "semi").collect()
     return {r[0]: list(r[1]) for r in rows}, len(paths)
 
 
@@ -220,8 +226,6 @@ def _stage_small_rewrite_arrow(
     concat the already-collected new rows, write ONE sorted parquet —
     the same rows as the range write, without the fixed cost of a Spark
     write job per streaming batch."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
     import pyarrow.parquet as _pq
 
     parts = [new_tbl]
@@ -248,8 +252,8 @@ def _stage_small_rewrite_arrow(
 def _apply_way_rewrite(
     spark,
     table_path: str,
-    aff: DataFrame,
-    new_rows: DataFrame,
+    aff: DataFrame | None,
+    new_rows: DataFrame | None,
     group: str,
     key: str = "way_id",
     stat: str = "affected_ways",
@@ -271,6 +275,10 @@ def _apply_way_rewrite(
     - the table's `_locator` sidecar (key -> chunk_ids entity store): an
       id-range-pruned lookup reading O(diff keys / 2^shift) locator files.
     A table with neither raises ValueError.
+
+    A caller that holds the diff on the driver passes `aff_keys` and
+    `new_tbl` (with `n_aff`) and may leave `aff`/`new_rows` None: a
+    DataFrame of either is then built only if the range write runs.
 
     Locator crash ordering: the lookup's result is committed back as the
     UNION of old and new chunk ids BEFORE the table commit, and trimmed to
@@ -329,9 +337,7 @@ def _apply_way_rewrite(
             for k in sorted(set(old_map) | set(new_map))
         ]
         ES.upsert_entities(
-            spark,
-            _locator_path(table_path),
-            spark.createDataFrame(union_rows, f"{key} bigint, chunk_ids array<bigint>"),
+            spark, _locator_path(table_path), _locator_rows(key, union_rows),
             group=f"{group}-pre",
         )
     else:
@@ -373,9 +379,15 @@ def _apply_way_rewrite(
             aff_keys = [r[0] for r in aff.collect()]
         _stage_small_rewrite_arrow(staging, replace_paths, aff_keys, new_tbl, key)
     else:
+        from coords_spark.operators import entity_store as ES
+
+        if aff is None:
+            aff = ES.id_frame(spark, aff_keys, key)
+        if new_rows is None:
+            new_rows = bounded.arrow_frame(spark, new_tbl)
         if replace_paths:
             (
-                spark.read.parquet(*replace_paths)
+                table.read(spark, replace_paths)
                 .join(aff, key, "left_anti")
                 .repartitionByRange("chunk_id")
                 .sortWithinPartitions("chunk_id")
@@ -395,13 +407,10 @@ def _apply_way_rewrite(
         # trim to exactly the new chunk ids (deleted keys drop out); a
         # crash before this point leaves the pre-committed superset
         new_lists = [(k, sorted(v)) for k, v in sorted(new_map.items())]
-        gone = [(k,) for k in aff_keys if k not in new_map]
+        gone = pa.array([k for k in aff_keys if k not in new_map], pa.int64())
         ES.upsert_entities(
-            spark,
-            _locator_path(table_path),
-            spark.createDataFrame(new_lists, f"{key} bigint, chunk_ids array<bigint>"),
-            deleted_ids=spark.createDataFrame(gone, f"{key} bigint"),
-            group=f"{group}-post",
+            spark, _locator_path(table_path), _locator_rows(key, new_lists),
+            deleted_ids=gone, group=f"{group}-post",
         )
     return {
         stat: n_aff,
@@ -412,6 +421,28 @@ def _apply_way_rewrite(
         "locator_files_read": loc_files_read if locator else None,
         "entries": entries,
     }
+
+
+def _locator_rows(key: str, rows: list[tuple]) -> pa.Table:
+    """(key, sorted chunk ids) pairs as locator-store rows."""
+    return pa.table(
+        {
+            key: pa.array([k for k, _ in rows], pa.int64()),
+            "chunk_ids": pa.array([c for _, c in rows], pa.list_(pa.int64())),
+        }
+    )
+
+
+def _collect_aff(aff: DataFrame) -> tuple[DataFrame | None, int | None, list | None]:
+    """(aff, n_aff, aff_keys) for _apply_way_rewrite: up to
+    bounded.DIFF_ID_COLLECT_CAP keys are collected once, and the rewrite
+    plans from the list; past the cap `aff` is checkpointed and stays a
+    DataFrame."""
+    tbl = bounded.bounded_arrow(aff, bounded.DIFF_ID_COLLECT_CAP)
+    if tbl is None:
+        return aff.localCheckpoint(), None, None
+    keys = tbl.column(0).to_pylist()
+    return None, len(keys), keys
 
 
 def apply_node_diff(
@@ -474,9 +505,11 @@ def apply_way_diff(
         aff = aff.unionAll(
             deleted_way_ids.select(F.col(deleted_way_ids.columns[0]).alias("way_id"))
         ).distinct()
-    aff = aff.localCheckpoint()
+    aff, n_aff, aff_keys = _collect_aff(aff)
     new_rows = _way_rows(ways_diff, nodes, split, base_level)
-    return _apply_way_rewrite(spark, table_path, aff, new_rows, group)
+    return _apply_way_rewrite(
+        spark, table_path, aff, new_rows, group, n_aff=n_aff, aff_keys=aff_keys
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -578,7 +611,7 @@ def apply_relation_diff(
                 F.col(deleted_relation_ids.columns[0]).alias("relation_id")
             )
         ).distinct()
-    aff = aff.localCheckpoint()
+    aff, n_aff, aff_keys = _collect_aff(aff)
     new_rows = _relation_rows(relations_diff, resolved_ways, split, base_level)
     return _apply_way_rewrite(
         spark,
@@ -588,4 +621,6 @@ def apply_relation_diff(
         group,
         key="relation_id",
         stat="affected_relations",
+        n_aff=n_aff,
+        aff_keys=aff_keys,
     )

@@ -219,13 +219,36 @@ class IcepickTable:
         return pa.ipc.read_schema(pa.BufferReader(base64.b64decode(b64)))
 
     def spark_schema(self, version: int | None = None):
-        """Manifest schema as a Spark StructType (None if unstamped)."""
+        """Manifest schema as a Spark StructType (None if unstamped). A
+        tz-less Arrow timestamp maps to TIMESTAMP_NTZ, the type Spark's
+        own footer inference gives the same parquet column."""
         s = self.arrow_schema(version)
         if s is None:
             return None
         from pyspark.sql.pandas.types import from_arrow_schema
 
-        return from_arrow_schema(s)
+        return from_arrow_schema(s, prefer_timestamp_ntz=True)
+
+    def read(self, spark, paths: list[str]):
+        """The one Spark read of this table's data files `paths` (a pruned
+        subset of data_paths). The manifest schema plans the scan, so no
+        footer-inference job runs, and an empty `paths` is an empty frame
+        of that schema that opens no file. A table without a schema stamp
+        (written before stamping) infers from the files instead."""
+        schema = self.spark_schema()
+        if schema is None:
+            if paths:
+                return spark.read.parquet(*paths)
+            all_paths = self.data_paths()
+            if not all_paths:
+                raise ValueError(
+                    f"{self.path} has no data file and no schema stamp: "
+                    "an empty read cannot be planned"
+                )
+            return spark.read.parquet(all_paths[0]).limit(0)
+        if not paths:
+            return spark.createDataFrame([], schema)
+        return spark.read.schema(schema).parquet(*paths)
 
     def commit_staged(
         self,
@@ -375,7 +398,7 @@ class IcepickTable:
             if size <= bounded.SMALL_COMPACT_BYTES:
                 self._pack_arrow(paths, staging, nparts, chunk_col)
             else:
-                df = spark.read.parquet(*paths)
+                df = self.read(spark, paths)
                 if chunk_col in df.columns:
                     df = df.repartitionByRange(nparts, chunk_col).sortWithinPartitions(
                         chunk_col

@@ -32,9 +32,15 @@ icepick compact()/expire_snapshots() (S8) is the matching lifecycle.
 
 from __future__ import annotations
 
+import functools
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from coords_spark import bounded
 from coords_spark.operators import entity_store as ES
 from coords_spark.operators import resolve, update
 from coords_spark.sources.icepick import IcepickTable
@@ -60,10 +66,6 @@ def stream_diffs_from_dir(spark: SparkSession, path: str, max_files: int = 1) ->
         .option("maxFilesPerTrigger", max_files)
         .parquet(path)
     )
-
-
-def _ids(df: DataFrame) -> DataFrame:
-    return df.select("id")
 
 
 def apply_diff_batch(
@@ -113,45 +115,101 @@ def apply_diff_batch(
         .localCheckpoint()
     )
     stats: dict = {}
+    cap = bounded.DIFF_ID_COLLECT_CAP
+    # ONE collect of the consolidated batch picks the path for every
+    # diff-sized set below: under the cap the id sets are sorted arrays and
+    # the upserts Arrow tables on the driver (pruned reads plan with no
+    # job, each derived set is collected once); past it every set stays a
+    # checkpointed DataFrame
+    bt = bounded.bounded_arrow(b, cap)
 
-    node_up = b.filter((F.col("kind") == KIND_NODE) & (F.col("action") == "upsert")).select(
-        "id", "version", "lat", "lon", "tags"
-    )
-    node_del = _ids(b.filter((F.col("kind") == KIND_NODE) & (F.col("action") == "delete")))
-    way_up = b.filter((F.col("kind") == KIND_WAY) & (F.col("action") == "upsert")).select(
-        "id", "version", "refs", "tags"
-    )
-    way_del = _ids(b.filter((F.col("kind") == KIND_WAY) & (F.col("action") == "delete")))
-    rel_up = b.filter((F.col("kind") == KIND_REL) & (F.col("action") == "upsert")).select(
-        "id", "version", "members", "tags"
-    )
-    rel_del = _ids(b.filter((F.col("kind") == KIND_REL) & (F.col("action") == "delete")))
+    def _part(kind: int, action: str, cols: list[str]):
+        if bt is None:
+            df = b.filter((F.col("kind") == kind) & (F.col("action") == action))
+            return df.select(*cols)
+        mask = pc.and_(pc.equal(bt.column("kind"), kind), pc.equal(bt.column("action"), action))
+        t = bt.filter(mask).select(cols)
+        return ES.id_array(t.column("id")) if cols == ["id"] else t
+
+    def _frame(x) -> DataFrame:
+        """A set as a DataFrame: a driver-side table or id array becomes
+        a local relation."""
+        if isinstance(x, DataFrame):
+            return x
+        if isinstance(x, pa.Table):
+            return bounded.arrow_frame(spark, x)
+        return ES.id_frame(spark, x)
+
+    def _union_ids(*sets, hold: bool = False):
+        """Distinct ids of several sets (id sets, or row sets whose first
+        column is the id): a sorted array when every set is on the driver,
+        else a DataFrame with column 'id' (checkpointed with `hold`)."""
+        if not any(isinstance(x, DataFrame) for x in sets):
+            return functools.reduce(
+                np.union1d,
+                [ES.id_array(x.column("id")) if isinstance(x, pa.Table) else x for x in sets],
+            )
+        frames = [f.select(F.col(f.columns[0]).alias("id")) for f in map(_frame, sets)]
+        df = functools.reduce(DataFrame.unionAll, frames).distinct()
+        return df.localCheckpoint() if hold else df
+
+    def _collected(df: DataFrame):
+        """`df` (diff-sized) collected once as Arrow, or None on the
+        distributed path or past the cap."""
+        return None if bt is None else bounded.bounded_arrow(df, cap)
+
+    def _hold(df: DataFrame):
+        """`df` materialized once: an Arrow table under the cap, else a
+        checkpointed DataFrame."""
+        t = _collected(df)
+        return df.localCheckpoint() if t is None else t
+
+    def _id_set(df: DataFrame):
+        """Distinct ids of one-column `df`: a sorted array under the cap,
+        else a checkpointed DataFrame with column 'id'."""
+        df = df.select(F.col(df.columns[0]).alias("id")).distinct()
+        t = _collected(df)
+        return df.localCheckpoint() if t is None else ES.id_array(t.column(0))
+
+    def _refs_ids(*tables):
+        """Distinct ids in the `refs` lists of driver-side tables."""
+        return functools.reduce(
+            np.union1d, [ES.id_array(pc.list_flatten(t.column("refs"))) for t in tables]
+        )
+
+    node_up = _part(KIND_NODE, "upsert", ["id", "version", "lat", "lon", "tags"])
+    node_del = _part(KIND_NODE, "delete", ["id"])
+    way_up = _part(KIND_WAY, "upsert", ["id", "version", "refs", "tags"])
+    way_del = _part(KIND_WAY, "delete", ["id"])
+    rel_up = _part(KIND_REL, "upsert", ["id", "version", "members", "tags"])
+    rel_del = _part(KIND_REL, "delete", ["id"])
+    # the DataFrame views of the upsert sets (one local relation each on
+    # the driver path)
+    node_up_df, way_up_df, rel_up_df = (_frame(x) for x in (node_up, way_up, rel_up))
 
     files_read: dict = {}
     stats["files_read"] = files_read
-    node_ch = node_up.select("id").unionAll(node_del).distinct().localCheckpoint()
-    way_ch = way_up.select("id").unionAll(way_del).distinct().localCheckpoint()
+    node_ch = _union_ids(node_up, node_del, hold=True)
+    way_ch = _union_ids(way_up, way_del, hold=True)
 
     # PRE-diff rows of the diff's own ways/relations, captured before any
     # store moves (pruned reads — diff-bounded): the reverse-index upserts
     # need the OLD refs, and the dirty log needs pre-diff geometry.
-    def _pruned_rows(store: str, ids: DataFrame, tag: str) -> DataFrame:
+    def _pruned_rows(store: str, ids, tag: str) -> DataFrame:
         rows, n = ES.read_entities_for_ids(spark, store, ids)
         files_read[tag] = n
-        return rows.join(F.broadcast(ids), "id", "semi")
+        return rows.join(F.broadcast(_frame(ids)), "id", "semi")
 
     # way_old's only consumer is the reverse-index upsert: the legacy
     # (no-rindex) path must not pay a per-batch pruned store read +
     # checkpoint for it (ADVICE r7)
     way_old = (
-        _pruned_rows(ways_store, way_ch, "way_old")
-        .select("id", "refs")
-        .localCheckpoint()
+        _hold(_pruned_rows(ways_store, way_ch, "way_old").select("id", "refs"))
         if rindex_store is not None
         else None
     )
 
-    def _ways_hit_pre(changed_nodes: DataFrame) -> DataFrame:
+    def _ways_hit_pre(changed_nodes) -> DataFrame:
         """(way_id) referencing a changed node in the PRE state: a pruned
         reverse-index lookup when the store exists, else a full explode of
         the ways store (legacy, table-proportional)."""
@@ -160,11 +218,11 @@ def apply_diff_batch(
 
             hit, n = RI.rindex_lookup(spark, rindex_store, changed_nodes)
             files_read["rindex_lookup"] = n
-            return hit.withColumnRenamed(hit.columns[0], "way_id")
+            return hit
         ways0 = ES.read_entity_store(spark, ways_store)
         return (
             ways0.select(F.col("id").alias("way_id"), F.explode("refs").alias("nid"))
-            .join(F.broadcast(node_ch.withColumnRenamed("id", "nid")), "nid")
+            .join(F.broadcast(_frame(changed_nodes).withColumnRenamed("id", "nid")), "nid")
             .select("way_id")
         )
 
@@ -172,12 +230,7 @@ def apply_diff_batch(
     # node (pre-state hit; an unchanged way keeps its refs, so post-state
     # hits add nothing new) ∪ the way diff itself
     hit_pre = _ways_hit_pre(node_ch)
-    aff_way_ids = (
-        hit_pre.unionAll(way_ch.withColumnRenamed("id", "way_id"))
-        .distinct()
-        .localCheckpoint()
-    )
-    aff_ids = aff_way_ids.withColumnRenamed("way_id", "id")
+    aff_ids = _id_set(hit_pre.unionAll(_frame(way_ch).select("id")))
 
     # -- 0. tile-expiry log (MUST commit before the stores: the dirty set
     # needs the PRE-diff geometry, so a replay after a store commit could
@@ -194,28 +247,30 @@ def apply_diff_batch(
         if group in dt.committed_groups():
             stats["dirty_tiles"] = "replayed"
         else:
-            ways0_aff = _pruned_rows(ways_store, aff_ids, "dirty_ways").select(
-                "id", "refs"
-            ).localCheckpoint()
+            ways0_aff = _hold(
+                _pruned_rows(ways_store, aff_ids, "dirty_ways").select("id", "refs")
+            )
+            way_up_aff = way_up_df.join(F.broadcast(_frame(aff_ids)), "id", "semi")
             # node files that can hold any ref of the affected ways' OLD
             # or NEW geometry (the union bounds the resolve either side)
-            ref_ids = (
-                ways0_aff.select(F.explode("refs").alias("id"))
-                .unionAll(
-                    way_up.join(F.broadcast(aff_ids), "id", "semi").select(
-                        F.explode("refs").alias("id")
-                    )
+            if isinstance(ways0_aff, pa.Table) and isinstance(way_up, pa.Table):
+                # every id of the way diff is in aff_ids: way_up_aff is way_up
+                ref_ids = _refs_ids(ways0_aff, way_up)
+            else:
+                ref_ids = (
+                    _frame(ways0_aff).select(F.explode("refs").alias("id"))
+                    .unionAll(way_up_aff.select(F.explode("refs").alias("id")))
+                    .distinct()
                 )
-                .distinct()
-            )
+            ways0_aff = _frame(ways0_aff)
             nodes0_aff, n = ES.read_entities_for_ids(spark, nodes_store, ref_ids)
             files_read["dirty_nodes"] = n
             nodes0_aff = nodes0_aff.select("id", "lat", "lon")
-            post_n = nodes0_aff.join(node_ch, "id", "anti").unionByName(
-                node_up.select("id", "lat", "lon")
+            post_n = nodes0_aff.join(_frame(node_ch), "id", "anti").unionByName(
+                node_up_df.select("id", "lat", "lon")
             )
-            post_w = ways0_aff.join(way_ch, "id", "anti").unionByName(
-                way_up.join(F.broadcast(aff_ids), "id", "semi").select("id", "refs")
+            post_w = ways0_aff.join(_frame(way_ch), "id", "anti").unionByName(
+                way_up_aff.select("id", "refs")
             )
             old_geom = resolve.resolve_ways(ways0_aff, nodes0_aff)
             new_geom = resolve.resolve_ways(post_w, post_n)
@@ -234,10 +289,8 @@ def apply_diff_batch(
                     dirty_polygon_tiles as _dirty_polys,
                 )
 
-                rel_ch = rel_up.select("id").unionAll(rel_del).distinct()
-                changed_ways_all = aff_way_ids.unionAll(
-                    way_del.withColumnRenamed("id", "way_id")
-                ).distinct()
+                rel_ch = _frame(_union_ids(rel_up, rel_del))
+                changed_ways_all = _union_ids(aff_ids, way_del)
                 if rel_rindex_store is not None:
                     from coords_spark.operators import rindex as RI
 
@@ -245,18 +298,21 @@ def apply_diff_batch(
                         spark, rel_rindex_store, changed_ways_all
                     )
                     files_read["dirty_rel_rindex"] = n
-                    rel_hit = rel_hit.withColumnRenamed(rel_hit.columns[0], "id")
                 else:
                     rels0_all = ES.read_entity_store(spark, rels_store)
                     rel_hit = update.affected_relation_ids(
-                        rels0_all, changed_ways_all
-                    ).withColumnRenamed("relation_id", "id")
-                aff_rel = rel_hit.unionAll(rel_ch).distinct().localCheckpoint()
-                rels0_aff = _pruned_rows(rels_store, aff_rel, "dirty_rels").select(
-                    "id", "members"
-                ).localCheckpoint()
+                        rels0_all, _frame(changed_ways_all)
+                    )
+                aff_rel = _id_set(rel_hit.unionAll(rel_ch))
+                rels0_aff = _frame(
+                    _hold(
+                        _pruned_rows(rels_store, aff_rel, "dirty_rels").select(
+                            "id", "members"
+                        )
+                    )
+                )
                 post_r = rels0_aff.join(rel_ch, "id", "anti").unionByName(
-                    rel_up.join(F.broadcast(aff_rel), "id", "semi").select(
+                    rel_up_df.join(F.broadcast(_frame(aff_rel)), "id", "semi").select(
                         "id", "members"
                     )
                 )
@@ -267,13 +323,15 @@ def apply_diff_batch(
                 )
                 mways0, n = ES.read_entities_for_ids(spark, ways_store, mem_ids)
                 files_read["dirty_member_ways"] = n
-                mways0 = mways0.join(F.broadcast(mem_ids), "id", "semi").select(
-                    "id", "refs"
-                ).localCheckpoint()
+                mways0 = _frame(
+                    _hold(
+                        mways0.join(F.broadcast(mem_ids), "id", "semi").select("id", "refs")
+                    )
+                )
                 mref_ids = (
                     mways0.select(F.explode("refs").alias("id"))
                     .unionAll(
-                        way_up.join(F.broadcast(mem_ids), "id", "semi").select(
+                        way_up_df.join(F.broadcast(mem_ids), "id", "semi").select(
                             F.explode("refs").alias("id")
                         )
                     )
@@ -282,11 +340,11 @@ def apply_diff_batch(
                 mnodes0, n = ES.read_entities_for_ids(spark, nodes_store, mref_ids)
                 files_read["dirty_member_nodes"] = n
                 mnodes0 = mnodes0.select("id", "lat", "lon")
-                mpost_n = mnodes0.join(node_ch, "id", "anti").unionByName(
-                    node_up.select("id", "lat", "lon")
+                mpost_n = mnodes0.join(_frame(node_ch), "id", "anti").unionByName(
+                    node_up_df.select("id", "lat", "lon")
                 )
-                mpost_w = mways0.join(way_ch, "id", "anti").unionByName(
-                    way_up.join(F.broadcast(mem_ids), "id", "semi").select(
+                mpost_w = mways0.join(_frame(way_ch), "id", "anti").unionByName(
+                    way_up_df.join(F.broadcast(mem_ids), "id", "semi").select(
                         "id", "refs"
                     )
                 )
@@ -317,11 +375,11 @@ def apply_diff_batch(
     # each an arithmetic-chunk bounded rewrite) ---------------------------
     rel_old = None
     if rel_rindex_store is not None:
-        rel_ch = rel_up.select("id").unionAll(rel_del).distinct()
-        rel_old = (
-            _pruned_rows(rels_store, rel_ch, "rel_old")
-            .select("id", _member_way_refs().alias("refs"))
-            .localCheckpoint()
+        rel_ch = _union_ids(rel_up, rel_del)
+        rel_old = _hold(
+            _pruned_rows(rels_store, rel_ch, "rel_old").select(
+                "id", _member_way_refs().alias("refs")
+            )
         )
     for path, up, dele, name in (
         (nodes_store, node_up, node_del, "nodes"),
@@ -349,7 +407,7 @@ def apply_diff_batch(
                 spark,
                 rindex_store,
                 way_old,
-                way_up.select("id", "refs"),
+                way_up.select(["id", "refs"]),
                 way_del,
                 group=group,
             )
@@ -363,7 +421,7 @@ def apply_diff_batch(
                 spark,
                 rel_rindex_store,
                 rel_old,
-                rel_up.select("id", _member_way_refs().alias("refs")),
+                rel_up_df.select("id", _member_way_refs().alias("refs")),
                 rel_del,
                 group=group,
             )
@@ -376,7 +434,11 @@ def apply_diff_batch(
             stats["way_chunks"] = "replayed"
         else:
             ways_diff = _pruned_rows(ways_store, aff_ids, "way_rows")
-            node_ids = ways_diff.select(F.explode("refs").alias("id")).distinct()
+            ways_t = _collected(ways_diff)
+            if ways_t is None:
+                node_ids = ways_diff.select(F.explode("refs").alias("id")).distinct()
+            else:
+                ways_diff, node_ids = _frame(ways_t), _refs_ids(ways_t)
             nodes_aff, n = ES.read_entities_for_ids(spark, nodes_store, node_ids)
             files_read["way_nodes"] = n
             stats["way_chunks"] = update.apply_way_diff(
@@ -384,36 +446,26 @@ def apply_diff_batch(
                 way_table,
                 nodes_aff,
                 ways_diff,
-                deleted_way_ids=way_del,
+                deleted_way_ids=_frame(way_del),
                 group=group,
             )
 
     # -- 4. derived multipolygon table: relation blast radius --------------
     if rel_table is not None:
-        changed_ways = aff_way_ids.unionAll(
-            way_del.withColumnRenamed("id", "way_id")
-        ).distinct()
+        changed_ways = _union_ids(aff_ids, way_del)
         if rel_rindex_store is not None:
             from coords_spark.operators import rindex as RI
 
             rel_hit, n = RI.rindex_lookup(spark, rel_rindex_store, changed_ways)
             files_read["rel_rindex_lookup"] = n
-            rel_hit = rel_hit.withColumnRenamed(rel_hit.columns[0], "relation_id")
         else:
             rels_all = ES.read_entity_store(spark, rels_store)
-            rel_hit = update.affected_relation_ids(rels_all, changed_ways)
-        aff_rel_ids = (
-            rel_hit.unionAll(rel_up.select(F.col("id").alias("relation_id")))
-            .distinct()
-            .localCheckpoint()
-        )
+            rel_hit = update.affected_relation_ids(rels_all, _frame(changed_ways))
+        aff_rel_ids = _id_set(rel_hit.unionAll(rel_up_df.select("id")))
         if group in IcepickTable(rel_table).committed_groups():
             stats["rel_chunks"] = "replayed"
         else:
-            rels_diff = _pruned_rows(
-                rels_store, aff_rel_ids.withColumnRenamed("relation_id", "id"),
-                "rel_rows",
-            )
+            rels_diff = _pruned_rows(rels_store, aff_rel_ids, "rel_rows")
             # resolve ONLY the member ways of affected relations — the
             # radius-proportional subset, with post-diff node geometry
             member_ways = (
@@ -432,7 +484,7 @@ def apply_diff_batch(
                 rel_table,
                 rels_diff,
                 resolved,
-                deleted_relation_ids=rel_del,
+                deleted_relation_ids=_frame(rel_del),
                 group=group,
             )
     return stats

@@ -94,10 +94,13 @@ def test_write_sorted_empty_table_writes_nothing(tmp_path):
 
 def test_staging_rule_lives_in_bounded():
     """No COORDS_* environment knob anywhere in the package, every Arrow
-    collect goes through bounded.bounded_arrow, and no catch-all handler
-    (`except Exception`, `except BaseException`, bare `except:`) can send
-    a failed driver path down the distributed one."""
+    collect goes through bounded.bounded_arrow, every icepick table read
+    in the operators and the streaming layer goes through
+    IcepickTable.read, and no catch-all handler (`except Exception`,
+    `except BaseException`, bare `except:`) can send a failed driver path
+    down the distributed one."""
     to_arrow = re.compile(r"\.toArrow\(")
+    read_parquet = re.compile(r"read\.parquet\(")
     catch_all = re.compile(r"\bexcept\b\s*(:|[^:#]*\b(Exception|BaseException)\b)")
     offenders = []
     for path in sorted(_PKG.rglob("*.py")):
@@ -107,6 +110,10 @@ def test_staging_rule_lives_in_bounded():
                 offenders.append(f"{rel}:{no}: COORDS_ knob: {line.strip()}")
             if rel != "bounded.py" and to_arrow.search(line):
                 offenders.append(f"{rel}:{no}: toArrow outside bounded.py: {line.strip()}")
+            if rel.startswith(("operators/", "streaming/")) and read_parquet.search(line):
+                offenders.append(
+                    f"{rel}:{no}: read.parquet outside IcepickTable.read: {line.strip()}"
+                )
             if catch_all.search(line):
                 offenders.append(f"{rel}:{no}: catch-all except: {line.strip()}")
     assert not offenders, "\n".join(offenders)

@@ -1,11 +1,14 @@
-"""icepick table-format unit tests (no Spark): atomic commits, crash
-snapshot isolation, pruning, checksum verification."""
+"""icepick table-format tests: atomic commits, crash snapshot isolation,
+pruning and checksum verification (no Spark), plus the Spark read
+primitive IcepickTable.read over every table kind."""
 
 import json
 import os
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
+from pyspark.sql import functions as F
 
 from coords_spark.sources.icepick import IcepickTable
 
@@ -163,3 +166,124 @@ def test_empty_viewport_render_read_plans_zero_file_scans(spark, tmp_path):
     assert miss.schema == full.schema
     plan = miss._jdf.queryExecution().executedPlan().toString()
     assert "FileScan" not in plan and "parquet" not in plan.lower()
+
+
+def test_chunk_range_between_files_reads_empty(spark, tmp_path):
+    """A chunk range that falls between two files' [chunk_min, chunk_max]
+    reads as an empty frame of the table schema, like render_read's
+    viewport miss; it does not raise."""
+    from coords_spark.operators import ingest
+
+    t = IcepickTable.create(str(tmp_path / "t"))
+    t.commit_staged(_stage(tmp_path, "s1", [1, 2]), group="a")
+    t.commit_staged(_stage(tmp_path, "s2", [100, 200]), group="b")
+    assert t.data_paths(10, 50) == []  # precondition: no file overlaps
+    miss = ingest.read_chunk_table(spark, t.path, 10, 50)
+    assert miss.count() == 0
+    assert miss.columns == ["chunk_id", "v"]
+    assert ingest.read_chunk_table(spark, t.path, 2, 100).count() == 2
+
+
+def _field_types(schema):
+    """[(name, type)] of a Spark schema, nullability aside."""
+    return [(f.name, f.dataType.simpleString()) for f in schema.fields]
+
+
+@pytest.fixture(scope="module")
+def table_kinds(spark, tmp_path_factory):
+    """{kind: table path} for every icepick table kind the suite builds,
+    each after a write that mixes Spark-written and pyarrow-written files:
+    the three entity stores, both reverse-index stores, both locators,
+    the way and relation chunk tables and the dirty log after one diff
+    batch; a pyramid level table (Spark base level, pyarrow overzoom);
+    and a pyarrow table with a tz-less timestamp column."""
+    from test_odiff import _batches, _build_world
+
+    from coords_spark.fixtures import gen_nodes, gen_ways
+    from coords_spark.operators import geometry, render, resolve, tiling, update
+    from coords_spark.streaming import update_stream as US
+
+    d = tmp_path_factory.mktemp("kinds")
+    stores, way_table, rel_table, kw = _build_world(spark, d, 4, with_rindex=True)
+    dirty = str(d / "dirty")
+    b1, _ = _batches(spark)
+    US.apply_diff_batch(
+        spark, b1, stores["nodes"], stores["ways"], stores["rels"], way_table, rel_table,
+        group="diff-0", dirty_table=dirty, **kw,
+    )
+    kinds = {f"store_{k}": p for k, p in stores.items()}
+    kinds.update(
+        rindex_nw=kw["rindex_store"], rindex_wr=kw["rel_rindex_store"],
+        way_table=way_table, rel_table=rel_table, dirty=dirty,
+        way_locator=update._locator_path(way_table),
+        rel_locator=update._locator_path(rel_table),
+    )
+
+    nodes = spark.createDataFrame(gen_nodes(2000))
+    ways = spark.createDataFrame(gen_ways(300, 2000))
+    g = geometry.with_geometry_cell(
+        geometry.with_envelope(resolve.resolve_ways(ways, nodes))
+    ).withColumn("nbytes", (F.size("pts") * 8 + 64).cast("long"))
+    chunked = tiling.with_chunk(g, tiling.compute_split_set(g, max_bytes=64 * 1024))
+    tiles = str(d / "tiles")
+    tiling.materialize_chunk_table(
+        chunked.select(
+            "way_id", "cell", "chunk_id", "pts",
+            F.expr("pts[0].lat").alias("lat"), F.expr("pts[0].lon").alias("lon"),
+        ),
+        tiles,
+        key_col="way_id",
+    )
+    kinds["pyramid"] = str(d / "pyramid")
+    bbox = (int(50.0e7), int(-2.0e7), int(53.0e7), int(1.8e7))
+    render.build_pyramid_table(spark, tiles, kinds["pyramid"], bbox, 8, 6, 256)
+
+    stage = d / "ts_stage"
+    stage.mkdir()
+    pq.write_table(
+        pa.table(
+            {
+                "chunk_id": pa.array([1, 2], pa.int64()),
+                "ts": pa.array([0, 1_700_000_000_000_000], pa.timestamp("us")),
+            }
+        ),
+        str(stage / "part-0.parquet"),
+    )
+    kinds["timestamp"] = str(d / "ts")
+    IcepickTable.create(kinds["timestamp"]).commit_staged(str(stage), group="g1")
+    return kinds
+
+
+def test_schema_read_matches_inference(spark, table_kinds):
+    """IcepickTable.read plans from the manifest schema; for every table
+    kind it gives the field names and types Spark's footer inference
+    gives over the same files (nullability aside), including a tz-less
+    timestamp (TIMESTAMP_NTZ)."""
+    for kind, path in sorted(table_kinds.items()):
+        t = IcepickTable(path)
+        paths = t.data_paths()
+        assert paths, kind
+        assert t.arrow_schema() is not None, kind
+        got = _field_types(t.read(spark, paths).schema)
+        assert got == _field_types(spark.read.parquet(*paths).schema), kind
+        # the miss path plans the same schema
+        assert _field_types(t.read(spark, []).schema) == got, kind
+    ts = dict(_field_types(IcepickTable(table_kinds["timestamp"]).read(spark, []).schema))
+    assert ts["ts"] == "timestamp_ntz"
+
+
+def test_unstamped_table_reads_through_inference(spark, tmp_path):
+    """A table whose manifest carries no schema stamp (written before
+    stamping) still reads, through footer inference, and its empty read
+    takes the schema from a data file."""
+    t = IcepickTable.create(str(tmp_path / "t"))
+    t.commit_staged(_stage(tmp_path, "s1", [1, 2]), group="a")
+    man = t.current_manifest()
+    del man["schema_ipc_b64"]
+    man["version"] += 1
+    t._write_manifest(man)
+    assert t.arrow_schema() is None and t.spark_schema() is None
+    df = t.read(spark, t.data_paths())
+    assert sorted(r["chunk_id"] for r in df.collect()) == [1, 2]
+    empty = t.read(spark, [])
+    assert empty.count() == 0 and empty.columns == ["chunk_id", "v"]

@@ -164,27 +164,47 @@ def test_rindex_path_results_identical(spark, tmp_path):
     assert got_wr == want_wr
 
 
-def test_diff_batch_forced_distributed_matches_default(spark, tmp_path, force_distributed):
+# Spark jobs one default apply_diff_batch of the n_rel=10 world runs
+# (diff, dirty log, three stores, way and relation tables), keyed by
+# with_rindex: every diff-sized set costs at most one Spark action, so a
+# change that re-collects or re-checkpoints a set shows up here
+BATCH_JOB_CEILING = {False: 52, True: 63}
+
+
+@pytest.mark.parametrize("with_rindex", [False, True])
+def test_diff_batch_forced_distributed_matches_default(
+    spark, tmp_path, force_distributed, with_rindex
+):
     """One diff batch applied to two copies of the smallest world: once on
     the default driver-side paths, once with every bounded cap at 0
-    (distributed upsert planning, range-write rewrites, Spark-read locator
-    lookups). The three stores, the way and relation tables, both
-    locators and the dirty log end equal."""
+    (distributed batch sets, upsert planning, range-write rewrites,
+    Spark-read locator lookups). The three stores, the way and relation
+    tables, both locators, the dirty log and, with_rindex, both
+    reverse-index stores end equal. The default run stays under its
+    pinned Spark job count."""
     import shutil
+
+    from test_bounded import _with_jobs
 
     default, forced = tmp_path / "default", tmp_path / "forced"
     default.mkdir()
-    stores, way_table, rel_table, _ = _build_world(spark, default, 10, with_rindex=False)
+    stores, way_table, rel_table, kw = _build_world(
+        spark, default, 10, with_rindex=with_rindex
+    )
     shutil.copytree(default, forced)
     b1, _ = _batches(spark)
 
     def apply(d):
         st = {k: str(d / os.path.basename(p)) for k, p in stores.items()}
         wt, rt = str(d / os.path.basename(way_table)), str(d / os.path.basename(rel_table))
+        kw_d = {k: str(d / os.path.basename(p)) for k, p in kw.items()}
         dirty = str(d / "dirty")
-        US.apply_diff_batch(
-            spark, b1, st["nodes"], st["ways"], st["rels"], wt, rt,
-            group="diff-0", dirty_table=dirty,
+        _, jobs = _with_jobs(
+            spark,
+            lambda: US.apply_diff_batch(
+                spark, b1, st["nodes"], st["ways"], st["rels"], wt, rt,
+                group="diff-0", dirty_table=dirty, **kw_d,
+            ),
         )
         out = {k: _rows(spark, st[k], cols) for k, cols in STORE_COLS}
         out["way_table"] = _rows(spark, wt, WAY_COLS)
@@ -192,13 +212,18 @@ def test_diff_batch_forced_distributed_matches_default(spark, tmp_path, force_di
         for name, tbl, key in (("way_locator", wt, "way_id"), ("rel_locator", rt, "relation_id")):
             out[name] = _rows(spark, update._locator_path(tbl), [key, "to_json(chunk_ids) as c"])
         out["dirty"] = _rows(spark, dirty, DIRTY_COLS)
-        return out
+        for name, path in kw_d.items():
+            out[name] = _rows(spark, path, ["*"])
+        return out, jobs
 
-    want = apply(default)
+    want, jobs = apply(default)
+    assert jobs <= BATCH_JOB_CEILING[with_rindex], jobs
     force_distributed()
-    got = apply(forced)
+    got, _ = apply(forced)
     assert got == want
     assert want["way_table"] and want["way_locator"] and want["dirty"]
+    if with_rindex:
+        assert want["rindex_store"] and want["rel_rindex_store"]
 
 
 def test_per_batch_reads_do_not_grow_with_world(spark, tmp_path):
