@@ -7,8 +7,9 @@ point table sized to the scale factor (20M rows/sf => 2M at sf0.1), plus a
 basket of driver-surface queries on $SPARK_GRAFT_SF_DIR.
 
 Scaling-efficiency evidence (N vs 4N executors, BASELINE.json:2,14) is
-produced by tools/bench_scaling.py which runs THIS pipeline at local[8] and
-local[32]; results land in BENCH/BASELINE.md.
+produced by tools/bench_scaling_paired.py which runs THIS pipeline at
+local[8] and local[32] in alternating pairs; results land in
+BENCH/BASELINE.md.
 """
 
 from __future__ import annotations

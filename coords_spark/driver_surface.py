@@ -2564,9 +2564,9 @@ def dirty_tiles_stats(spark, sf):
     osm2pgsql "expire-tiles" concept composed with the update family):
     for each composed batch, derive the post-batch node/way state in
     DataFrame-land (anti-join out changed ids, union upserts), compute
-    the blast radius exactly as apply_diff_batch does (reverse-index
-    explode against the broadcast changed-node set, plus the way diff
-    itself), resolve the affected ways' OLD and NEW geometry, and emit
+    the blast radius apply_diff_batch looks up in its reverse-index store
+    (here an explode of refs against the broadcast changed-node set, plus
+    the way diff itself), resolve the affected ways' OLD and NEW geometry, and emit
     render.dirty_tiles over zooms 12..9 — the distinct (zoom, tile) set a
     tile sink must re-render after the batch (deleted ways dirty their
     old tiles: erasure re-renders too). Batch 2 depends on batch-1 state.
@@ -2672,8 +2672,8 @@ def osc_update_render_stats(spark, sf):
         way_table = f"{tmp}/waychunks"
         update.build_way_chunk_table(spark, nodes, ways, way_table, split)
         # r7: persistent node->ways reverse index — the batches below plan
-        # O(diff) (pruned lookups), results byte-identical to the legacy
-        # full-explode path (pinned by tests/test_odiff.py)
+        # O(diff) (pruned lookups; tests/test_odiff.py checks them against
+        # a full-scan twin)
         from coords_spark.operators import rindex as RI
 
         rindex_nw = f"{tmp}/rindex_nw"
@@ -2776,8 +2776,8 @@ def update_stream_apply(spark, sf):
             spark, rels, resolve.resolve_ways(ways, nodes), rel_table, split
         )
         # r7: both persistent reverse indexes (node->ways, way->relations)
-        # — the O(diff) blast-radius path; byte-identical results pinned by
-        # tests/test_odiff.py
+        # — the O(diff) blast-radius path; tests/test_odiff.py checks it
+        # against a full-scan twin
         from coords_spark.operators import rindex as RI
 
         rindex_nw, rindex_wr = f"{tmp}/rindex_nw", f"{tmp}/rindex_wr"

@@ -98,19 +98,11 @@ def build_way_chunk_table(
     return t
 
 
-def affected_way_ids(
-    ways: DataFrame, nodes_diff: DataFrame, rindex: DataFrame | None = None
-) -> DataFrame:
-    """(way_id) touched by the diff. With a precomputed reverse-index table
-    (resolve.reverse_index output) this is one broadcast equi-join +
-    explode; otherwise it derives the index on the fly from ways.refs."""
+def affected_way_ids(ways: DataFrame, nodes_diff: DataFrame) -> DataFrame:
+    """(way_id) touched by the diff, derived on the fly from ways.refs (the
+    streaming apply looks the same set up in its persistent reverse-index
+    store instead: rindex.rindex_lookup)."""
     ids = nodes_diff.select(F.col("id").alias("node_id")).distinct()
-    if rindex is not None:
-        return (
-            rindex.join(F.broadcast(ids), "node_id")
-            .select(F.explode("way_ids").alias("way_id"))
-            .distinct()
-        )
     return (
         resolve.explode_refs(ways)
         .join(F.broadcast(ids), "node_id")
@@ -453,7 +445,6 @@ def apply_node_diff(
     nodes_diff: DataFrame,
     split=None,
     base_level: int | None = None,
-    rindex: DataFrame | None = None,
     group: str = "node_diff",
 ) -> dict:
     """Apply a node diff (moved/updated nodes) to an existing way-chunk
@@ -472,7 +463,7 @@ def apply_node_diff(
         base_level = sidecar_bl if base_level is None else base_level
     elif base_level is None:
         base_level = tiling.DEFAULT_BASE_LEVEL
-    aff = affected_way_ids(ways, nodes_diff, rindex=rindex).localCheckpoint()
+    aff = affected_way_ids(ways, nodes_diff).localCheckpoint()
     ways_aff = ways.join(aff.withColumnRenamed("way_id", "id"), "id", "semi")
     new_rows = _way_rows(ways_aff, patched_nodes(nodes, nodes_diff), split, base_level)
     return _apply_way_rewrite(spark, table_path, aff, new_rows, group)
@@ -556,22 +547,6 @@ def build_relation_chunk_table(
     return t
 
 
-def affected_relation_ids(relations: DataFrame, way_ids: DataFrame) -> DataFrame:
-    """(relation_id) whose member list references any of `way_ids` (a
-    one-column DataFrame) — derives "which relations does a way diff
-    touch" the same way affected_way_ids derives ways from a node diff.
-    The way-id set is the diff, i.e. the small side: broadcast it."""
-    w = way_ids.select(F.col(way_ids.columns[0]).alias("way_id")).distinct()
-    mem = (
-        relations.select(
-            F.col("id").alias("relation_id"), F.explode("members").alias("m")
-        )
-        .filter(F.col("m.mtype") == 1)
-        .select("relation_id", F.col("m.ref").alias("way_id"))
-    )
-    return mem.join(F.broadcast(w), "way_id").select("relation_id").distinct()
-
-
 def apply_relation_diff(
     spark,
     table_path: str,
@@ -592,9 +567,10 @@ def apply_relation_diff(
     pre-diff state.
 
     For member-WAY geometry changes (a way diff rippling into relations),
-    derive the blast radius with affected_relation_ids(relations,
-    changed_way_ids) and pass relations.join(that, "id", "semi") as
-    relations_diff, with resolved_ways carrying the POST-diff geometry.
+    look the blast radius up in a way->relations reverse-index store
+    (rindex.rindex_lookup(spark, store, changed_way_ids)) and pass
+    relations.join(that, "id", "semi") as relations_diff, with
+    resolved_ways carrying the POST-diff geometry.
 
     Closes the update family — node diffs (apply_node_diff), way diffs
     (apply_way_diff), relation diffs (this); REF? the reverse-index update

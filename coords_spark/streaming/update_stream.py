@@ -9,11 +9,13 @@ EXISTING batch operators:
 
     diff batch (mixed node/way/relation upserts+deletes)
       1. upsert_entities into each id-keyed store     (O(diff) files)
-      2. blast radius: changed nodes -> referencing ways (reverse index
-         from the CURRENT ways store), + the way diff itself
+      2. blast radius: changed nodes -> referencing ways (pruned lookup
+         in the persistent node->ways reverse-index store), + the way
+         diff itself
       3. apply_way_diff on the way-chunk table         (O(radius) files)
-      4. blast radius: changed ways -> member relations, + the relation
-         diff itself; apply_relation_diff              (O(radius) files)
+      4. blast radius: changed ways -> member relations (pruned lookup in
+         the way->relations reverse-index store), + the relation diff
+         itself; apply_relation_diff                   (O(radius) files)
 
 Exactly-once: every table keeps its own committed-group ledger and the
 group id is the stream batch id — a replayed micro-batch after a crash
@@ -23,11 +25,13 @@ replay reads in exactly the post-upsert state). Batches compose: batch
 N+1's re-resolution reads stores that already contain batch N, which is
 why the mutable entity-store layer exists at all.
 
-100 TB posture: every per-batch job is diff-proportional — the only
-table-proportional joins are equi-joins where the diff side is small
-(broadcast), and rewrites touch only files whose chunk/id range holds an
-affected entity. A day of minutely diffs then fragments the tables;
-icepick compact()/expire_snapshots() (S8) is the matching lifecycle.
+100 TB posture: every per-batch job is diff-proportional — every store
+read is id-range-pruned (entity_store.read_entities_for_ids), the blast
+radius comes from the reverse-index stores (operators/rindex.py), which
+are therefore required inputs, and rewrites touch only files whose
+chunk/id range holds an affected entity. A day of minutely diffs then
+fragments the tables; icepick compact()/expire_snapshots() (S8) is the
+matching lifecycle.
 """
 
 from __future__ import annotations
@@ -43,6 +47,7 @@ from pyspark.sql import functions as F
 from coords_spark import bounded
 from coords_spark.operators import entity_store as ES
 from coords_spark.operators import resolve, update
+from coords_spark.operators import rindex as RI
 from coords_spark.sources.icepick import IcepickTable
 
 # one unified row per changed entity, OSC-style: kind 0=node 1=way 2=rel;
@@ -68,6 +73,21 @@ def stream_diffs_from_dir(spark: SparkSession, path: str, max_files: int = 1) ->
     )
 
 
+def _require_rindex(rindex_store, rel_table, rel_rindex_store) -> None:
+    """The blast radius comes only from the reverse-index stores: raise
+    before any Spark job when one the batch needs is missing."""
+    if not rindex_store:
+        raise ValueError(
+            "the diff apply needs rindex_store, the node->ways reverse index; "
+            "build it with rindex.build_rindex_store"
+        )
+    if rel_table is not None and not rel_rindex_store:
+        raise ValueError(
+            "a rel_table needs rel_rindex_store, the way->relations reverse "
+            "index; build it with rindex.build_rindex_store"
+        )
+
+
 def apply_diff_batch(
     spark,
     batch_df: DataFrame,
@@ -91,14 +111,16 @@ def apply_diff_batch(
     O(diff) posture (VERDICT r6 ask #1): every store read in this function
     is id-range-PRUNED to the batch's blast radius
     (entity_store.read_entities_for_ids — O(diff ids / 2^shift) files),
-    and with `rindex_store` / `rel_rindex_store` (persistent reverse-index
-    entity stores, operators/rindex.py, maintained in this same ledgered
-    batch) the blast radius itself derives from pruned index lookups —
-    NOTHING in the per-batch plan scans a full table anymore. Without the
-    index stores the blast radius falls back to exploding the full
-    ways/relations store (correct, table-proportional — pre-r7 behavior).
-    Results are byte-identical either way; `stats['files_read']` reports
-    the per-step pruned file counts so tests can pin the O(diff) claim."""
+    and the blast radius itself derives from pruned lookups in the
+    persistent reverse-index entity stores (operators/rindex.py,
+    maintained in this same ledgered batch) — NOTHING in the per-batch
+    plan scans a full table. `rindex_store` (node->ways) is required, and
+    so is `rel_rindex_store` (way->relations) whenever `rel_table` is
+    given; a missing one raises ValueError before any Spark job runs.
+    Without a `rel_table`, a given `rel_rindex_store` is still maintained.
+    `stats['files_read']` reports the per-step pruned file counts so tests
+    can pin the O(diff) claim."""
+    _require_rindex(rindex_store, rel_table, rel_rindex_store)
     # consolidate to one final state per (kind, id): replication intervals
     # are already consolidated upstream (one row per changed entity, OSC
     # semantics), but a merged/late batch may carry several versions —
@@ -200,36 +222,13 @@ def apply_diff_batch(
         files_read[tag] = n
         return rows.join(F.broadcast(_frame(ids)), "id", "semi")
 
-    # way_old's only consumer is the reverse-index upsert: the legacy
-    # (no-rindex) path must not pay a per-batch pruned store read +
-    # checkpoint for it (ADVICE r7)
-    way_old = (
-        _hold(_pruned_rows(ways_store, way_ch, "way_old").select("id", "refs"))
-        if rindex_store is not None
-        else None
-    )
-
-    def _ways_hit_pre(changed_nodes) -> DataFrame:
-        """(way_id) referencing a changed node in the PRE state: a pruned
-        reverse-index lookup when the store exists, else a full explode of
-        the ways store (legacy, table-proportional)."""
-        if rindex_store is not None:
-            from coords_spark.operators import rindex as RI
-
-            hit, n = RI.rindex_lookup(spark, rindex_store, changed_nodes)
-            files_read["rindex_lookup"] = n
-            return hit
-        ways0 = ES.read_entity_store(spark, ways_store)
-        return (
-            ways0.select(F.col("id").alias("way_id"), F.explode("refs").alias("nid"))
-            .join(F.broadcast(_frame(changed_nodes).withColumnRenamed("id", "nid")), "nid")
-            .select("way_id")
-        )
+    way_old = _hold(_pruned_rows(ways_store, way_ch, "way_old").select("id", "refs"))
 
     # ways whose geometry this batch can change: referencing a changed
-    # node (pre-state hit; an unchanged way keeps its refs, so post-state
-    # hits add nothing new) ∪ the way diff itself
-    hit_pre = _ways_hit_pre(node_ch)
+    # node in the PRE state (pruned reverse-index lookup; an unchanged way
+    # keeps its refs, so post-state hits add nothing new) ∪ the way diff
+    # itself
+    hit_pre, files_read["rindex_lookup"] = RI.rindex_lookup(spark, rindex_store, node_ch)
     aff_ids = _id_set(hit_pre.unionAll(_frame(way_ch).select("id")))
 
     # -- 0. tile-expiry log (MUST commit before the stores: the dirty set
@@ -290,19 +289,9 @@ def apply_diff_batch(
                 )
 
                 rel_ch = _frame(_union_ids(rel_up, rel_del))
-                changed_ways_all = _union_ids(aff_ids, way_del)
-                if rel_rindex_store is not None:
-                    from coords_spark.operators import rindex as RI
-
-                    rel_hit, n = RI.rindex_lookup(
-                        spark, rel_rindex_store, changed_ways_all
-                    )
-                    files_read["dirty_rel_rindex"] = n
-                else:
-                    rels0_all = ES.read_entity_store(spark, rels_store)
-                    rel_hit = update.affected_relation_ids(
-                        rels0_all, _frame(changed_ways_all)
-                    )
+                rel_hit, files_read["dirty_rel_rindex"] = RI.rindex_lookup(
+                    spark, rel_rindex_store, _union_ids(aff_ids, way_del)
+                )
                 aff_rel = _id_set(rel_hit.unionAll(rel_ch))
                 rels0_aff = _frame(
                     _hold(
@@ -373,14 +362,18 @@ def apply_diff_batch(
 
     # -- 1. entity stores (order irrelevant between kinds; each atomic,
     # each an arithmetic-chunk bounded rewrite) ---------------------------
-    rel_old = None
-    if rel_rindex_store is not None:
-        rel_ch = _union_ids(rel_up, rel_del)
+    # the reverse-index stores step 1.5 maintains, each with its parents'
+    # PRE-diff refs (read before the stores move), new refs and deletes;
+    # without a rel_table the relation index is optional
+    rindexes = [("rindex", rindex_store, way_old, way_up.select(["id", "refs"]), way_del)]
+    if rel_rindex_store:
         rel_old = _hold(
-            _pruned_rows(rels_store, rel_ch, "rel_old").select(
+            _pruned_rows(rels_store, _union_ids(rel_up, rel_del), "rel_old").select(
                 "id", _member_way_refs().alias("refs")
             )
         )
+        rel_new = rel_up_df.select("id", _member_way_refs().alias("refs"))
+        rindexes.append(("rel_rindex", rel_rindex_store, rel_old, rel_new, rel_del))
     for path, up, dele, name in (
         (nodes_store, node_up, node_del, "nodes"),
         (ways_store, way_up, way_del, "ways"),
@@ -394,37 +387,14 @@ def apply_diff_batch(
     # -- 1.5 reverse-index maintenance (same ledgered batch; a replay may
     # see post-diff rows as way_old → superset entries, safe by the rindex
     # module invariant) ----------------------------------------------------
-    if rindex_store is not None:
-        from coords_spark.operators import rindex as RI
-
+    for name, store, old, new, dele in rindexes:
         # replay skip like every other per-table apply (ADVICE r7): a
         # replayed batch's re-upsert is content-idempotent but burns a
         # snapshot generation and rewrite work
-        if group in IcepickTable(rindex_store).committed_groups():
-            stats["rindex"] = "replayed"
+        if group in IcepickTable(store).committed_groups():
+            stats[name] = "replayed"
         else:
-            stats["rindex"] = RI.upsert_rindex(
-                spark,
-                rindex_store,
-                way_old,
-                way_up.select(["id", "refs"]),
-                way_del,
-                group=group,
-            )
-    if rel_rindex_store is not None:
-        from coords_spark.operators import rindex as RI
-
-        if group in IcepickTable(rel_rindex_store).committed_groups():
-            stats["rel_rindex"] = "replayed"
-        else:
-            stats["rel_rindex"] = RI.upsert_rindex(
-                spark,
-                rel_rindex_store,
-                rel_old,
-                rel_up_df.select("id", _member_way_refs().alias("refs")),
-                rel_del,
-                group=group,
-            )
+            stats[name] = RI.upsert_rindex(spark, store, old, new, dele, group=group)
 
     # -- 2/3. derived way-chunk table: blast radius re-resolve (pruned:
     # the store already holds the post-diff rows, so the "diff" for the
@@ -452,15 +422,9 @@ def apply_diff_batch(
 
     # -- 4. derived multipolygon table: relation blast radius --------------
     if rel_table is not None:
-        changed_ways = _union_ids(aff_ids, way_del)
-        if rel_rindex_store is not None:
-            from coords_spark.operators import rindex as RI
-
-            rel_hit, n = RI.rindex_lookup(spark, rel_rindex_store, changed_ways)
-            files_read["rel_rindex_lookup"] = n
-        else:
-            rels_all = ES.read_entity_store(spark, rels_store)
-            rel_hit = update.affected_relation_ids(rels_all, _frame(changed_ways))
+        rel_hit, files_read["rel_rindex_lookup"] = RI.rindex_lookup(
+            spark, rel_rindex_store, _union_ids(aff_ids, way_del)
+        )
         aff_rel_ids = _id_set(rel_hit.unionAll(rel_up_df.select("id")))
         if group in IcepickTable(rel_table).committed_groups():
             stats["rel_chunks"] = "replayed"
@@ -575,8 +539,10 @@ def stream_apply_diffs(
     interval applied atomically-per-table with replay-safe skips. With
     `dirty_table`, each batch also appends its tile-expiry work list
     (render.dirty_tiles over the batch's blast radius) — the re-render
-    feed for a downstream tile sink. With the reverse-index stores, every
-    batch plans O(diff) (see apply_diff_batch).
+    feed for a downstream tile sink. Every batch plans O(diff) from the
+    reverse-index stores (see apply_diff_batch): `rindex_store` is
+    required, and so is `rel_rindex_store` with a `rel_table`; a missing
+    one raises ValueError before the query starts.
 
     With `maintenance_every=N`, every Nth batch closes the lifecycle loop
     (VERDICT r6 ask #5): compact + expire_snapshots on every table the
@@ -584,6 +550,7 @@ def stream_apply_diffs(
     (BENCH/BASELINE.md: fragmented 1.5 s -> compacted 0.18 s). Ledgered
     per sweep ('maint-{batch_id}'), so a replayed trigger batch skips the
     rewrite and only re-runs the idempotent expiry."""
+    _require_rindex(rindex_store, rel_table, rel_rindex_store)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         apply_diff_batch(

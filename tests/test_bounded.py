@@ -96,9 +96,11 @@ def test_staging_rule_lives_in_bounded():
     """No COORDS_* environment knob anywhere in the package, every Arrow
     collect goes through bounded.bounded_arrow, every icepick table read
     in the operators and the streaming layer goes through
-    IcepickTable.read, and no catch-all handler (`except Exception`,
-    `except BaseException`, bare `except:`) can send a failed driver path
-    down the distributed one."""
+    IcepickTable.read, the streaming layer reads no whole entity store
+    (a per-batch store read is id-range-pruned:
+    entity_store.read_entities_for_ids), and no catch-all handler
+    (`except Exception`, `except BaseException`, bare `except:`) can send
+    a failed driver path down the distributed one."""
     to_arrow = re.compile(r"\.toArrow\(")
     read_parquet = re.compile(r"read\.parquet\(")
     catch_all = re.compile(r"\bexcept\b\s*(:|[^:#]*\b(Exception|BaseException)\b)")
@@ -114,6 +116,8 @@ def test_staging_rule_lives_in_bounded():
                 offenders.append(
                     f"{rel}:{no}: read.parquet outside IcepickTable.read: {line.strip()}"
                 )
+            if rel.startswith("streaming/") and "read_entity_store(" in line:
+                offenders.append(f"{rel}:{no}: unpruned store read: {line.strip()}")
             if catch_all.search(line):
                 offenders.append(f"{rel}:{no}: catch-all except: {line.strip()}")
     assert not offenders, "\n".join(offenders)

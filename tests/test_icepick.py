@@ -204,7 +204,7 @@ def table_kinds(spark, tmp_path_factory):
     from coords_spark.streaming import update_stream as US
 
     d = tmp_path_factory.mktemp("kinds")
-    stores, way_table, rel_table, kw = _build_world(spark, d, 4, with_rindex=True)
+    stores, way_table, rel_table, kw = _build_world(spark, d, 4)
     dirty = str(d / "dirty")
     b1, _ = _batches(spark)
     US.apply_diff_batch(

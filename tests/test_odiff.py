@@ -2,9 +2,11 @@
 reverse-index stores (operators/rindex.py) and per-table locator sidecars
 (operators/update.py), a diff batch's PLAN reads a number of store files
 bounded by the diff's blast radius — growing the world must not grow the
-per-batch file reads — while results stay byte-identical to the legacy
-full-scan path. Locator staleness (crash-window supersets) must only widen
-reads, never lose rows, and must self-heal on the next touch."""
+per-batch file reads — while its blast radius, dirty log, stores and
+derived tables match an in-test full-scan twin and a from-scratch build.
+The diff apply refuses to run without its reverse-index stores. Locator
+staleness (crash-window supersets) must only widen reads, never lose
+rows, and must self-heal on the next touch."""
 
 import os
 
@@ -28,10 +30,10 @@ RELS_SCHEMA = (
 _MEMBER_REFS = "transform(filter(members, m -> m.mtype = 1), m -> m.ref)"
 
 
-def _build_world(spark, d, n_rel, with_rindex):
-    """Stores + derived tables for an n_rel world; optionally the two
-    reverse-index stores. Small id shifts -> many id-range files, so
-    pruning evidence is real."""
+def _build_world(spark, d, n_rel):
+    """Stores, derived tables and the two reverse-index stores for an
+    n_rel world. Small id shifts -> many id-range files, so pruning
+    evidence is real."""
     nodes_rows, ways_rows, rels_rows = gen_update_world(n_rel)
     nodes = spark.createDataFrame(nodes_rows, NODES_SCHEMA).localCheckpoint()
     ways = spark.createDataFrame(ways_rows, WAYS_SCHEMA).localCheckpoint()
@@ -56,21 +58,18 @@ def _build_world(spark, d, n_rel, with_rindex):
         spark, rels, resolve.resolve_ways(ways, nodes), rel_table, split,
         locator_id_shift=2,
     )
-    kw = {}
-    if with_rindex:
-        kw["rindex_store"] = str(d / "rindex_nw")
-        RI.build_rindex_store(
-            spark, ways.select("id", "refs"), kw["rindex_store"], id_shift=6
-        )
-        kw["rel_rindex_store"] = str(d / "rindex_wr")
-        RI.build_rindex_store(
-            spark,
-            rels.select("id", F.expr(_MEMBER_REFS).alias("refs")),
-            kw["rel_rindex_store"],
-            ref_col="way_id",
-            ids_col="relation_ids",
-            id_shift=3,
-        )
+    kw = {"rindex_store": str(d / "rindex_nw"), "rel_rindex_store": str(d / "rindex_wr")}
+    RI.build_rindex_store(
+        spark, ways.select("id", "refs"), kw["rindex_store"], id_shift=6
+    )
+    RI.build_rindex_store(
+        spark,
+        rels.select("id", F.expr(_MEMBER_REFS).alias("refs")),
+        kw["rel_rindex_store"],
+        ref_col="way_id",
+        ids_col="relation_ids",
+        id_shift=3,
+    )
     return stores, way_table, rel_table, kw
 
 
@@ -102,44 +101,115 @@ DIRTY_COLS = ["zoom", "tile_x", "tile_y", "batch_group"]
 
 
 def _apply_all(spark, tmp, stores, way_table, rel_table, kw):
-    b1, b2 = _batches(spark)
     dirty = str(tmp / "dirty")
-    stats = []
-    for i, b in enumerate((b1, b2)):
-        stats.append(
-            US.apply_diff_batch(
-                spark, b, stores["nodes"], stores["ways"], stores["rels"],
-                way_table, rel_table, group=f"diff-{i}", dirty_table=dirty, **kw,
-            )
+    return [
+        US.apply_diff_batch(
+            spark, b, stores["nodes"], stores["ways"], stores["rels"],
+            way_table, rel_table, group=f"diff-{i}", dirty_table=dirty, **kw,
         )
-    return dirty, stats
+        for i, b in enumerate(_batches(spark))
+    ]
+
+
+def _apply_batch(state, batch):
+    """The in-test entity state ({kind: {id: row}}, rows in the
+    NODES/WAYS/RELS_SCHEMA order) after one diff batch; every batch of
+    gen_update_diffs holds one row per (kind, id)."""
+    out = {k: dict(v) for k, v in state.items()}
+    for kind, action, eid, version, lat, lon, refs, members, tags in batch:
+        if action == "delete":
+            out[kind].pop(eid, None)
+        else:
+            out[kind][eid] = (
+                (eid, version, lat, lon, tags),
+                (eid, version, refs, tags),
+                (eid, version, members, tags),
+            )[kind]
+    return out
+
+
+def _twin_radius(state, batch):
+    """The blast radius by full scan of the PRE-batch tables — the
+    table-proportional definition the reverse-index lookups must
+    reproduce: ways referencing a changed node ∪ the way diff, then the
+    relations with a way member in that set ∪ the relation diff."""
+    changed = {k: {r[2] for r in batch if r[0] == k} for k in (0, 1, 2)}
+    ways = {
+        wid for wid, (_, _, refs, _) in state[1].items() if changed[0] & set(refs)
+    } | changed[1]
+    rels = {
+        rid
+        for rid, (_, _, members, _) in state[2].items()
+        if any(m[0] == 1 and m[1] in ways for m in members)
+    } | changed[2]
+    return ways, rels
 
 
 def test_rindex_path_results_identical(spark, tmp_path):
-    """Same diffs through the legacy full-scan path and the indexed path:
-    every store, derived table and dirty-log row identical; the index
-    stores end exactly at the from-scratch reverse index of the final
-    entity state (no staleness in the clean path)."""
-    d_a = tmp_path / "legacy"
-    d_b = tmp_path / "indexed"
-    d_a.mkdir(), d_b.mkdir()
-    st_a, wt_a, rt_a, _ = _build_world(spark, d_a, 10, with_rindex=False)
-    st_b, wt_b, rt_b, kw = _build_world(spark, d_b, 10, with_rindex=True)
-    dirty_a, _ = _apply_all(spark, d_a, st_a, wt_a, rt_a, {})
-    dirty_b, stats_b = _apply_all(spark, d_b, st_b, wt_b, rt_b, kw)
+    """Two composed batches through the indexed apply, each checked
+    against a full-scan twin computed from the pre-batch tables: the
+    affected way and relation counts, and the dirty log (render.dirty_tiles
+    over the twin's old and new geometry). The stores and derived tables
+    end at a from-scratch build of the final entity state, and the index
+    stores exactly at the from-scratch reverse index of that state (no
+    staleness in the clean path)."""
+    from coords_spark.operators import render
 
-    for k, cols in STORE_COLS:
-        assert _rows(spark, st_a[k], cols) == _rows(spark, st_b[k], cols), k
-    assert _rows(spark, wt_a, WAY_COLS) == _rows(spark, wt_b, WAY_COLS)
-    assert _rows(spark, rt_a, REL_COLS) == _rows(spark, rt_b, REL_COLS)
-    assert _rows(spark, dirty_a, DIRTY_COLS) == _rows(spark, dirty_b, DIRTY_COLS)
+    st, wt, rt, kw = _build_world(spark, tmp_path, 10)
+    dirty = str(tmp_path / "dirty")
+    schemas = {0: NODES_SCHEMA, 1: WAYS_SCHEMA, 2: RELS_SCHEMA}
+
+    def frame(state, kind, ids=None):
+        rows = [r for i, r in state[kind].items() if ids is None or i in ids]
+        return spark.createDataFrame(rows, schemas[kind])
+
+    state = {k: {r[0]: r for r in rows} for k, rows in enumerate(gen_update_world(10))}
+    stats = []
+    for i, batch in enumerate(gen_update_diffs(*gen_update_world(10))):
+        aff_ways, aff_rels = _twin_radius(state, batch)
+        post = _apply_batch(state, batch)
+        s = US.apply_diff_batch(
+            spark, spark.createDataFrame(batch, US.DIFF_SCHEMA),
+            st["nodes"], st["ways"], st["rels"], wt, rt,
+            group=f"diff-{i}", dirty_table=dirty, **kw,
+        )
+        stats.append(s)
+        assert s["way_chunks"]["affected_ways"] == len(aff_ways), i
+        assert s["rel_chunks"]["affected_relations"] == len(aff_rels), i
+        geom = resolve.resolve_ways(
+            frame(state, 1, aff_ways), frame(state, 0)
+        ).unionByName(resolve.resolve_ways(frame(post, 1, aff_ways), frame(post, 0)))
+        want = sorted(
+            (*r, f"diff-{i}")
+            for r in render.dirty_tiles(geom, 12, 9).select("zoom", "tile_x", "tile_y").collect()
+        )
+        got = [r for r in _rows(spark, dirty, DIRTY_COLS) if r[3] == f"diff-{i}"]
+        assert got == want and want, i
+        state = post
 
     # the lookups actually ran through the index (stats carry file counts)
-    assert "rindex_lookup" in stats_b[0]["files_read"]
-    assert stats_b[0]["way_chunks"]["locator_files_read"] is not None
+    assert "rindex_lookup" in stats[0]["files_read"]
+    assert stats[0]["way_chunks"]["locator_files_read"] is not None
+
+    # stores and derived tables == a from-scratch build of the final state
+    fin = {k: frame(state, k) for k in (0, 1, 2)}
+    for k, (name, cols) in enumerate(STORE_COLS):
+        want = sorted(tuple(r) for r in fin[k].selectExpr(*cols).collect())
+        assert _rows(spark, st[name], cols) == want, name
+    split, bl = update.load_split_set(wt)
+    scratch_way = str(tmp_path / "scratch_way")
+    update.build_way_chunk_table(spark, fin[0], fin[1], scratch_way, split, base_level=bl)
+    assert _rows(spark, wt, WAY_COLS) == _rows(spark, scratch_way, WAY_COLS)
+    split_r, bl_r = update.load_split_set(rt)
+    scratch_rel = str(tmp_path / "scratch_rel")
+    update.build_relation_chunk_table(
+        spark, fin[2], resolve.resolve_ways(fin[1], fin[0]), scratch_rel, split_r,
+        base_level=bl_r,
+    )
+    assert _rows(spark, rt, REL_COLS) == _rows(spark, scratch_rel, REL_COLS)
 
     # index stores == from-scratch reverse index of the FINAL state
-    fin_ways = ES.read_entity_store(spark, st_b["ways"])
+    fin_ways = ES.read_entity_store(spark, st["ways"])
     want_nw = sorted(
         (r["node_id"], tuple(r["way_ids"]))
         for r in resolve.reverse_index(fin_ways.select(F.col("id"), "refs")).collect()
@@ -149,7 +219,7 @@ def test_rindex_path_results_identical(spark, tmp_path):
         for r in ES.read_entity_store(spark, kw["rindex_store"]).collect()
     )
     assert got_nw == want_nw
-    fin_rels = ES.read_entity_store(spark, st_b["rels"])
+    fin_rels = ES.read_entity_store(spark, st["rels"])
     want_wr = sorted(
         (r["way_id"], tuple(r["relation_ids"]))
         for r in RI._index_rows(
@@ -164,33 +234,75 @@ def test_rindex_path_results_identical(spark, tmp_path):
     assert got_wr == want_wr
 
 
+@pytest.fixture(scope="module")
+def raise_world(spark, tmp_path_factory):
+    d = tmp_path_factory.mktemp("raise")
+    return d, *_build_world(spark, d, 4)
+
+
+@pytest.mark.parametrize("missing", ["rindex_store", "rel_rindex_store"])
+def test_diff_apply_without_rindex_store_raises(spark, raise_world, missing):
+    """The blast radius has one path, the reverse-index lookups: without
+    the node->ways store, or with a relation table but no way->relations
+    store, both the batch apply and the stream raise ValueError naming
+    rindex.build_rindex_store — before any Spark job, with nothing
+    committed."""
+    from test_bounded import _with_jobs
+
+    d, stores, way_table, rel_table, all_kw = raise_world
+    kw = {k: v for k, v in all_kw.items() if k != missing}
+    tables = [*stores.values(), way_table, rel_table, *all_kw.values()]
+    tables += [update._locator_path(way_table), update._locator_path(rel_table)]
+    versions = {p: IcepickTable(p).current_manifest()["version"] for p in tables}
+    b1, _ = _batches(spark)
+    dirty, diff_dir = str(d / "dirty"), d / "diffs"
+    diff_dir.mkdir(exist_ok=True)
+
+    def raised(start):
+        with pytest.raises(ValueError, match=r"rindex\.build_rindex_store") as err:
+            start()
+        return str(err.value)
+
+    for start in (
+        lambda: US.apply_diff_batch(
+            spark, b1, stores["nodes"], stores["ways"], stores["rels"],
+            way_table, rel_table, group="diff-0", dirty_table=dirty, **kw,
+        ),
+        lambda: US.stream_apply_diffs(
+            US.stream_diffs_from_dir(spark, str(diff_dir)),
+            stores["nodes"], stores["ways"], stores["rels"], way_table, rel_table,
+            checkpoint_dir=str(d / "ckpt"), dirty_table=dirty, **kw,
+        ),
+    ):
+        msg, jobs = _with_jobs(spark, lambda: raised(start))
+        assert f"needs {missing}" in msg and jobs == 0
+    assert {p: IcepickTable(p).current_manifest()["version"] for p in tables} == versions
+    assert not os.path.exists(dirty)
+
+
 # Spark jobs one default apply_diff_batch of the n_rel=10 world runs
-# (diff, dirty log, three stores, way and relation tables), keyed by
-# with_rindex: every diff-sized set costs at most one Spark action, so a
-# change that re-collects or re-checkpoints a set shows up here
-BATCH_JOB_CEILING = {False: 52, True: 63}
+# (diff, dirty log, three stores, both reverse-index stores, way and
+# relation tables): every diff-sized set costs at most one Spark action,
+# so a change that re-collects or re-checkpoints a set shows up here
+BATCH_JOB_CEILING = 63
 
 
-@pytest.mark.parametrize("with_rindex", [False, True])
 def test_diff_batch_forced_distributed_matches_default(
-    spark, tmp_path, force_distributed, with_rindex
+    spark, tmp_path, force_distributed
 ):
     """One diff batch applied to two copies of the smallest world: once on
     the default driver-side paths, once with every bounded cap at 0
     (distributed batch sets, upsert planning, range-write rewrites,
     Spark-read locator lookups). The three stores, the way and relation
-    tables, both locators, the dirty log and, with_rindex, both
-    reverse-index stores end equal. The default run stays under its
-    pinned Spark job count."""
+    tables, both locators, the dirty log and both reverse-index stores
+    end equal. The default run stays under its pinned Spark job count."""
     import shutil
 
     from test_bounded import _with_jobs
 
     default, forced = tmp_path / "default", tmp_path / "forced"
     default.mkdir()
-    stores, way_table, rel_table, kw = _build_world(
-        spark, default, 10, with_rindex=with_rindex
-    )
+    stores, way_table, rel_table, kw = _build_world(spark, default, 10)
     shutil.copytree(default, forced)
     b1, _ = _batches(spark)
 
@@ -217,13 +329,12 @@ def test_diff_batch_forced_distributed_matches_default(
         return out, jobs
 
     want, jobs = apply(default)
-    assert jobs <= BATCH_JOB_CEILING[with_rindex], jobs
+    assert jobs <= BATCH_JOB_CEILING, jobs
     force_distributed()
     got, _ = apply(forced)
     assert got == want
     assert want["way_table"] and want["way_locator"] and want["dirty"]
-    if with_rindex:
-        assert want["rindex_store"] and want["rel_rindex_store"]
+    assert want["rindex_store"] and want["rel_rindex_store"]
 
 
 def test_per_batch_reads_do_not_grow_with_world(spark, tmp_path):
@@ -233,15 +344,15 @@ def test_per_batch_reads_do_not_grow_with_world(spark, tmp_path):
     d_s = tmp_path / "small"
     d_l = tmp_path / "large"
     d_s.mkdir(), d_l.mkdir()
-    st_s, wt_s, rt_s, kw_s = _build_world(spark, d_s, 10, with_rindex=True)
-    st_l, wt_l, rt_l, kw_l = _build_world(spark, d_l, 40, with_rindex=True)
+    st_s, wt_s, rt_s, kw_s = _build_world(spark, d_s, 10)
+    st_l, wt_l, rt_l, kw_l = _build_world(spark, d_l, 40)
     # the worlds nest: world(40) contains world(10)'s entities verbatim
     n10 = set(r[0] for r in gen_update_world(10)[0])
     n40 = set(r[0] for r in gen_update_world(40)[0])
     assert n10 < n40
 
-    _, stats_s = _apply_all(spark, d_s, st_s, wt_s, rt_s, kw_s)
-    _, stats_l = _apply_all(spark, d_l, st_l, wt_l, rt_l, kw_l)
+    stats_s = _apply_all(spark, d_s, st_s, wt_s, rt_s, kw_s)
+    stats_l = _apply_all(spark, d_l, st_l, wt_l, rt_l, kw_l)
 
     n_files_s = len(IcepickTable(st_s["ways"]).files())
     n_files_l = len(IcepickTable(st_l["ways"]).files())
@@ -269,7 +380,7 @@ def test_locator_superset_stale_entry_heals(spark, tmp_path):
     locator a SUPERSET (old ∪ new chunk ids). A later diff touching the
     same key must still rewrite correctly (supersets only widen the file
     set) and must trim the entry back to exact."""
-    st, way_table, rel_table, _ = _build_world(spark, tmp_path, 10, with_rindex=False)
+    st, way_table, rel_table, _ = _build_world(spark, tmp_path, 10)
     nodes = ES.read_entity_store(spark, st["nodes"])
     ways = ES.read_entity_store(spark, st["ways"])
     wid = ways.select("id").orderBy("id").first()["id"]
@@ -325,7 +436,7 @@ def test_polygon_dirty_splice_in_update_loop(spark, tmp_path):
     polygon tiles over the pre state must equal a full post render."""
     from coords_spark.operators import multipolygon, render
 
-    st, way_table, rel_table, kw = _build_world(spark, tmp_path, 8, with_rindex=True)
+    st, way_table, rel_table, kw = _build_world(spark, tmp_path, 8)
     nodes = ES.read_entity_store(spark, st["nodes"]).localCheckpoint()
     ways = ES.read_entity_store(spark, st["ways"]).localCheckpoint()
     rels = ES.read_entity_store(spark, st["rels"]).localCheckpoint()

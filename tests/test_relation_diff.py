@@ -139,15 +139,27 @@ def test_apply_relation_delete(spark, built):
     assert t.verify_checksums()
 
 
-def test_affected_relation_ids(spark, built):
+def test_affected_relation_ids(spark, built, tmp_path):
+    """The relations a way diff touches, looked up in a way->relations
+    reverse-index store built from the relations."""
+    from coords_spark.operators import rindex as RI
+
     relations, relations_t, rw, split, path = built
+    store = str(tmp_path / "rindex_wr")
+    RI.build_rindex_store(
+        spark,
+        relations.select(
+            "id", F.expr("transform(filter(members, m -> m.mtype = 1), m -> m.ref)").alias("refs")
+        ),
+        store,
+        ref_col="way_id",
+        ids_col="relation_ids",
+    )
     mp = _multipolygon_rows(relations_t)[0]
     wid = next(m["ref"] for m in mp["members"] if m["mtype"] == 1)
     ids = spark.createDataFrame([(int(wid),)], "way_id long")
-    got = {
-        r["relation_id"]
-        for r in update.affected_relation_ids(relations, ids).collect()
-    }
+    hit, _ = RI.rindex_lookup(spark, store, ids)
+    got = {r["relation_id"] for r in hit.collect()}
     assert mp["id"] in got
     # ring ways are dedicated to one relation in the fixture
     assert got == {mp["id"]}

@@ -151,15 +151,20 @@ def test_small_rewrite_column_drift_raises(tmp_path):
     assert list(stage.iterdir()) == []
 
 
-def test_affected_way_ids_via_reverse_index(spark, built):
-    nodes, ways, split, path = built
-    from coords_spark.operators import resolve
+def test_affected_way_ids_via_reverse_index(spark, built, tmp_path):
+    """The two blast-radius implementations that remain agree: the
+    on-the-fly explode of apply_node_diff and the lookup in a persistent
+    node->ways reverse-index store (the streaming apply's)."""
+    from coords_spark.operators import rindex as RI
 
-    rindex = resolve.reverse_index(ways)
+    nodes, ways, split, path = built
+    store = str(tmp_path / "rindex_nw")
+    RI.build_rindex_store(spark, ways.select("id", "refs"), store)
     nid = ways.select(F.explode("refs").alias("id")).limit(1).collect()[0]["id"]
     diff = spark.createDataFrame([(int(nid), 0, 0)], "id long, lat int, lon int")
     a = sorted(r["way_id"] for r in update.affected_way_ids(ways, diff).collect())
-    b = sorted(r["way_id"] for r in update.affected_way_ids(ways, diff, rindex=rindex).collect())
+    hit, _ = RI.rindex_lookup(spark, store, diff.select("id"))
+    b = sorted(r["way_id"] for r in hit.collect())
     assert a == b and len(a) >= 1
 
 

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from coords_spark.fixtures import gen_update_diffs, gen_update_world
 from coords_spark.operators import entity_store as ES
 from coords_spark.operators import geometry, resolve, tiling, update
+from coords_spark.operators import rindex as RI
 from coords_spark.sources.icepick import IcepickTable
 from coords_spark.streaming import update_stream as US
 
@@ -59,7 +60,21 @@ def world(spark, tmp_path_factory):
     update.build_relation_chunk_table(
         spark, rels, resolve.resolve_ways(ways, nodes), rel_table, split
     )
-    return d, stores, way_table, rel_table, nodes, ways, rels
+
+    # the reverse-index stores the diff apply derives its blast radius from
+    rindex = {"rindex_store": str(d / "rindex_nw"), "rel_rindex_store": str(d / "rindex_wr")}
+    RI.build_rindex_store(spark, ways.select("id", "refs"), rindex["rindex_store"], id_shift=6)
+    RI.build_rindex_store(
+        spark,
+        rels.select(
+            "id", F.expr("transform(filter(members, m -> m.mtype = 1), m -> m.ref)").alias("refs")
+        ),
+        rindex["rel_rindex_store"],
+        ref_col="way_id",
+        ids_col="relation_ids",
+        id_shift=3,
+    )
+    return d, stores, way_table, rel_table, nodes, ways, rels, rindex
 
 
 def _diff_rows(spark, rows):
@@ -68,7 +83,7 @@ def _diff_rows(spark, rows):
 
 def _final_entities(spark, world):
     """Expected final entity state after both diff batches (see _batches)."""
-    _, _, _, _, nodes, ways, rels = world
+    _, _, _, _, nodes, ways, rels, _ = world
     b1, b2 = _batches(spark, world)
     out = {}
     for base, kind, schema, cols in (
@@ -112,7 +127,7 @@ REL_COLS = ["relation_id", "poly_idx", "chunk_id", "to_json(outer) as o", "to_js
 
 
 def test_stream_applies_and_composes(spark, world, tmp_path):
-    d, stores, way_table, rel_table, nodes, ways, rels = world
+    d, stores, way_table, rel_table, nodes, ways, rels, rindex = world
     b1, b2 = _batches(spark, world)
     diff_dir = str(tmp_path / "diffs")
     os.makedirs(diff_dir)
@@ -136,6 +151,7 @@ def test_stream_applies_and_composes(spark, world, tmp_path):
         way_table, rel_table,
         checkpoint_dir=str(tmp_path / "ckpt"),
         dirty_table=dirty_table,
+        **rindex,
     )
     q.processAllAvailable()
     q.stop()
@@ -194,7 +210,7 @@ def test_stream_applies_and_composes(spark, world, tmp_path):
     # batches as already processed — zero new table versions anywhere
     versions = {
         p: IcepickTable(p).current_manifest()["version"]
-        for p in (*stores.values(), way_table, rel_table, dirty_table)
+        for p in (*stores.values(), way_table, rel_table, dirty_table, *rindex.values())
     }
     q2 = US.stream_apply_diffs(
         US.stream_diffs_from_dir(spark, diff_dir + "/*"),
@@ -202,6 +218,7 @@ def test_stream_applies_and_composes(spark, world, tmp_path):
         way_table, rel_table,
         checkpoint_dir=str(tmp_path / "ckpt"),
         dirty_table=dirty_table,
+        **rindex,
     )
     q2.processAllAvailable()
     q2.stop()
@@ -211,7 +228,7 @@ def test_stream_applies_and_composes(spark, world, tmp_path):
     # direct replay of a single batch (same group) is a per-table no-op
     stats = US.apply_diff_batch(
         spark, b1, stores["nodes"], stores["ways"], stores["rels"],
-        way_table, rel_table, group="diff-0", dirty_table=dirty_table,
+        way_table, rel_table, group="diff-0", dirty_table=dirty_table, **rindex,
     )
     assert stats["nodes"] == "replayed" and stats["way_chunks"] == "replayed"
     assert stats["dirty_tiles"] == "replayed"
