@@ -37,7 +37,8 @@ PER_CELL_COLLECT_CAP = 4_000_000
 # a diff-sized rewrite (the streaming steady state) writes its staged
 # rows as ONE sorted file — no repartitionByRange, so no boundary-sampling
 # re-pass and one job instead of four. Past these thresholds the range
-# write returns.
+# write returns. SMALL_REWRITE_ROWS also caps the manifest rows of the
+# files a viewport render reads on the driver (render_tile_images).
 SMALL_REWRITE_BYTES = 48 << 20
 SMALL_REWRITE_ROWS = 200_000
 
@@ -50,7 +51,9 @@ SMALL_LEVEL_TILES = 16384
 # the driver-side overzoom decodes/encodes every child single-threaded, so
 # its cap is the per-level CHILD count where ~1 s of local codec work
 # still beats a Spark shuffle + UDF job — far smaller than the write cap
-# (a 2.2k-child level measured SLOWER locally)
+# (a 2.2k-child level measured SLOWER locally). The viewport render's
+# driver path (render_tile_images) renders at most this many tiles, the
+# same single-threaded per-tile codec cost.
 SMALL_OVERZOOM_TILES = 512
 
 # a pyramid refresh level with at most this many dirty tiles writes ONE

@@ -109,6 +109,66 @@ def segment_pieces(a: int, b: int, c: int, d: int, s: int = 256):
         )
 
 
+# largest segment span (pixels) whose span * sample index fits int64
+_MAX_SPAN = 3_037_000_499
+
+
+def segment_tile_pieces(offs, gx, gy, tp: int = 256) -> dict[str, np.ndarray]:
+    """The piece rule plus the piece-rect tile fan-out, vectorized over
+    whole polylines (repeat/cumsum, as rasterize_segments): `offs` are
+    CSR offsets of the polylines into the global pixel vertex arrays
+    `gx`/`gy`. One output row per (segment piece, touched tile), as
+    arrays: line (polyline index), seg (segment index within it), tx, ty,
+    x0, y0, x1, y1 (the FULL segment), k_lo, k_hi (the piece's samples).
+    Pieces are segment_pieces' `tp`-sample chunks; each fans to every
+    tile of the rect its endpoint samples span, tx-major. A polyline of
+    fewer than two vertices yields nothing. Same int64 domain as the SQL
+    twin (render._segment_tile_fanout): span * sample index must stay
+    below 2^63, which holds for every zoom <= 23 at 256px tiles; a longer
+    segment raises, as the SQL twin's ANSI overflow does, where numpy
+    would silently wrap."""
+    offs = np.asarray(offs, dtype=np.int64)
+    gx = np.asarray(gx, dtype=np.int64)
+    gy = np.asarray(gy, dtype=np.int64)
+
+    def fan(cnt):
+        # row -> source index and rank within it, for `cnt` rows per source
+        src = np.repeat(np.arange(cnt.size), cnt)
+        start = np.cumsum(cnt) - cnt
+        return src, np.arange(src.size, dtype=np.int64) - start[src]
+
+    line, seg = fan(np.maximum(np.diff(offs) - 1, 0))
+    v = offs[:-1][line] + seg
+    x0, y0, x1, y1 = gx[v], gy[v], gx[v + 1], gy[v + 1]
+    n1 = np.maximum(np.abs(x1 - x0), np.abs(y1 - y0))
+    if n1.size and int(n1.max()) > _MAX_SPAN:
+        raise OverflowError(f"segment span {int(n1.max())} px overflows the int64 piece walk")
+    n1c = np.maximum(n1, 1)
+    ps, j = fan(n1 // tp + 1)
+    k_lo = j * tp
+    k_hi = np.minimum(k_lo + tp - 1, n1[ps])
+    ax = x0[ps] + ((x1 - x0)[ps] * k_lo) // n1c[ps]
+    ay = y0[ps] + ((y1 - y0)[ps] * k_lo) // n1c[ps]
+    bx = x0[ps] + ((x1 - x0)[ps] * k_hi) // n1c[ps]
+    by = y0[ps] + ((y1 - y0)[ps] * k_hi) // n1c[ps]
+    tx_lo, ty_lo = np.minimum(ax, bx) // tp, np.minimum(ay, by) // tp
+    n_ty = np.maximum(ay, by) // tp - ty_lo + 1
+    pt, r = fan((np.maximum(ax, bx) // tp - tx_lo + 1) * n_ty)
+    s = ps[pt]
+    return {
+        "line": line[s],
+        "seg": seg[s],
+        "tx": tx_lo[pt] + r // n_ty[pt],
+        "ty": ty_lo[pt] + r % n_ty[pt],
+        "x0": x0[s],
+        "y0": y0[s],
+        "x1": x1[s],
+        "y1": y1[s],
+        "k_lo": k_lo[pt],
+        "k_hi": k_hi[pt],
+    }
+
+
 # ---------------------------------------------------------------------------
 # polygon FILL (VERDICT r6 ask #3) — scanline even/odd over integer pixels
 # ---------------------------------------------------------------------------

@@ -7,17 +7,29 @@ computable and distributed: viewport -> pruned chunk read (S5) -> way
 polylines -> per-tile deterministic uint8 masks, encoded with the house
 codec (kernels/codec.py).
 
-Plan shape (the 100 TB posture):
-  1. `ingest.render_read` prunes to the viewport BEFORE any Python runs
-     (manifest multi-range + row-group + exact bbox predicate);
-  2. ONE Arrow exchange projects pts -> global pixel coords at the target
-     zoom (vectorized mercator, only the pts column ships);
-  3. segment + tile fan-out is pure JVM (inline explode of transform/
-     sequence — generators stay fused with their explode, CLAUDE.md);
-  4. ONE shuffle keyed by (tile_x, tile_y) — bounded by the viewport's
-     tile count, never by table size;
-  5. rasterize+encode runs where the groups land; payload bytes are
-     PRODUCED worker-side and never round-trip.
+Plan shape — two paths for a chunk-table render, chosen by two sizes
+known from the bbox and the manifest before any Spark job
+(_viewport_tiles_arrow):
+  * DRIVER, when the viewport holds at most bounded.SMALL_OVERZOOM_TILES
+    tiles AND its pruned files hold at most bounded.SMALL_REWRITE_ROWS
+    manifest rows: the same pruning (ingest.viewport_scan), a pyarrow read
+    (IcepickTable.read_arrow), the same anchor predicate, the numpy
+    fan-out (kernels/raster.py segment_tile_pieces) and the shared
+    per-tile body (_raster_tile); the result returns as a local relation,
+    so the render runs no Spark job and collecting it runs one (per-job
+    fixed cost dominates a 2x2-tile viewport).
+  * SPARK otherwise, and whenever the caller passes `ways=` or a work
+    list (`only_tiles=`) — the 100 TB posture:
+    1. `ingest.render_read` prunes to the viewport BEFORE any Python runs
+       (manifest multi-range + row-group + exact bbox predicate);
+    2. ONE Arrow exchange projects pts -> global pixel coords at the
+       target zoom (vectorized mercator, only the pts column ships);
+    3. segment + tile fan-out is pure JVM (inline explode of transform/
+       sequence — generators stay fused with their explode);
+    4. ONE shuffle keyed by (tile_x, tile_y) — bounded by the viewport's
+       tile count, never by table size;
+    5. rasterize+encode runs where the groups land; payload bytes are
+       PRODUCED worker-side and never round-trip.
 
 Ways shorter than 2 vertices emit no segments (nothing to draw).
 """
@@ -65,21 +77,28 @@ def _list_offsets(arr: pa.Array) -> np.ndarray:
     return np.concatenate(([0], np.cumsum(lens)))
 
 
+def _project(pts, scale: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """A pts polyline column -> (CSR offsets, gx, gy): every vertex in
+    global pixel coords at the target zoom (vectorized mercator)."""
+    if isinstance(pts, pa.ChunkedArray):
+        pts = pts.combine_chunks()
+    offs = _list_offsets(pts)
+    flat = pts.flatten()
+    lat = flat.field("lat").to_numpy(zero_copy_only=False)
+    lon = flat.field("lon").to_numpy(zero_copy_only=False)
+    ux, uy = mercator.latlon_i32_to_unit(lat, lon)
+    gx = np.minimum((ux * scale).astype(np.int64), scale - 1)
+    gy = np.minimum((uy * scale).astype(np.int64), scale - 1)
+    return offs, gx, gy
+
+
 def _pix_udf(scale: int):
     """Arrow UDF projecting a pts polyline to global pixel coords at the
-    target zoom (vectorized mercator; only the pts column ships)."""
+    target zoom (_project; only the pts column ships)."""
 
     @F.arrow_udf("array<struct<gx: bigint, gy: bigint>>")
     def _pix(pts: pa.Array) -> pa.Array:
-        if isinstance(pts, pa.ChunkedArray):
-            pts = pts.combine_chunks()
-        offs = _list_offsets(pts)
-        flat = pts.flatten()
-        lat = flat.field("lat").to_numpy(zero_copy_only=False)
-        lon = flat.field("lon").to_numpy(zero_copy_only=False)
-        ux, uy = mercator.latlon_i32_to_unit(lat, lon)
-        gx = np.minimum((ux * scale).astype(np.int64), scale - 1)
-        gy = np.minimum((uy * scale).astype(np.int64), scale - 1)
+        offs, gx, gy = _project(pts, scale)
         vals = pa.StructArray.from_arrays(
             [pa.array(gx, pa.int64()), pa.array(gy, pa.int64())], names=["gx", "gy"]
         )
@@ -179,6 +198,90 @@ def _segment_tile_fanout(ways: DataFrame, scale: int, tp: int) -> DataFrame:
     )
 
 
+# one viewport tile row: the columns both render paths return
+_TILE_SCHEMA = pa.schema(
+    [
+        ("tile_x", pa.int64()),
+        ("tile_y", pa.int64()),
+        ("n_ways", pa.int64()),
+        ("n_px", pa.int64()),
+        ("px_crc", pa.int64()),
+        ("payload", pa.binary()),
+    ]
+)
+
+
+def _columns(rows: list[tuple], fields: list[pa.Field]) -> list[pa.Array]:
+    """Row tuples -> one Arrow array per field, typed by the field."""
+    return [pa.array([r[j] for r in rows], f.type) for j, f in enumerate(fields)]
+
+
+def _raster_tile(wid, x0, y0, x1, y1, k_lo, k_hi, tp: int, fmt: str) -> tuple:
+    """ONE tile from its segment pieces (tile-local pixel coords) ->
+    (n_ways, n_px, px_crc, payload) — the single statement of the per-tile
+    rule, shared by the raster UDF and the driver-side viewport path."""
+    import zlib
+
+    img = raster.rasterize_segments(x0, y0, x1, y1, tp, tp, k_lo=k_lo, k_hi=k_hi)
+    return (
+        int(np.unique(wid).size),
+        int(np.count_nonzero(img)),
+        zlib.crc32(img.tobytes()),
+        codec.encode_image(np.repeat(img[:, :, None], 3, axis=2), fmt, _TILE_PNGZ_LEVEL),
+    )
+
+
+def _viewport_tiles_arrow(
+    table_path: str,
+    bbox,
+    zoom: int,
+    tile_px: int,
+    base_level: int,
+    fmt: str,
+) -> pa.Table | None:
+    """The driver path of render_tile_images: the viewport's tiles as one
+    pa.Table (_TILE_SCHEMA, sorted by tile), or None when either size
+    known before any job is over its cap — the viewport's tile count
+    (bounded.SMALL_OVERZOOM_TILES: the same single-threaded per-tile codec
+    cost as the driver-side overzoom) or the manifest rows of its pruned
+    files (bounded.SMALL_REWRITE_ROWS). Reads the pruned files with
+    pyarrow, keeps rows by the anchor predicate, fans segment pieces out
+    to tiles in numpy (raster.segment_tile_pieces) and renders each tile
+    with _raster_tile: zero Spark jobs."""
+    tx0, tx1, ty0, ty1 = bbox_tile_range(bbox, zoom, tile_px)
+    if (tx1 - tx0 + 1) * (ty1 - ty0 + 1) > bounded.SMALL_OVERZOOM_TILES:
+        return None
+    scan = ingest.viewport_scan(table_path, bbox, zoom, base_level)
+    if scan.rows > bounded.SMALL_REWRITE_ROWS:
+        return None
+    ways = scan.table.read_arrow(scan.paths, ["way_id", "pts", "lat", "lon"])
+    ways = ways.filter(scan.anchor_mask(ways.column("lat"), ways.column("lon")))
+    tp = tile_px
+    offs, gx, gy = _project(ways.column("pts"), tp << zoom)
+    p = raster.segment_tile_pieces(offs, gx, gy, tp)
+    tx, ty = p["tx"], p["ty"]
+    keep = (tx >= tx0) & (tx <= tx1) & (ty >= ty0) & (ty <= ty1)
+    order = np.flatnonzero(keep)
+    order = order[np.lexsort((ty[order], tx[order]))]
+    wid = ways.column("way_id").to_numpy()[p["line"][order]]
+    tx, ty = tx[order], ty[order]
+    x0, y0 = p["x0"][order] - tx * tp, p["y0"][order] - ty * tp
+    x1, y1 = p["x1"][order] - tx * tp, p["y1"][order] - ty * tp
+    k_lo, k_hi = p["k_lo"][order], p["k_hi"][order]
+    first = np.ones(tx.size, bool)
+    first[1:] = (tx[1:] != tx[:-1]) | (ty[1:] != ty[:-1])
+    starts = np.flatnonzero(first)
+    ends = np.append(starts[1:], tx.size)
+    rows = [
+        (int(tx[a]), int(ty[a]))
+        + _raster_tile(
+            wid[a:b], x0[a:b], y0[a:b], x1[a:b], y1[a:b], k_lo[a:b], k_hi[a:b], tp, fmt
+        )
+        for a, b in zip(starts, ends)
+    ]
+    return pa.Table.from_arrays(_columns(rows, list(_TILE_SCHEMA)), schema=_TILE_SCHEMA)
+
+
 def render_tile_images(
     spark,
     table_path: str | None,
@@ -198,16 +301,26 @@ def render_tile_images(
     when the caller already holds the geometry (e.g. re-rendering an
     update's dirty tiles from post-diff entity stores).
 
+    A table path with no work list whose viewport is under both caps of
+    _viewport_tiles_arrow renders on the driver and returns its table as
+    a local relation (bounded.arrow_frame): this call runs no Spark job
+    and collecting the result runs one. Otherwise the Spark plan below.
+
     `only_tiles` (list of (tx, ty)) restricts the render to a WORK LIST
     BEFORE the rasterize shuffle — semantically identical to rendering the
     viewport and keeping those tiles, but the discarded tiles are never
     rasterized (the r7 fix that made dirty re-renders dirty-proportional
     in compute, not just I/O)."""
+    if ways is None:
+        tbl = None
+        if only_tiles is None:
+            tbl = _viewport_tiles_arrow(table_path, bbox, zoom, tile_px, base_level, fmt)
+        if tbl is not None:
+            return bounded.arrow_frame(spark, tbl)
+        ways = ingest.render_read(spark, table_path, bbox, zoom, base_level=base_level)
     scale = tile_px << zoom
     tx0, tx1, ty0, ty1 = bbox_tile_range(bbox, zoom, tile_px)
     tp = tile_px
-    if ways is None:
-        ways = ingest.render_read(spark, table_path, bbox, zoom, base_level=base_level)
     tiles = _segment_tile_fanout(ways, scale, tp).filter(
         f"tx BETWEEN {tx0} AND {tx1} AND ty BETWEEN {ty0} AND {ty1}"
     )
@@ -237,40 +350,21 @@ def render_tile_images(
 
     @F.arrow_udf("struct<n_ways: bigint, n_px: bigint, px_crc: bigint, payload: binary>")
     def _raster(segs: pa.Array) -> pa.Array:
-        import zlib
-
         if isinstance(segs, pa.ChunkedArray):
             segs = segs.combine_chunks()
         offs = _list_offsets(segs)
         flat = segs.flatten()
-        wid = flat.field("w").to_numpy(zero_copy_only=False)
-        x0 = flat.field("x0").to_numpy(zero_copy_only=False)
-        y0 = flat.field("y0").to_numpy(zero_copy_only=False)
-        x1 = flat.field("x1").to_numpy(zero_copy_only=False)
-        y1 = flat.field("y1").to_numpy(zero_copy_only=False)
-        k_lo = flat.field("k_lo").to_numpy(zero_copy_only=False)
-        k_hi = flat.field("k_hi").to_numpy(zero_copy_only=False)
-        n_ways_l, n_px, crcs, payloads = [], [], [], []
-        for i in range(len(offs) - 1):
-            sl = slice(offs[i], offs[i + 1])
-            img = raster.rasterize_segments(
-                x0[sl], y0[sl], x1[sl], y1[sl], tp, tp,
-                k_lo=k_lo[sl], k_hi=k_hi[sl],
-            )
-            n_ways_l.append(int(np.unique(wid[sl]).size))
-            n_px.append(int(np.count_nonzero(img)))
-            crcs.append(zlib.crc32(img.tobytes()))
-            payloads.append(
-                codec.encode_image(np.repeat(img[:, :, None], 3, axis=2), fmt, _TILE_PNGZ_LEVEL)
-            )
+        cols = [
+            flat.field(f).to_numpy(zero_copy_only=False)
+            for f in ("w", "x0", "y0", "x1", "y1", "k_lo", "k_hi")
+        ]
+        out = [
+            _raster_tile(*(c[offs[i] : offs[i + 1]] for c in cols), tp, fmt)
+            for i in range(len(offs) - 1)
+        ]
+        fields = list(_TILE_SCHEMA)[2:]
         return pa.StructArray.from_arrays(
-            [
-                pa.array(n_ways_l, pa.int64()),
-                pa.array(n_px, pa.int64()),
-                pa.array(crcs, pa.int64()),
-                pa.array(payloads, pa.binary()),
-            ],
-            names=["n_ways", "n_px", "px_crc", "payload"],
+            _columns(out, fields), names=[f.name for f in fields]
         )
 
     return grouped.select(
@@ -390,6 +484,12 @@ def overzoom_tiles(tiles: DataFrame, tile_px: int = 256, fmt: str = "pngz") -> D
     )
 
 
+def _tile_rows(tbl: pa.Table) -> list[tuple]:
+    """A render_tile_images table as row tuples (tile_x, tile_y, n_ways,
+    n_px, px_crc, payload) — _level_table_arrow's input shape."""
+    return list(zip(*(tbl.column(f.name).to_pylist() for f in _TILE_SCHEMA)))
+
+
 def _level_table_arrow(z: int, parents: list) -> "pa.Table":
     """(zoom, tile_x, tile_y, n_src, n_px, px_crc, payload) pa.Table from
     overzoom_rows_local output."""
@@ -452,28 +552,33 @@ def render_tile_pyramid(
     count) before feeding the next, mirroring the write-z/read-z-minus-1
     shape a planet-scale pipeline uses against the tile sink."""
     cols = ["zoom", "tile_x", "tile_y", "n_src", "n_px", "px_crc", "payload"]
-    base_df = (
-        render_tile_images(spark, table_path, bbox, zoom, tile_px, base_level, fmt)
-        .withColumnRenamed("n_ways", "n_src")
-        .withColumn("zoom", F.lit(zoom).cast("long"))
-        .select(*cols)
-    )
     tx0, tx1, ty0, ty1 = bbox_tile_range(bbox, zoom, tile_px)
     tbl = None
     if (tx1 - tx0 + 1) * (ty1 - ty0 + 1) <= bounded.SMALL_OVERZOOM_TILES:
-        # viewport-bounded pyramid: collect the base level once (the only
-        # expensive subtree) and roll every coarser level driver-side via
+        # viewport-bounded pyramid: the base level comes to the driver
+        # once (rendered there when its rows fit, else collected from the
+        # Spark render) and every coarser level rolls up driver-side via
         # the shared _pool_group rule — replaces one localCheckpoint +
         # shuffle + UDF job per level with plain numpy over a few MB
-        tbl = bounded.bounded_arrow(base_df)
+        tbl = _viewport_tiles_arrow(table_path, bbox, zoom, tile_px, base_level, fmt)
+        if tbl is None:
+            tbl = bounded.bounded_arrow(
+                render_tile_images(spark, table_path, bbox, zoom, tile_px, base_level, fmt)
+            )
     if tbl is not None:
-        rows = list(zip(*(tbl.column(c).to_pylist() for c in cols[1:])))
+        rows = _tile_rows(tbl)
         parts = [_level_table_arrow(zoom, rows)]
         for z in range(zoom - 1, min_zoom - 1, -1):
             rows = overzoom_rows_local([(r[0], r[1], r[5]) for r in rows], tile_px, fmt)
             parts.append(_level_table_arrow(z, rows))
         return spark.createDataFrame(pa.concat_tables(parts))
-    base = base_df.localCheckpoint()
+    base = (
+        render_tile_images(spark, table_path, bbox, zoom, tile_px, base_level, fmt)
+        .withColumnRenamed("n_ways", "n_src")
+        .withColumn("zoom", F.lit(zoom).cast("long"))
+        .select(*cols)
+        .localCheckpoint()
+    )
     levels = [base]
     cur = base
     for z in range(zoom - 1, min_zoom - 1, -1):
@@ -518,17 +623,17 @@ def build_pyramid_table(
 
     t = IcepickTable.create(out_table_path)
 
-    def _commit(df: DataFrame, z: int) -> None:
+    def _commit(df: DataFrame | None, z: int, tbl: pa.Table | None = None) -> None:
         stage = tempfile.mkdtemp(prefix=f"pyr_z{z}_")
         # viewport-bounded levels (tile count known from the bbox BEFORE
         # any job) collect as Arrow and write their range-clustered files
         # driver-side: one job executes the render chain exactly once,
         # replacing localCheckpoint + range-sampling + write (the
         # checkpoint existed only to keep the sampling pass from
-        # re-rendering). Bigger levels keep that classic path.
+        # re-rendering). Bigger levels keep that classic path. A level
+        # already on the driver (`tbl`) writes with no job at all.
         tx0_, tx1_, ty0_, ty1_ = bbox_tile_range(bbox, z, tile_px)
-        tbl = None
-        if (tx1_ - tx0_ + 1) * (ty1_ - ty0_ + 1) <= bounded.SMALL_LEVEL_TILES:
+        if tbl is None and (tx1_ - tx0_ + 1) * (ty1_ - ty0_ + 1) <= bounded.SMALL_LEVEL_TILES:
             tbl = bounded.bounded_arrow(df)
         if tbl is not None:
             bounded.write_sorted(tbl, stage, _TILE_KEYS, level_partitions)
@@ -546,15 +651,19 @@ def build_pyramid_table(
         t.commit_staged(stage, group=f"z{z}", chunk_col="tile_x", extra_stats={"zoom": z})
 
     if f"z{zoom}" not in t.committed_groups():
-        base = (
-            render_tile_images(
-                spark, chunk_table_path, bbox, zoom, tile_px, base_level, fmt
+        tbl = _viewport_tiles_arrow(chunk_table_path, bbox, zoom, tile_px, base_level, fmt)
+        if tbl is not None:
+            _commit(None, zoom, _level_table_arrow(zoom, _tile_rows(tbl)))
+        else:
+            base = (
+                render_tile_images(
+                    spark, chunk_table_path, bbox, zoom, tile_px, base_level, fmt
+                )
+                .withColumnRenamed("n_ways", "n_src")
+                .withColumn("zoom", F.lit(zoom).cast("long"))
+                .select("zoom", "tile_x", "tile_y", "n_src", "n_px", "px_crc", "payload")
             )
-            .withColumnRenamed("n_ways", "n_src")
-            .withColumn("zoom", F.lit(zoom).cast("long"))
-            .select("zoom", "tile_x", "tile_y", "n_src", "n_px", "px_crc", "payload")
-        )
-        _commit(base, zoom)
+            _commit(base, zoom)
     import os as _os
 
     for z in range(zoom - 1, min_zoom - 1, -1):
@@ -863,7 +972,8 @@ def render_dirty_tiles(
     from coords_spark.kernels import zcurve
     from coords_spark.sources.icepick import IcepickTable
 
-    tiles = [(int(a), int(b)) for a, b in tiles]
+    # a set: a tile listed twice still renders as one row
+    tiles = sorted({(int(a), int(b)) for a, b in tiles})
     shift = zcurve.MAX_LEVEL - zoom
     ranges: list[tuple[int, int]] = []
     if len(tiles) > 256:
@@ -893,12 +1003,10 @@ def render_dirty_tiles(
     ways = t.read(spark, paths).filter(
         F.col("lat").between(lat0, lat1) & F.col("lon").between(lon0, lon1)
     ).select("way_id", "pts")
-    out = render_tile_images(
+    return render_tile_images(
         spark, None, bbox, zoom, tile_px, base_level, fmt, ways=ways,
         only_tiles=tiles,
     )
-    tiles_df = spark.createDataFrame(tiles, "tile_x long, tile_y long")
-    return out.join(F.broadcast(tiles_df), ["tile_x", "tile_y"])
 
 
 def dirty_tiles(
@@ -1138,24 +1246,15 @@ def render_polygon_tiles(
     or a pre-assembled `polys` DataFrame."""
     import zlib
 
-    from coords_spark.kernels import zcurve
-
     scale = tile_px << zoom
     tp = tile_px
     tx0, tx1, ty0, ty1 = bbox_tile_range(bbox, zoom, tile_px)
     if polys is None:
-        from coords_spark.sources.icepick import IcepickTable
-
-        lat0, lon0, lat1, lon1 = bbox
-        lat0, lat1 = min(lat0, lat1), max(lat0, lat1)
-        lon0, lon1 = min(lon0, lon1), max(lon0, lon1)
-        gx0, gy0, gx1, gy1 = ingest.bbox_grid(lat0, lon0, lat1, lon1)
-        ranges = zcurve.bbox_cover_ranges(gx0, gy0, gx1, gy1, zoom, max_level=base_level)
-        t = IcepickTable(table_path)
-        paths = t.data_paths_ranges(ranges)
-        polys = t.read(spark, paths).filter(
-            F.expr("element_at(outer, 1).lat").between(lat0, lat1)
-            & F.expr("element_at(outer, 1).lon").between(lon0, lon1)
+        scan = ingest.viewport_scan(table_path, bbox, zoom, base_level)
+        polys = scan.table.read(spark, scan.paths).filter(
+            scan.anchor_col(
+                F.expr("element_at(outer, 1).lat"), F.expr("element_at(outer, 1).lon")
+            )
         ).select("relation_id", "poly_idx", "outer", "inners")
 
     # materialize the projected rings ONCE: four consumers below (envelope,

@@ -35,6 +35,7 @@ import json
 import os
 import shutil
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 
 from coords_spark import bounded
@@ -249,6 +250,29 @@ class IcepickTable:
         if not paths:
             return spark.createDataFrame([], schema)
         return spark.read.schema(schema).parquet(*paths)
+
+    def read_arrow(self, paths: list[str], columns: list[str] | None = None):
+        """The zero-job twin of `read`: the data files `paths` (a pruned
+        subset of data_paths) as one pyarrow table, read with the manifest
+        schema; an empty `paths` is an empty table of that schema that
+        opens no file. A table without a schema stamp infers from the
+        files, as `read` does. `columns` projects the read."""
+        schema = self.arrow_schema()
+        if schema is None:
+            if paths:
+                return pq.read_table(paths, columns=columns)
+            all_paths = self.data_paths()
+            if not all_paths:
+                raise ValueError(
+                    f"{self.path} has no data file and no schema stamp: "
+                    "an empty read cannot be planned"
+                )
+            schema = pq.read_schema(all_paths[0])
+        if columns is not None:
+            schema = pa.schema([schema.field(c) for c in columns])
+        if not paths:
+            return schema.empty_table()
+        return pq.read_table(paths, columns=columns, schema=schema)
 
     def commit_staged(
         self,

@@ -287,3 +287,35 @@ def test_unstamped_table_reads_through_inference(spark, tmp_path):
     assert sorted(r["chunk_id"] for r in df.collect()) == [1, 2]
     empty = t.read(spark, [])
     assert empty.count() == 0 and empty.columns == ["chunk_id", "v"]
+
+
+def test_read_arrow_is_the_zero_job_twin_of_read(tmp_path, monkeypatch):
+    """IcepickTable.read_arrow: the pruned files with the manifest schema,
+    projected by `columns`; an empty path list is an empty table of that
+    schema and opens no file; an unstamped table infers from its files."""
+    t = IcepickTable.create(str(tmp_path / "t"))
+    t.commit_staged(_stage(tmp_path, "s1", [1, 2]), group="a")
+    t.commit_staged(_stage(tmp_path, "s2", [7]), group="b")
+    got = t.read_arrow(t.data_paths())
+    assert got.schema == t.arrow_schema()
+    assert sorted(got.column("chunk_id").to_pylist()) == [1, 2, 7]
+    assert t.read_arrow(t.data_paths(5, 9), ["v"]).to_pylist() == [{"v": 0}]
+
+    def no_read(*a, **kw):
+        raise AssertionError("a data file was opened")
+
+    with monkeypatch.context() as m:
+        m.setattr(pq, "read_table", no_read)
+        m.setattr(pq, "read_schema", no_read)
+        empty = t.read_arrow([])
+        assert empty.num_rows == 0 and empty.schema == t.arrow_schema()
+        assert t.read_arrow([], ["v"]).schema.names == ["v"]
+
+    man = t.current_manifest()
+    del man["schema_ipc_b64"]
+    man["version"] += 1
+    t._write_manifest(man)
+    assert t.arrow_schema() is None
+    assert sorted(t.read_arrow(t.data_paths()).column("chunk_id").to_pylist()) == [1, 2, 7]
+    empty = t.read_arrow([])
+    assert empty.num_rows == 0 and empty.column_names == ["chunk_id", "v"]

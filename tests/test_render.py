@@ -4,6 +4,7 @@ an independently composed per-tile reference (transform -> tile fan-out ->
 scalar rasterize) on a real chunk table, and its payloads must decode back
 to the very mask the stats describe."""
 
+import os
 import zlib
 
 import numpy as np
@@ -145,12 +146,21 @@ def chunk_table(spark, tmp_path_factory):
     return path, resolved_rows
 
 
-def test_render_tiles_end_to_end(spark, chunk_table):
+# the chunk_table world's viewport: 15 tiles at zoom 8
+_VIEW = (int(50.0e7), int(-2.0e7), int(53.0e7), int(1.8e7))
+
+
+@pytest.mark.parametrize("path_kind", ["default", "distributed"])
+def test_render_tiles_end_to_end(spark, chunk_table, force_distributed, path_kind):
+    """Both render paths against the independent per-tile reference: the
+    default (the driver path at this size) and every cap at 0 (Spark)."""
     from coords_spark.operators import render
 
     path, resolved_rows = chunk_table
-    bbox = (int(50.0e7), int(-2.0e7), int(53.0e7), int(1.8e7))
+    bbox = _VIEW
     zoom, tile_px = 8, 256
+    if path_kind == "distributed":
+        force_distributed()
     got = render.render_tile_images(spark, path, bbox, zoom, tile_px).collect()
 
     want = _expected_tiles(resolved_rows, bbox, zoom, tile_px)
@@ -162,6 +172,218 @@ def test_render_tiles_end_to_end(spark, chunk_table):
         dec = codec.decode_image(bytes(r["payload"]), "pngz", tile_px, tile_px)
         assert np.array_equal(dec[:, :, 0], img)
         assert np.array_equal(dec[:, :, 0], dec[:, :, 1])
+
+
+def _lat_lon_for_px(px: int, py: int, scale: int) -> tuple[int, int]:
+    """Fixed-point (lat, lon) whose projection at `scale` lands on global
+    pixel (px, py) — bisection over the monotone mercator transform."""
+
+    def first(lo, hi, hit):  # smallest v in [lo, hi) with hit(v)
+        while lo < hi:
+            mid = (lo + hi) // 2
+            lo, hi = (lo, mid) if hit(mid) else (mid + 1, hi)
+        return lo
+
+    def gx(lon):
+        return min(int(mercator.latlon_i32_to_unit(0, lon)[0] * scale), scale - 1)
+
+    def gy(lat):
+        return min(int(mercator.latlon_i32_to_unit(lat, 0)[1] * scale), scale - 1)
+
+    lon = first(-1_800_000_000, 1_800_000_000, lambda v: gx(v) >= px)
+    lat = first(-850_000_000, 850_000_000, lambda v: gy(v) <= py)
+    assert (gx(lon), gy(lat)) == (px, py)
+    return lat, lon
+
+
+def _edge_case_ways(scale: int, tp: int):
+    """(way_id, [(px, py), ...]) in global pixels: the fan-out's edge
+    cases around tile (2000, 1300)."""
+    x, y = 2000 * tp, 1300 * tp
+    return [
+        (1, [(x + 10, y + 10), (x + 10, y + 10)]),  # zero-length segment
+        (2, [(x, y + 20), (x + tp - 1, y + 20)]),  # exactly tp samples
+        (3, [(x, y + 30), (x + tp, y + 30)]),  # tp + 1 samples
+        (4, [(x, y + 40), (x, y + 300)]),  # along a tile's left edge
+        (5, [(x - 1, y + 300), (x - 1, y + 40)]),  # along the last column before it
+        (6, [(x + 40, y), (x + 600, y)]),  # along a tile's top edge
+        (7, [(x + 77, y + 99)]),  # 1-vertex way
+        (8, [(x + 600, y + 700), (x + 3, y + 9), (x + 255, y + 256)]),  # reversed
+        (9, [(x, y), (x + 300_000, y + 50_000)]),  # continental: ~1,200 pieces
+    ]
+
+
+def _pieces_scalar(way_ids, offs, gx, gy, tp):
+    """segment_tile_pieces' rows from the scalar segment_pieces rule."""
+    out = []
+    for i, w in enumerate(way_ids):
+        for s in range(offs[i], offs[i + 1] - 1):
+            a, b, c, d = int(gx[s]), int(gy[s]), int(gx[s + 1]), int(gy[s + 1])
+            for k_lo, k_hi, ax, ay, bx, by in raster.segment_pieces(a, b, c, d, tp):
+                for tx in range(min(ax, bx) // tp, max(ax, bx) // tp + 1):
+                    for ty in range(min(ay, by) // tp, max(ay, by) // tp + 1):
+                        out.append((w, s - offs[i], tx, ty, a, b, c, d, k_lo, k_hi))
+    return sorted(out)
+
+
+@pytest.mark.parametrize("world", ["chunk_table", "edge_cases"])
+def test_segment_tile_pieces_matches_sql_fanout(spark, chunk_table, world):
+    """The numpy fan-out (raster.segment_tile_pieces, the driver render's
+    copy of the piece rule) equals the SQL one (_segment_tile_fanout) row
+    for row, and both equal the scalar segment_pieces expansion."""
+    import pyarrow as pa
+
+    from coords_spark.operators import render
+    from coords_spark.sources.icepick import IcepickTable
+
+    tp = 256
+    if world == "chunk_table":
+        zoom = 4  # its planet-spanning ways fan out to ~1.8M rows at zoom 8
+        t = IcepickTable(chunk_table[0])
+        ways = t.read_arrow(t.data_paths(), ["way_id", "pts"])
+    else:
+        zoom = 12
+        pts_type = pa.list_(
+            pa.struct([("node_id", pa.int64()), ("lat", pa.int32()), ("lon", pa.int32())])
+        )
+        cases = _edge_case_ways(tp << zoom, tp)
+        pts = []
+        for _w, line in cases:
+            lls = [_lat_lon_for_px(px, py, tp << zoom) for px, py in line]
+            pts.append([{"node_id": 0, "lat": la, "lon": lo} for la, lo in lls])
+        ways = pa.table(
+            {
+                "way_id": pa.array([w for w, _ in cases], pa.int64()),
+                "pts": pa.array(pts, pts_type),
+            }
+        )
+    scale = tp << zoom
+    offs, gx, gy = render._project(ways.column("pts"), scale)
+    if world == "edge_cases":  # the cases land on the pixels they name
+        assert [(int(a), int(b)) for a, b in zip(gx, gy)] == [
+            v for _w, line in _edge_case_ways(scale, tp) for v in line
+        ]
+    way_ids = ways.column("way_id").to_pylist()
+    p = raster.segment_tile_pieces(offs, gx, gy, tp)
+    cols = ["seg", "tx", "ty", "x0", "y0", "x1", "y1", "k_lo", "k_hi"]
+    got = sorted(
+        zip(np.asarray(way_ids, np.int64)[p["line"]].tolist(), *(p[c].tolist() for c in cols))
+    )
+    sql = sorted(
+        tuple(r)
+        for r in render._segment_tile_fanout(spark.createDataFrame(ways), scale, tp)
+        .select("way_id", "seg_idx", "tx", "ty", "x0", "y0", "x1", "y1", "k_lo", "k_hi")
+        .collect()
+    )
+    assert got == sql
+    assert got == _pieces_scalar(way_ids, offs, gx, gy, tp)
+    if world == "edge_cases":
+        per_way = {w: sum(1 for r in got if r[0] == w) for w, _ in _edge_case_ways(scale, tp)}
+        assert per_way[1] == 1 and per_way[2] == 1 and per_way[7] == 0
+        # tp + 1 samples: the last one is a piece of its own, in the next tile
+        assert {(r[2], r[8], r[9]) for r in got if r[0] == 3} == {(2000, 0, 255), (2001, 256, 256)}
+        assert {(r[2], r[3]) for r in got if r[0] == 4} == {(2000, 1300), (2000, 1301)}
+        assert {(r[2], r[3]) for r in got if r[0] == 5} == {(1999, 1300), (1999, 1301)}
+        assert per_way[9] > 1000
+
+
+def _finest_chunk_copy(src: str, dst: str) -> str:
+    """A copy of chunk table `src` chunked by the finest split set (each
+    row's chunk is its own envelope cell, capped at the base level), one
+    file per row, committed with pyarrow. A small world otherwise keeps
+    every row in the root chunk, whose file every viewport overlaps."""
+    import pyarrow as pa
+
+    from coords_spark import bounded
+    from coords_spark.kernels import zcurve
+    from coords_spark.operators import tiling
+    from coords_spark.sources.icepick import IcepickTable
+
+    t = IcepickTable(src)
+    tbl = t.read_arrow(t.data_paths())
+    cells = tbl.column("cell").to_numpy()
+    chunk = zcurve.z_ancestor(
+        cells, np.minimum(zcurve.cell_level(cells), tiling.DEFAULT_BASE_LEVEL)
+    )
+    tbl = tbl.set_column(
+        tbl.schema.get_field_index("chunk_id"), "chunk_id", pa.array(chunk, pa.int64())
+    )
+    stage = os.path.join(os.path.dirname(dst), "finest-stage")
+    os.makedirs(stage)
+    bounded.write_sorted(tbl, stage, ["chunk_id"], tbl.num_rows)
+    IcepickTable.create(dst).commit_staged(stage, chunk_col="chunk_id")
+    return dst
+
+
+def _tiles_arrow(df):
+    """A tile DataFrame collected as Arrow, rows ordered by tile."""
+    return df.toArrow().sort_by([("tile_x", "ascending"), ("tile_y", "ascending")])
+
+
+@pytest.mark.parametrize("case", ["in_cap", "empty", "over_rows_cap"])
+def test_render_driver_path_matches_spark(
+    spark, chunk_table, force_distributed, monkeypatch, request, tmp_path, case
+):
+    """The driver render and the Spark render return the same Arrow
+    output: field names and types, rows and payload bytes. An empty
+    mid-Pacific viewport of the local refresh world prunes to zero files
+    and opens none; a viewport whose pruned rows exceed SMALL_REWRITE_ROWS
+    takes the Spark path."""
+    import pyarrow.parquet as pq
+
+    from coords_spark import bounded
+    from coords_spark.operators import ingest, render
+
+    path, _ = chunk_table
+    zoom, tp = 8, 256
+    bbox = _VIEW
+    if case == "empty":
+        path = _finest_chunk_copy(
+            request.getfixturevalue("refresh_world")["paths"]["pre"], str(tmp_path / "finest")
+        )
+        bbox = (int(-45.0e7), int(-155.0e7), int(-44.0e7), int(-154.0e7))
+    scan = ingest.viewport_scan(path, bbox, zoom)
+    real = raster.segment_tile_pieces
+    fanouts = []
+
+    def counted(*a, **kw):
+        fanouts.append(1)
+        return real(*a, **kw)
+
+    monkeypatch.setattr(raster, "segment_tile_pieces", counted)
+    if case == "empty":
+        assert scan.paths == []
+
+        def no_read(*a, **kw):
+            raise AssertionError("a data file was opened")
+
+        monkeypatch.setattr(pq, "read_table", no_read)
+    if case == "over_rows_cap":
+        assert scan.rows > 0
+        monkeypatch.setattr(bounded, "SMALL_REWRITE_ROWS", scan.rows - 1)
+    got = _tiles_arrow(render.render_tile_images(spark, path, bbox, zoom, tp))
+    assert len(fanouts) == (0 if case == "over_rows_cap" else 1)
+    force_distributed()
+    want = _tiles_arrow(render.render_tile_images(spark, path, bbox, zoom, tp))
+    assert len(fanouts) == (0 if case == "over_rows_cap" else 1)
+    assert [(f.name, f.type) for f in got.schema] == [(f.name, f.type) for f in want.schema]
+    assert got.column_names == ["tile_x", "tile_y", "n_ways", "n_px", "px_crc", "payload"]
+    assert got.to_pylist() == want.to_pylist()
+    assert (got.num_rows == 0) == (case == "empty")
+
+
+def test_render_viewport_job_count(spark, chunk_table):
+    """Under the caps the viewport render runs no Spark job itself, and
+    collecting its result runs exactly one."""
+    from test_bounded import _with_jobs
+
+    from coords_spark.operators import render
+
+    path, _ = chunk_table
+    df, jobs = _with_jobs(spark, lambda: render.render_tile_images(spark, path, _VIEW, 8, 256))
+    assert jobs == 0
+    tbl, jobs = _with_jobs(spark, df.toArrow)
+    assert jobs == 1 and tbl.num_rows > 0
 
 
 def _pool2x_scalar(mosaic: np.ndarray, tp: int) -> np.ndarray:
@@ -429,6 +651,23 @@ def test_render_dirty_tiles_worklist(spark, chunk_table):
         render.render_dirty_tiles(spark, path, bbox, [(9999, 9999)], zoom, tp).count()
         == 0
     )
+
+
+def test_render_dirty_tiles_duplicate_entries(spark, chunk_table):
+    """A work list naming a tile twice re-renders it as ONE row, equal to
+    the viewport render's row for that tile."""
+    from coords_spark.operators import render
+
+    path, _ = chunk_table
+    zoom, tp = 8, 256
+    full = {
+        (r["tile_x"], r["tile_y"]): r
+        for r in render.render_tile_images(spark, path, _VIEW, zoom, tp).collect()
+    }
+    key = max(full, key=lambda k: full[k]["n_px"])
+    twice = render.render_dirty_tiles(spark, path, _VIEW, [key, key], zoom, tp).collect()
+    assert len(twice) == 1
+    assert bytes(twice[0]["payload"]) == bytes(full[key]["payload"])
 
 
 def test_build_pyramid_table(spark, chunk_table, tmp_path):
