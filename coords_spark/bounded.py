@@ -21,7 +21,8 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.errors import PySparkTypeError, UnsupportedOperationException
 from pyspark.sql import DataFrame
-from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
+from pyspark.sql.types import StructType
 
 # upsert planning collects the diff's distinct ids when they fit under
 # this cap (one Spark job instead of three); bigger diffs keep the fully
@@ -37,8 +38,11 @@ PER_CELL_COLLECT_CAP = 4_000_000
 # a diff-sized rewrite (the streaming steady state) writes its staged
 # rows as ONE sorted file — no repartitionByRange, so no boundary-sampling
 # re-pass and one job instead of four. Past these thresholds the range
-# write returns. SMALL_REWRITE_ROWS also caps the manifest rows of the
-# files a viewport render reads on the driver (render_tile_images).
+# write returns. The same two caps are the shared viewport gate
+# (ingest.ViewportScan.read_arrow): a viewport whose pruned files hold at
+# most SMALL_REWRITE_ROWS manifest rows and SMALL_REWRITE_BYTES on-disk
+# bytes is read on the driver with pyarrow, by the viewport fetch
+# (ingest.render_read) and the viewport tile render (render_tile_images).
 SMALL_REWRITE_BYTES = 48 << 20
 SMALL_REWRITE_ROWS = 200_000
 
@@ -82,13 +86,24 @@ def bounded_arrow(df: DataFrame, cap: int | None = None) -> pa.Table | None:
     return tbl if tbl.num_rows <= cap else None
 
 
+def spark_schema(schema: pa.Schema) -> StructType:
+    """The Spark schema of Arrow `schema`. A tz-less Arrow timestamp maps
+    to TIMESTAMP_NTZ, the type Spark's own parquet footer inference gives
+    the same column, so a driver-side table and a Spark read of the same
+    files agree on every type."""
+    return from_arrow_schema(schema, prefer_timestamp_ntz=True)
+
+
 def arrow_frame(spark, tbl: pa.Table) -> DataFrame:
     """`tbl`, already on the driver, as a DataFrame over a local relation:
     reading it back runs no scan of a checkpoint or a file. Each column is
     rebuilt as one array, because createDataFrame rejects a column with
-    zero chunks (what filtering a table down to no rows leaves)."""
+    zero chunks (what filtering a table down to no rows leaves). Its types
+    are spark_schema's, those of a Spark read of the same parquet."""
     cols = [c.combine_chunks() for c in tbl.columns]
-    return spark.createDataFrame(pa.Table.from_arrays(cols, schema=tbl.schema))
+    return spark.createDataFrame(
+        pa.Table.from_arrays(cols, schema=tbl.schema), schema=spark_schema(tbl.schema)
+    )
 
 
 def write_sorted(tbl: pa.Table, stage: str, sort_keys: list[str], n_files: int) -> None:

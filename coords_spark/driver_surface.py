@@ -2713,7 +2713,6 @@ def osc_update_render_stats(spark, sf):
                 spark, None, world_bbox, zoom=12, tile_px=256, ways=post_ways,
                 only_tiles=dirty_list,
             )
-            .join(F.broadcast(dirty_base), ["tile_x", "tile_y"])
             .select("tile_x", "tile_y", "n_ways", "n_px", "px_crc")
             .orderBy("tile_x", "tile_y")
             .localCheckpoint()

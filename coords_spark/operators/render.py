@@ -12,16 +12,18 @@ known from the bbox and the manifest before any Spark job
 (_viewport_tiles_arrow):
   * DRIVER, when the viewport holds at most bounded.SMALL_OVERZOOM_TILES
     tiles AND its pruned files hold at most bounded.SMALL_REWRITE_ROWS
-    manifest rows: the same pruning (ingest.viewport_scan), a pyarrow read
-    (IcepickTable.read_arrow), the same anchor predicate, the numpy
+    manifest rows and bounded.SMALL_REWRITE_BYTES on-disk bytes: the same
+    pruning and the same anchor predicate, read with pyarrow
+    (ingest.ViewportScan.read_arrow, render_read's driver read), the numpy
     fan-out (kernels/raster.py segment_tile_pieces) and the shared
     per-tile body (_raster_tile); the result returns as a local relation,
     so the render runs no Spark job and collecting it runs one (per-job
     fixed cost dominates a 2x2-tile viewport).
   * SPARK otherwise, and whenever the caller passes `ways=` or a work
     list (`only_tiles=`) — the 100 TB posture:
-    1. `ingest.render_read` prunes to the viewport BEFORE any Python runs
-       (manifest multi-range + row-group + exact bbox predicate);
+    1. `ingest.render_read` prunes to the viewport before any geometry
+       work (manifest multi-range pruning + exact bbox predicate; a
+       driver read under its own caps, else a pruned parquet scan);
     2. ONE Arrow exchange projects pts -> global pixel coords at the
        target zoom (vectorized mercator, only the pts column ships);
     3. segment + tile fan-out is pure JVM (inline explode of transform/
@@ -240,22 +242,22 @@ def _viewport_tiles_arrow(
     fmt: str,
 ) -> pa.Table | None:
     """The driver path of render_tile_images: the viewport's tiles as one
-    pa.Table (_TILE_SCHEMA, sorted by tile), or None when either size
-    known before any job is over its cap — the viewport's tile count
+    pa.Table (_TILE_SCHEMA, sorted by tile), or None when a size known
+    before any job is over its cap — first the viewport's tile count
     (bounded.SMALL_OVERZOOM_TILES: the same single-threaded per-tile codec
-    cost as the driver-side overzoom) or the manifest rows of its pruned
-    files (bounded.SMALL_REWRITE_ROWS). Reads the pruned files with
-    pyarrow, keeps rows by the anchor predicate, fans segment pieces out
-    to tiles in numpy (raster.segment_tile_pieces) and renders each tile
-    with _raster_tile: zero Spark jobs."""
+    cost as the driver-side overzoom), then the rows and bytes of its
+    pruned files (ingest.ViewportScan.read_arrow, the gate every
+    driver-side viewport read shares). Fans the kept ways' segment pieces
+    out to tiles in numpy (raster.segment_tile_pieces) and renders each
+    tile with _raster_tile: zero Spark jobs."""
     tx0, tx1, ty0, ty1 = bbox_tile_range(bbox, zoom, tile_px)
     if (tx1 - tx0 + 1) * (ty1 - ty0 + 1) > bounded.SMALL_OVERZOOM_TILES:
         return None
-    scan = ingest.viewport_scan(table_path, bbox, zoom, base_level)
-    if scan.rows > bounded.SMALL_REWRITE_ROWS:
+    ways = ingest.viewport_scan(table_path, bbox, zoom, base_level).read_arrow(
+        ["way_id", "pts", "lat", "lon"]
+    )
+    if ways is None:
         return None
-    ways = scan.table.read_arrow(scan.paths, ["way_id", "pts", "lat", "lon"])
-    ways = ways.filter(scan.anchor_mask(ways.column("lat"), ways.column("lon")))
     tp = tile_px
     offs, gx, gy = _project(ways.column("pts"), tp << zoom)
     p = raster.segment_tile_pieces(offs, gx, gy, tp)

@@ -220,15 +220,11 @@ class IcepickTable:
         return pa.ipc.read_schema(pa.BufferReader(base64.b64decode(b64)))
 
     def spark_schema(self, version: int | None = None):
-        """Manifest schema as a Spark StructType (None if unstamped). A
-        tz-less Arrow timestamp maps to TIMESTAMP_NTZ, the type Spark's
-        own footer inference gives the same parquet column."""
+        """Manifest schema as a Spark StructType (None if unstamped), by
+        bounded.spark_schema: a tz-less Arrow timestamp is TIMESTAMP_NTZ,
+        the type Spark's own footer inference gives the same column."""
         s = self.arrow_schema(version)
-        if s is None:
-            return None
-        from pyspark.sql.pandas.types import from_arrow_schema
-
-        return from_arrow_schema(s, prefer_timestamp_ntz=True)
+        return None if s is None else bounded.spark_schema(s)
 
     def read(self, spark, paths: list[str]):
         """The one Spark read of this table's data files `paths` (a pruned

@@ -62,6 +62,19 @@ def test_bounded_arrow_query_error_raises(spark):
         bounded.bounded_arrow(df, 10)
 
 
+def test_arrow_frame_tzless_timestamp_is_ntz(spark, tmp_path):
+    """A tz-less Arrow timestamp comes back as TIMESTAMP_NTZ, the type a
+    Spark read of the same parquet column gives, and collects unchanged."""
+    tbl = pa.table({"ts": pa.array([0, 1_700_000_000_000_000, None], pa.timestamp("us"))})
+    pq.write_table(tbl, str(tmp_path / "ts.parquet"))
+    df = bounded.arrow_frame(spark, tbl)
+    spark_read = spark.read.parquet(str(tmp_path / "ts.parquet"))
+    assert df.schema.simpleString() == spark_read.schema.simpleString() == "struct<ts:timestamp_ntz>"
+    got = df.toArrow()
+    assert got.schema.field("ts").type == pa.timestamp("us")
+    assert got.column("ts").to_pylist() == tbl.column("ts").to_pylist()
+
+
 def _read_parts(stage):
     names = sorted(os.listdir(stage))
     return names, [pq.read_table(os.path.join(stage, n)) for n in names]

@@ -5,6 +5,7 @@ against the mini-COORDS oracle byte-for-byte and kill/resume-safe."""
 import os
 
 import numpy as np
+import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
@@ -226,6 +227,9 @@ def test_split_set_and_weights_forced_distributed(spark, images_df, force_distri
 _LONDON_BBOX = (
     int(50.0e7), int(-2.0e7), int(53.0e7), int(1.8e7)
 )  # (lat_min, lon_min, lat_max, lon_max) i32 — around the London hotspot
+_SMALL_BBOX = (int(51.2e7), int(-0.5e7), int(51.8e7), int(0.3e7))  # ~0.6 x 0.8 deg
+# mid-Pacific viewport far from every hotspot/coast fixture point
+_PACIFIC_BBOX = (int(-45.0e7), int(-155.0e7), int(-44.0e7), int(-154.0e7))
 
 
 def _bbox_filter(df, bbox):
@@ -233,7 +237,16 @@ def _bbox_filter(df, bbox):
     return df.filter(F.col("lat").between(lat0, lat1) & F.col("lon").between(lon0, lon1))
 
 
-def test_render_read_matches_bruteforce(spark, engine_result):
+@pytest.fixture(params=["default", "distributed"])
+def fetch_path(request, force_distributed):
+    """Run the test on both viewport fetch paths: the default (the driver
+    read at this size) and every cap at 0 (the Spark scan)."""
+    if request.param == "distributed":
+        force_distributed()
+    return request.param
+
+
+def test_render_read_matches_bruteforce(spark, engine_result, fetch_path):
     table, _, out = engine_result
     full = spark.read.parquet(*table.data_paths())
     for zoom in (4, 8, 12):
@@ -247,23 +260,20 @@ def test_render_read_matches_bruteforce(spark, engine_result):
         assert got == want and len(got) > 0, (zoom, len(got), len(want))
 
 
-def test_render_read_empty_viewport(spark, engine_result):
+def test_render_read_empty_viewport(spark, engine_result, fetch_path):
     table, _, out = engine_result
-    # mid-Pacific viewport far from every hotspot/coast fixture point
-    bbox = (int(-45.0e7), int(-155.0e7), int(-44.0e7), int(-154.0e7))
-    df = ingest.render_read(spark, out, bbox, zoom=10, base_level=BASE_LEVEL)
+    df = ingest.render_read(spark, out, _PACIFIC_BBOX, zoom=10, base_level=BASE_LEVEL)
     assert df.count() == 0
     assert "image_id" in df.columns  # schema survives the empty path
 
 
-def test_render_read_prunes_manifest_files(spark, engine_result):
+def test_render_read_prunes_manifest_files(spark, engine_result, fetch_path):
     """The multi-range manifest pruning must actually SKIP files whose chunk
     lineage cannot overlap a small viewport."""
     from coords_spark.kernels import zcurve
 
     table, _, out = engine_result
-    small = (int(51.2e7), int(-0.5e7), int(51.8e7), int(0.3e7))  # ~0.6 x 0.8 deg
-    gx0, gy0, gx1, gy1 = ingest.bbox_grid(*small)
+    gx0, gy0, gx1, gy1 = ingest.bbox_grid(*_SMALL_BBOX)
     ranges = zcurve.bbox_cover_ranges(gx0, gy0, gx1, gy1, zoom=12, max_level=BASE_LEVEL)
     pruned = table.data_paths_ranges(ranges)
     everything = table.data_paths()
@@ -271,9 +281,111 @@ def test_render_read_prunes_manifest_files(spark, engine_result):
     # and the pruned read still returns the exact bbox row set
     got = sorted(
         r[0]
-        for r in ingest.render_read(spark, out, small, 12, base_level=BASE_LEVEL)
+        for r in ingest.render_read(spark, out, _SMALL_BBOX, 12, base_level=BASE_LEVEL)
         .select("image_id").collect()
     )
     full = spark.read.parquet(*everything)
-    want = sorted(r[0] for r in _bbox_filter(full, small).select("image_id").collect())
+    want = sorted(r[0] for r in _bbox_filter(full, _SMALL_BBOX).select("image_id").collect())
     assert got == want
+
+
+def _timestamp_table(path: str) -> None:
+    """A stamped one-chunk table under London (level 12) with a tz-less
+    timestamp column, written with pyarrow."""
+    from coords_spark.kernels import mercator, zcurve
+
+    lat, lon = int(51.5e7), int(-0.1e7)
+    ux, uy = mercator.latlon_i32_to_unit(np.asarray([lat]), np.asarray([lon]))
+    gx, gy = zcurve.unit_to_grid(ux, uy)
+    chunk = int(zcurve.cell_from_point(gx, gy, BASE_LEVEL)[0])
+    stage = os.path.join(os.path.dirname(path), "ts-stage")
+    os.makedirs(stage)
+    pq.write_table(
+        pa.table(
+            {
+                "image_id": pa.array(["a", "b", "c", "d"]),
+                "lat": pa.array([lat, lat + 10, lat + 20, int(55.0e7)], pa.int32()),
+                "lon": pa.array([lon] * 4, pa.int32()),
+                "chunk_id": pa.array([chunk] * 4, pa.int64()),
+                "taken": pa.array([0, 1_700_000_000_000_000, None, 5], pa.timestamp("us")),
+            }
+        ),
+        os.path.join(stage, "part-0.parquet"),
+    )
+    IcepickTable.create(path).commit_staged(stage, group="g")
+
+
+def _sorted_rows(tbl):
+    return sorted(tbl.to_pylist(), key=repr)
+
+
+@pytest.mark.parametrize(
+    "case", ["in_cap", "empty", "over_rows_cap", "over_bytes_cap", "timestamp"]
+)
+def test_render_read_driver_path_matches_spark(
+    spark, engine_result, force_distributed, monkeypatch, tmp_path, case
+):
+    """The driver fetch and the Spark fetch return the same Arrow output:
+    field names and types, and rows. The empty viewport opens no data
+    file; a viewport over either cap takes the Spark path; a tz-less
+    timestamp column keeps its Spark read type (TIMESTAMP_NTZ)."""
+    from coords_spark import bounded
+
+    _, _, out = engine_result
+    bbox, zoom = _SMALL_BBOX, 12
+    if case in ("empty", "timestamp"):
+        # engine_result keeps root-chunk files every viewport overlaps;
+        # the one deep chunk of this table prunes a Pacific viewport away
+        out = str(tmp_path / "ts")
+        _timestamp_table(out)
+        bbox = _PACIFIC_BBOX if case == "empty" else (
+            int(51.0e7), int(-0.5e7), int(52.0e7), int(0.5e7)
+        )
+    scan = ingest.viewport_scan(out, bbox, zoom, BASE_LEVEL)
+    assert (scan.paths == []) == (case == "empty")
+    if case == "empty":
+
+        def no_read(*a, **kw):
+            raise AssertionError("a data file was opened")
+
+        monkeypatch.setattr(pq, "read_table", no_read)
+    if case == "over_rows_cap":
+        monkeypatch.setattr(bounded, "SMALL_REWRITE_ROWS", scan.rows - 1)
+    if case == "over_bytes_cap":
+        monkeypatch.setattr(
+            bounded, "SMALL_REWRITE_BYTES", sum(map(os.path.getsize, scan.paths)) - 1
+        )
+    real = IcepickTable.read_arrow
+    driver_reads = []
+
+    def counted(self, *a, **kw):
+        driver_reads.append(1)
+        return real(self, *a, **kw)
+
+    monkeypatch.setattr(IcepickTable, "read_arrow", counted)
+    want_reads = int(case in ("in_cap", "timestamp"))
+    got = ingest.render_read(spark, out, bbox, zoom, base_level=BASE_LEVEL).toArrow()
+    assert len(driver_reads) == want_reads
+    force_distributed()
+    want = ingest.render_read(spark, out, bbox, zoom, base_level=BASE_LEVEL).toArrow()
+    assert len(driver_reads) == want_reads
+    assert [(f.name, f.type) for f in got.schema] == [(f.name, f.type) for f in want.schema]
+    assert _sorted_rows(got) == _sorted_rows(want)
+    assert (got.num_rows == 0) == (case == "empty")
+    if case == "timestamp":
+        assert got.schema.field("taken").type == pa.timestamp("us")
+        assert got.num_rows == 3
+
+
+def test_render_read_job_count(spark, engine_result):
+    """Under the caps the viewport fetch runs no Spark job itself, and
+    collecting its result runs exactly one."""
+    from test_bounded import _with_jobs
+
+    _, _, out = engine_result
+    df, jobs = _with_jobs(
+        spark, lambda: ingest.render_read(spark, out, _SMALL_BBOX, 12, base_level=BASE_LEVEL)
+    )
+    assert jobs == 0
+    tbl, jobs = _with_jobs(spark, df.toArrow)
+    assert jobs == 1 and tbl.num_rows > 0

@@ -320,7 +320,7 @@ def _tiles_arrow(df):
     return df.toArrow().sort_by([("tile_x", "ascending"), ("tile_y", "ascending")])
 
 
-@pytest.mark.parametrize("case", ["in_cap", "empty", "over_rows_cap"])
+@pytest.mark.parametrize("case", ["in_cap", "empty", "over_rows_cap", "over_bytes_cap"])
 def test_render_driver_path_matches_spark(
     spark, chunk_table, force_distributed, monkeypatch, request, tmp_path, case
 ):
@@ -328,7 +328,7 @@ def test_render_driver_path_matches_spark(
     output: field names and types, rows and payload bytes. An empty
     mid-Pacific viewport of the local refresh world prunes to zero files
     and opens none; a viewport whose pruned rows exceed SMALL_REWRITE_ROWS
-    takes the Spark path."""
+    or whose pruned files exceed SMALL_REWRITE_BYTES takes the Spark path."""
     import pyarrow.parquet as pq
 
     from coords_spark import bounded
@@ -361,27 +361,41 @@ def test_render_driver_path_matches_spark(
     if case == "over_rows_cap":
         assert scan.rows > 0
         monkeypatch.setattr(bounded, "SMALL_REWRITE_ROWS", scan.rows - 1)
+    if case == "over_bytes_cap":
+        monkeypatch.setattr(
+            bounded, "SMALL_REWRITE_BYTES", sum(map(os.path.getsize, scan.paths)) - 1
+        )
+    driver_renders = int(case in ("in_cap", "empty"))
     got = _tiles_arrow(render.render_tile_images(spark, path, bbox, zoom, tp))
-    assert len(fanouts) == (0 if case == "over_rows_cap" else 1)
+    assert len(fanouts) == driver_renders
     force_distributed()
     want = _tiles_arrow(render.render_tile_images(spark, path, bbox, zoom, tp))
-    assert len(fanouts) == (0 if case == "over_rows_cap" else 1)
+    assert len(fanouts) == driver_renders
     assert [(f.name, f.type) for f in got.schema] == [(f.name, f.type) for f in want.schema]
     assert got.column_names == ["tile_x", "tile_y", "n_ways", "n_px", "px_crc", "payload"]
     assert got.to_pylist() == want.to_pylist()
     assert (got.num_rows == 0) == (case == "empty")
 
 
-def test_render_viewport_job_count(spark, chunk_table):
-    """Under the caps the viewport render runs no Spark job itself, and
-    collecting its result runs exactly one."""
+def test_render_viewport_job_count(spark, chunk_table, monkeypatch):
+    """Under the caps the viewport render reads through the shared
+    viewport gate (ViewportScan.read_arrow) and runs no Spark job itself,
+    and collecting its result runs exactly one."""
     from test_bounded import _with_jobs
 
-    from coords_spark.operators import render
+    from coords_spark.operators import ingest, render
 
     path, _ = chunk_table
+    real = ingest.ViewportScan.read_arrow
+    gated = []
+
+    def counted(self, *a, **kw):
+        gated.append(1)
+        return real(self, *a, **kw)
+
+    monkeypatch.setattr(ingest.ViewportScan, "read_arrow", counted)
     df, jobs = _with_jobs(spark, lambda: render.render_tile_images(spark, path, _VIEW, 8, 256))
-    assert jobs == 0
+    assert jobs == 0 and len(gated) == 1
     tbl, jobs = _with_jobs(spark, df.toArrow)
     assert jobs == 1 and tbl.num_rows > 0
 
