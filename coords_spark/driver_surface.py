@@ -1401,8 +1401,6 @@ def geo_raster_vector_align(spark, sf):
 def geo_coastline_classify(spark, sf):
     """Land/water classification of image points against the synthetic
     coastline ring (the second PIP target family, FIXTURES.md §3)."""
-    import numpy as np
-
     from coords_spark.kernels import zcurve
     from coords_spark.kernels.phash import COAST_LAT, COAST_LON
     from coords_spark.operators import ingest, pip_join
@@ -1517,22 +1515,23 @@ def text_quality_scored(spark, sf):
     )
 
 
+def _line_frames(spark):
+    """(ways, nodes) of the line world: gen_ways(600, 4000) over
+    gen_nodes(4000), as DataFrames."""
+    from coords_spark.fixtures import gen_nodes, gen_ways
+
+    return spark.createDataFrame(gen_ways(600, 4000)), spark.createDataFrame(gen_nodes(4000))
+
+
 @_q("geo_osm_way_tiling", None)
 def geo_osm_way_tiling(spark, sf):
     """E3 end-to-end on the OSM-like fixture: resolve ways (J1) ->
     envelope (T3) -> deepest containing cell (T4) -> size-bounded chunk
     (T5) -> per-chunk feature counts. Fixture synthesized deterministically
     in-memory (FIXTURES.md §2)."""
-    from coords_spark.fixtures import gen_nodes, gen_ways
-    from coords_spark.operators import geometry, resolve, tiling
+    from coords_spark.fixtures.lines import way_chunks
 
-    nodes = spark.createDataFrame(gen_nodes(4000))
-    ways = spark.createDataFrame(gen_ways(600, 4000))
-    resolved = resolve.resolve_ways(ways, nodes)
-    g = geometry.with_geometry_cell(geometry.with_envelope(resolved))
-    g = g.withColumn("nbytes", (F.size("pts") * 8 + 64).cast("long"))
-    split = tiling.compute_split_set(g, max_bytes=64 * 1024, base_level=tiling.DEFAULT_BASE_LEVEL)
-    chunked = tiling.with_chunk(g, split, base_level=tiling.DEFAULT_BASE_LEVEL)
+    chunked = way_chunks(*_line_frames(spark))
     return (
         chunked.groupBy("chunk_id")
         .agg(F.count("*").alias("n_ways"), F.sum(F.size("pts")).alias("n_vertices"))
@@ -1687,7 +1686,7 @@ def osm_tag_histogram(spark, sf):
 def geo_node_way_reverse_index(spark, sf):
     """J3 reverse index as a driver query: node -> ways containing it
     (posexplode of way refs), top 20 highest-degree nodes."""
-    from coords_spark.fixtures import gen_nodes, gen_ways
+    from coords_spark.fixtures import gen_ways
 
     ways = spark.createDataFrame(gen_ways(600, 4000))
     rev = ways.select(
@@ -1735,6 +1734,56 @@ def icepick_roundtrip_stats(spark, sf):
         shutil.rmtree(tmp, ignore_errors=True)
 
 
+def _entity_checksums(nd: DataFrame, wd: DataFrame, rd: DataFrame) -> DataFrame:
+    """Per-kind checksums of decoded node, way and relation frames: count,
+    id sum, a payload sum (coordinates, refs, members) and the tag count
+    and crc32 sum, one row per kind. The golden twins compute the same
+    sums from the fixture tables, so any codec slip breaks the hash."""
+    tag_crc = (
+        "aggregate(transform(map_entries(tags), "
+        "e -> crc32(cast(concat(e.key, '=', e.value) as binary))), "
+        "0L, (a, x) -> a + x)"
+    )
+    n_stats = nd.select(
+        F.lit("nodes").alias("kind"),
+        "id",
+        (F.col("lat").cast("long") + F.col("lon").cast("long")).alias("payload"),
+        F.size(F.map_keys("tags")).cast("long").alias("ntags"),
+        F.expr(tag_crc).alias("tcrc"),
+    )
+    w_stats = wd.select(
+        F.lit("ways").alias("kind"),
+        "id",
+        F.expr("aggregate(refs, 0L, (a, x) -> a + x)").alias("payload"),
+        F.size(F.map_keys("tags")).cast("long").alias("ntags"),
+        F.expr(tag_crc).alias("tcrc"),
+    )
+    # members checksum folds mtype, delta-coded ref AND role strings —
+    # any codec slip in the member stream breaks the hash
+    r_stats = rd.select(
+        F.lit("relations").alias("kind"),
+        "id",
+        F.expr(
+            "aggregate(transform(members, m -> cast(m.mtype as long) * 1000003 "
+            "+ m.ref + crc32(cast(m.role as binary))), 0L, (a, x) -> a + x)"
+        ).alias("payload"),
+        F.size(F.map_keys("tags")).cast("long").alias("ntags"),
+        F.expr(tag_crc).alias("tcrc"),
+    )
+    return (
+        n_stats.unionAll(w_stats).unionAll(r_stats)
+        .groupBy("kind")
+        .agg(
+            F.count("*").alias("n"),
+            F.sum("id").alias("id_sum"),
+            F.sum("payload").alias("payload_sum"),
+            F.sum("ntags").alias("n_tags"),
+            F.sum("tcrc").alias("tag_crc_sum"),
+        )
+        .orderBy("kind")
+    )
+
+
 @_q("cpbf_ingest_stats", None)
 def cpbf_ingest_stats(spark, sf):
     """S1 PBF-shaped front door (SURVEY §2.1): the entity fixtures are
@@ -1747,10 +1796,8 @@ def cpbf_ingest_stats(spark, sf):
     import shutil
     import tempfile
 
-    from coords_spark.fixtures import gen_nodes, gen_ways
+    from coords_spark.fixtures import gen_nodes, gen_relations, gen_ways
     from coords_spark.sources import cpbf
-
-    from coords_spark.fixtures import gen_relations
 
     tmp = tempfile.mkdtemp(prefix="cpbf_")
     try:
@@ -1763,50 +1810,8 @@ def cpbf_ingest_stats(spark, sf):
         nd = cpbf.read_cpbf(spark, f"{tmp}/nodes", cpbf.KIND_NODES)
         wd = cpbf.read_cpbf(spark, f"{tmp}/ways", cpbf.KIND_WAYS)
         rd = cpbf.read_cpbf(spark, f"{tmp}/rels", cpbf.KIND_RELATIONS)
-        tag_crc = (
-            "aggregate(transform(map_entries(tags), "
-            "e -> crc32(cast(concat(e.key, '=', e.value) as binary))), "
-            "0L, (a, x) -> a + x)"
-        )
-        n_stats = nd.select(
-            F.lit("nodes").alias("kind"),
-            "id",
-            (F.col("lat").cast("long") + F.col("lon").cast("long")).alias("payload"),
-            F.size(F.map_keys("tags")).cast("long").alias("ntags"),
-            F.expr(tag_crc).alias("tcrc"),
-        )
-        w_stats = wd.select(
-            F.lit("ways").alias("kind"),
-            "id",
-            F.expr("aggregate(refs, 0L, (a, x) -> a + x)").alias("payload"),
-            F.size(F.map_keys("tags")).cast("long").alias("ntags"),
-            F.expr(tag_crc).alias("tcrc"),
-        )
-        # members checksum folds mtype, delta-coded ref AND role strings —
-        # any codec slip in the member stream breaks the hash
-        r_stats = rd.select(
-            F.lit("relations").alias("kind"),
-            "id",
-            F.expr(
-                "aggregate(transform(members, m -> cast(m.mtype as long) * 1000003 "
-                "+ m.ref + crc32(cast(m.role as binary))), 0L, (a, x) -> a + x)"
-            ).alias("payload"),
-            F.size(F.map_keys("tags")).cast("long").alias("ntags"),
-            F.expr(tag_crc).alias("tcrc"),
-        )
-        return (
-            n_stats.unionAll(w_stats).unionAll(r_stats)
-            .groupBy("kind")
-            .agg(
-                F.count("*").alias("n"),
-                F.sum("id").alias("id_sum"),
-                F.sum("payload").alias("payload_sum"),
-                F.sum("ntags").alias("n_tags"),
-                F.sum("tcrc").alias("tag_crc_sum"),
-            )
-            .orderBy("kind")
-            .localCheckpoint()  # materialize before the tmp dir is removed
-        )
+        # materialize before the tmp dir is removed
+        return _entity_checksums(nd, wd, rd).localCheckpoint()
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -1841,48 +1846,8 @@ def pbf_ingest_stats(spark, sf):
         nd = osmpbf.read_osmpbf(spark, p, osmpbf.KIND_NODES)
         wd = osmpbf.read_osmpbf(spark, p, osmpbf.KIND_WAYS)
         rd = osmpbf.read_osmpbf(spark, p, osmpbf.KIND_RELATIONS)
-        tag_crc = (
-            "aggregate(transform(map_entries(tags), "
-            "e -> crc32(cast(concat(e.key, '=', e.value) as binary))), "
-            "0L, (a, x) -> a + x)"
-        )
-        n_stats = nd.select(
-            F.lit("nodes").alias("kind"),
-            "id",
-            (F.col("lat").cast("long") + F.col("lon").cast("long")).alias("payload"),
-            F.size(F.map_keys("tags")).cast("long").alias("ntags"),
-            F.expr(tag_crc).alias("tcrc"),
-        )
-        w_stats = wd.select(
-            F.lit("ways").alias("kind"),
-            "id",
-            F.expr("aggregate(refs, 0L, (a, x) -> a + x)").alias("payload"),
-            F.size(F.map_keys("tags")).cast("long").alias("ntags"),
-            F.expr(tag_crc).alias("tcrc"),
-        )
-        r_stats = rd.select(
-            F.lit("relations").alias("kind"),
-            "id",
-            F.expr(
-                "aggregate(transform(members, m -> cast(m.mtype as long) * 1000003 "
-                "+ m.ref + crc32(cast(m.role as binary))), 0L, (a, x) -> a + x)"
-            ).alias("payload"),
-            F.size(F.map_keys("tags")).cast("long").alias("ntags"),
-            F.expr(tag_crc).alias("tcrc"),
-        )
-        return (
-            n_stats.unionAll(w_stats).unionAll(r_stats)
-            .groupBy("kind")
-            .agg(
-                F.count("*").alias("n"),
-                F.sum("id").alias("id_sum"),
-                F.sum("payload").alias("payload_sum"),
-                F.sum("ntags").alias("n_tags"),
-                F.sum("tcrc").alias("tag_crc_sum"),
-            )
-            .orderBy("kind")
-            .localCheckpoint()  # materialize before the tmp dir is removed
-        )
+        # materialize before the tmp dir is removed
+        return _entity_checksums(nd, wd, rd).localCheckpoint()
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -1920,10 +1885,10 @@ def render_bbox_read(spark, path: str):
     """READ phase: London-viewport fetch through the full pruning stack —
     bbox cover -> per-level chunk-id ranges (quadtree walk) -> multi-range
     manifest file pruning -> exact bbox predicate — aggregated per chunk."""
+    from coords_spark.fixtures.lines import LONDON
     from coords_spark.operators import ingest, tiling
 
-    bbox = (int(50.0e7), int(-2.0e7), int(53.0e7), int(1.8e7))  # London viewport
-    got = ingest.render_read(spark, path, bbox, zoom=12, base_level=tiling.DEFAULT_BASE_LEVEL)
+    got = ingest.render_read(spark, path, LONDON, zoom=12, base_level=tiling.DEFAULT_BASE_LEVEL)
     return (
         got.groupBy("chunk_id")
         .agg(
@@ -1971,9 +1936,8 @@ def pbf_create_storage_stats(spark, sf):
     import tempfile
 
     from coords_spark.fixtures import gen_nodes, gen_ways
-    from coords_spark.operators import geometry, resolve, tiling
+    from coords_spark.fixtures.lines import line_table, way_chunks
     from coords_spark.sources import osmpbf
-    from coords_spark.sources.icepick import IcepickTable
 
     tmp = tempfile.mkdtemp(prefix="pbf_e1_")
     try:
@@ -1983,22 +1947,10 @@ def pbf_create_storage_stats(spark, sf):
         )
         nodes = osmpbf.read_osmpbf(spark, p, osmpbf.KIND_NODES)
         ways = osmpbf.read_osmpbf(spark, p, osmpbf.KIND_WAYS)
-        resolved = resolve.resolve_ways(ways, nodes)
-        g = geometry.with_geometry_cell(geometry.with_envelope(resolved)).withColumn(
-            "nbytes", (F.size("pts") * 8 + 64).cast("long")
-        )
-        split = tiling.compute_split_set(
-            g, max_bytes=64 * 1024, base_level=tiling.DEFAULT_BASE_LEVEL
-        )
-        chunked = tiling.with_chunk(g, split, base_level=tiling.DEFAULT_BASE_LEVEL)
-        path = f"{tmp}/storage"
-        tiling.materialize_chunk_table(
-            chunked.select("way_id", "cell", "chunk_id", "pts"), path, key_col="way_id"
-        )
-        t = IcepickTable(path)
+        t = line_table(f"{tmp}/storage", way_chunks(ways, nodes))
         assert t.verify_checksums()
         return (
-            spark.read.parquet(*t.data_paths())
+            t.read(spark, t.data_paths())
             .groupBy("chunk_id")
             .agg(F.count("*").alias("n_ways"), F.sum(F.size("pts")).alias("n_vertices"))
             .orderBy("chunk_id")
@@ -2042,7 +1994,7 @@ def incremental_update_apply(spark, sf):
         update.apply_node_diff(spark, path, nodes, ways, diff, split)
         t = IcepickTable(path)
         return (
-            spark.read.parquet(*t.data_paths())
+            t.read(spark, t.data_paths())
             .groupBy("chunk_id")
             .agg(
                 F.count("*").alias("n_ways"),
@@ -2100,7 +2052,7 @@ def relation_diff_apply(spark, sf):
         )
         t = IcepickTable(path)
         return (
-            spark.read.parquet(*t.data_paths())
+            t.read(spark, t.data_paths())
             .groupBy("chunk_id")
             .agg(
                 F.count("*").alias("n_polys"),
@@ -2130,7 +2082,8 @@ def pbf_create_tiles_stats(spark, sf):
     import tempfile
 
     from coords_spark.fixtures import gen_nodes, gen_ways
-    from coords_spark.operators import geometry, ingest, resolve, tiling
+    from coords_spark.fixtures.lines import LONDON, line_table, way_chunks
+    from coords_spark.operators import ingest, tiling
     from coords_spark.sources import osmpbf
 
     tmp = tempfile.mkdtemp(prefix="pbf_e3_")
@@ -2141,27 +2094,10 @@ def pbf_create_tiles_stats(spark, sf):
         )
         nodes = osmpbf.read_osmpbf(spark, p, osmpbf.KIND_NODES)
         ways = osmpbf.read_osmpbf(spark, p, osmpbf.KIND_WAYS)
-        resolved = resolve.resolve_ways(ways, nodes)
-        g = geometry.with_geometry_cell(geometry.with_envelope(resolved)).withColumn(
-            "nbytes", (F.size("pts") * 8 + 64).cast("long")
-        )
-        split = tiling.compute_split_set(
-            g, max_bytes=64 * 1024, base_level=tiling.DEFAULT_BASE_LEVEL
-        )
-        chunked = tiling.with_chunk(g, split, base_level=tiling.DEFAULT_BASE_LEVEL)
-        rows = chunked.select(
-            "way_id",
-            "cell",
-            "chunk_id",
-            "pts",
-            F.expr("pts[0].lat").alias("lat"),
-            F.expr("pts[0].lon").alias("lon"),
-        )
         path = f"{tmp}/tiles"
-        tiling.materialize_chunk_table(rows, path, key_col="way_id")
-        bbox = (int(50.0e7), int(-2.0e7), int(53.0e7), int(1.8e7))  # London
+        line_table(path, way_chunks(ways, nodes))
         got = ingest.render_read(
-            spark, path, bbox, zoom=12, base_level=tiling.DEFAULT_BASE_LEVEL
+            spark, path, LONDON, zoom=12, base_level=tiling.DEFAULT_BASE_LEVEL
         )
         return (
             got.groupBy("chunk_id")
@@ -2186,17 +2122,15 @@ def geo_render_map_stats(spark, sf):
     union of both tile sets, per-layer fan-outs, and the exact composite
     bytes. Golden twin: scalar line raster OR scalar scanline fill
     (tools/gen_goldens.py g_geo_render_map_stats)."""
-    from coords_spark.fixtures import gen_nodes, gen_relations, gen_ways
+    from coords_spark.fixtures import gen_relations
+    from coords_spark.fixtures.lines import LONDON
     from coords_spark.operators import multipolygon, render, resolve
 
-    nodes = spark.createDataFrame(gen_nodes(4000))
-    ways = spark.createDataFrame(gen_ways(600, 4000))
-    bbox = (int(50.0e7), int(-2.0e7), int(53.0e7), int(1.8e7))  # London
+    lat0, lon0, lat1, lon1 = LONDON
     # anchor-in-viewport filter — the same S5 semantic render_read applies
     # when the line layer comes from a chunk table
-    resolved = resolve.resolve_ways(ways, nodes).filter(
-        F.expr("pts[0].lat").between(bbox[0], bbox[2])
-        & F.expr("pts[0].lon").between(bbox[1], bbox[3])
+    resolved = resolve.resolve_ways(*_line_frames(spark)).filter(
+        F.expr("pts[0].lat").between(lat0, lat1) & F.expr("pts[0].lon").between(lon0, lon1)
     )
     relations, ring_ways = gen_relations(60)
     rel_df = spark.createDataFrame(relations)
@@ -2206,7 +2140,7 @@ def geo_render_map_stats(spark, sf):
     )
     return (
         render.render_map_tiles(
-            spark, None, None, bbox, zoom=8, ways=resolved, polys=mp
+            spark, None, None, LONDON, zoom=8, ways=resolved, polys=mp
         )
         .select("tile_x", "tile_y", "n_ways", "n_polys", "n_px", "px_crc")
         .orderBy("tile_x", "tile_y")
@@ -2253,34 +2187,15 @@ def geo_render_raster(spark, sf):
     import shutil
     import tempfile
 
-    from coords_spark.fixtures import gen_nodes, gen_ways
-    from coords_spark.operators import geometry, render, resolve, tiling
+    from coords_spark.fixtures.lines import LONDON, line_table, way_chunks
+    from coords_spark.operators import render
 
     tmp = tempfile.mkdtemp(prefix="render_raster_")
     try:
-        nodes = spark.createDataFrame(gen_nodes(4000))
-        ways = spark.createDataFrame(gen_ways(600, 4000))
-        resolved = resolve.resolve_ways(ways, nodes)
-        g = geometry.with_geometry_cell(geometry.with_envelope(resolved)).withColumn(
-            "nbytes", (F.size("pts") * 8 + 64).cast("long")
-        )
-        split = tiling.compute_split_set(
-            g, max_bytes=64 * 1024, base_level=tiling.DEFAULT_BASE_LEVEL
-        )
-        chunked = tiling.with_chunk(g, split, base_level=tiling.DEFAULT_BASE_LEVEL)
-        rows = chunked.select(
-            "way_id",
-            "cell",
-            "chunk_id",
-            "pts",
-            F.expr("pts[0].lat").alias("lat"),
-            F.expr("pts[0].lon").alias("lon"),
-        )
         path = f"{tmp}/tiles"
-        tiling.materialize_chunk_table(rows, path, key_col="way_id")
-        bbox = (int(50.0e7), int(-2.0e7), int(53.0e7), int(1.8e7))  # London
+        line_table(path, way_chunks(*_line_frames(spark)))
         return (
-            render.render_tile_images(spark, path, bbox, zoom=8, tile_px=256)
+            render.render_tile_images(spark, path, LONDON, zoom=8, tile_px=256)
             .select("tile_x", "tile_y", "n_ways", "n_px", "px_crc")
             .orderBy("tile_x", "tile_y")
             .localCheckpoint()  # materialize before the table dir is removed
@@ -2301,37 +2216,18 @@ def pyramid_table_stats(spark, sf):
     import shutil
     import tempfile
 
-    from coords_spark.fixtures import gen_nodes, gen_ways
-    from coords_spark.operators import geometry, render, resolve, tiling
+    from coords_spark.fixtures.lines import LONDON, line_table, way_chunks
+    from coords_spark.operators import render
 
     tmp = tempfile.mkdtemp(prefix="pyr_table_")
     try:
-        nodes = spark.createDataFrame(gen_nodes(4000))
-        ways = spark.createDataFrame(gen_ways(600, 4000))
-        resolved = resolve.resolve_ways(ways, nodes)
-        g = geometry.with_geometry_cell(geometry.with_envelope(resolved)).withColumn(
-            "nbytes", (F.size("pts") * 8 + 64).cast("long")
-        )
-        split = tiling.compute_split_set(
-            g, max_bytes=64 * 1024, base_level=tiling.DEFAULT_BASE_LEVEL
-        )
-        chunked = tiling.with_chunk(g, split, base_level=tiling.DEFAULT_BASE_LEVEL)
-        rows = chunked.select(
-            "way_id",
-            "cell",
-            "chunk_id",
-            "pts",
-            F.expr("pts[0].lat").alias("lat"),
-            F.expr("pts[0].lon").alias("lon"),
-        )
         path = f"{tmp}/tiles"
-        tiling.materialize_chunk_table(rows, path, key_col="way_id")
-        bbox = (int(50.0e7), int(-2.0e7), int(53.0e7), int(1.8e7))  # London
+        line_table(path, way_chunks(*_line_frames(spark)))
         t = render.build_pyramid_table(
-            spark, path, f"{tmp}/pyramid", bbox, zoom=8, min_zoom=6, tile_px=256
+            spark, path, f"{tmp}/pyramid", LONDON, zoom=8, min_zoom=6, tile_px=256
         )
         return (
-            spark.read.parquet(*t.data_paths())
+            t.read(spark, t.data_paths())
             .select("zoom", "tile_x", "tile_y", "n_src", "n_px", "px_crc")
             .orderBy("zoom", "tile_x", "tile_y")
             .localCheckpoint()
@@ -2353,34 +2249,15 @@ def vector_tile_pyramid_stats(spark, sf):
     import shutil
     import tempfile
 
-    from coords_spark.fixtures import gen_nodes, gen_ways
-    from coords_spark.operators import geometry, render, resolve, tiling
+    from coords_spark.fixtures.lines import LONDON, line_table, way_chunks
+    from coords_spark.operators import render
 
     tmp = tempfile.mkdtemp(prefix="vt_pyramid_")
     try:
-        nodes = spark.createDataFrame(gen_nodes(4000))
-        ways = spark.createDataFrame(gen_ways(600, 4000))
-        resolved = resolve.resolve_ways(ways, nodes)
-        g = geometry.with_geometry_cell(geometry.with_envelope(resolved)).withColumn(
-            "nbytes", (F.size("pts") * 8 + 64).cast("long")
-        )
-        split = tiling.compute_split_set(
-            g, max_bytes=64 * 1024, base_level=tiling.DEFAULT_BASE_LEVEL
-        )
-        chunked = tiling.with_chunk(g, split, base_level=tiling.DEFAULT_BASE_LEVEL)
-        rows = chunked.select(
-            "way_id",
-            "cell",
-            "chunk_id",
-            "pts",
-            F.expr("pts[0].lat").alias("lat"),
-            F.expr("pts[0].lon").alias("lon"),
-        )
         path = f"{tmp}/tiles"
-        tiling.materialize_chunk_table(rows, path, key_col="way_id")
-        bbox = (int(50.0e7), int(-2.0e7), int(53.0e7), int(1.8e7))  # London
+        line_table(path, way_chunks(*_line_frames(spark)))
         return (
-            render.vector_tile_pyramid(spark, path, bbox, zoom=8, min_zoom=6)
+            render.vector_tile_pyramid(spark, path, LONDON, zoom=8, min_zoom=6)
             .select(
                 "zoom", "tile_x", "tile_y", "n_ways", "n_geoms", "n_segs",
                 "payload_crc",
@@ -2405,34 +2282,15 @@ def vector_tiles_stats(spark, sf):
     import shutil
     import tempfile
 
-    from coords_spark.fixtures import gen_nodes, gen_ways
-    from coords_spark.operators import geometry, render, resolve, tiling
+    from coords_spark.fixtures.lines import LONDON, line_table, way_chunks
+    from coords_spark.operators import render
 
     tmp = tempfile.mkdtemp(prefix="vector_tiles_")
     try:
-        nodes = spark.createDataFrame(gen_nodes(4000))
-        ways = spark.createDataFrame(gen_ways(600, 4000))
-        resolved = resolve.resolve_ways(ways, nodes)
-        g = geometry.with_geometry_cell(geometry.with_envelope(resolved)).withColumn(
-            "nbytes", (F.size("pts") * 8 + 64).cast("long")
-        )
-        split = tiling.compute_split_set(
-            g, max_bytes=64 * 1024, base_level=tiling.DEFAULT_BASE_LEVEL
-        )
-        chunked = tiling.with_chunk(g, split, base_level=tiling.DEFAULT_BASE_LEVEL)
-        rows = chunked.select(
-            "way_id",
-            "cell",
-            "chunk_id",
-            "pts",
-            F.expr("pts[0].lat").alias("lat"),
-            F.expr("pts[0].lon").alias("lon"),
-        )
         path = f"{tmp}/tiles"
-        tiling.materialize_chunk_table(rows, path, key_col="way_id")
-        bbox = (int(50.0e7), int(-2.0e7), int(53.0e7), int(1.8e7))  # London
+        line_table(path, way_chunks(*_line_frames(spark)))
         return (
-            render.vector_tiles(spark, path, bbox, zoom=8, tile_px=256)
+            render.vector_tiles(spark, path, LONDON, zoom=8, tile_px=256)
             .select("tile_x", "tile_y", "n_ways", "n_geoms", "n_segs", "payload_crc")
             .orderBy("tile_x", "tile_y")
             .localCheckpoint()
@@ -2455,36 +2313,15 @@ def geo_render_pyramid(spark, sf):
     import shutil
     import tempfile
 
-    from coords_spark.fixtures import gen_nodes, gen_ways
-    from coords_spark.operators import geometry, render, resolve, tiling
+    from coords_spark.fixtures.lines import LONDON, line_table, way_chunks
+    from coords_spark.operators import render
 
     tmp = tempfile.mkdtemp(prefix="render_pyramid_")
     try:
-        nodes = spark.createDataFrame(gen_nodes(4000))
-        ways = spark.createDataFrame(gen_ways(600, 4000))
-        resolved = resolve.resolve_ways(ways, nodes)
-        g = geometry.with_geometry_cell(geometry.with_envelope(resolved)).withColumn(
-            "nbytes", (F.size("pts") * 8 + 64).cast("long")
-        )
-        split = tiling.compute_split_set(
-            g, max_bytes=64 * 1024, base_level=tiling.DEFAULT_BASE_LEVEL
-        )
-        chunked = tiling.with_chunk(g, split, base_level=tiling.DEFAULT_BASE_LEVEL)
-        rows = chunked.select(
-            "way_id",
-            "cell",
-            "chunk_id",
-            "pts",
-            F.expr("pts[0].lat").alias("lat"),
-            F.expr("pts[0].lon").alias("lon"),
-        )
         path = f"{tmp}/tiles"
-        tiling.materialize_chunk_table(rows, path, key_col="way_id")
-        bbox = (int(50.0e7), int(-2.0e7), int(53.0e7), int(1.8e7))  # London
+        line_table(path, way_chunks(*_line_frames(spark)))
         return (
-            render.render_tile_pyramid(
-                spark, path, bbox, zoom=8, min_zoom=6, tile_px=256
-            )
+            render.render_tile_pyramid(spark, path, LONDON, zoom=8, min_zoom=6, tile_px=256)
             .select("zoom", "tile_x", "tile_y", "n_src", "n_px", "px_crc")
             .orderBy("zoom", "tile_x", "tile_y")
             .localCheckpoint()  # materialize before the table dir is removed
@@ -2530,7 +2367,7 @@ def icepick_compact_stats(spark, sf):
             t.commit_staged(stage, group=f"b{b}")
         c = t.compact(spark, target_bytes=1 << 20)
         e = t.expire_snapshots(keep_n=1)
-        df = spark.read.parquet(*t.data_paths())
+        df = t.read(spark, t.data_paths())
         r = df.agg(
             F.count("*").alias("n"),
             F.sum("image_id").alias("s"),
@@ -2558,6 +2395,52 @@ def icepick_compact_stats(spark, sf):
         shutil.rmtree(tmp, ignore_errors=True)
 
 
+# row schemas of the update world's entities (gen_update_world)
+_NODE_ROW = "id long, version int, lat int, lon int, tags map<string,string>"
+_WAY_ROW = "id long, version int, refs array<long>, tags map<string,string>"
+_REL_ROW = (
+    "id long, version int, "
+    "members array<struct<mtype: tinyint, ref: long, role: string>>, "
+    "tags map<string,string>"
+)
+
+
+def _update_world(spark, tmp: str) -> dict:
+    """The update world (gen_update_world(10)) built under `tmp`: the
+    node, way and relation entity stores (id shifts 6, 4 and 2), the way
+    chunk table of a 4 KiB split and the node->ways reverse index (shift
+    6) that lets each diff batch plan O(diff). Returns the entity frames,
+    the split, the paths and the two composed diff batches."""
+    from coords_spark.fixtures import gen_update_diffs, gen_update_world
+    from coords_spark.operators import entity_store as ES
+    from coords_spark.operators import geometry, resolve, tiling, update
+    from coords_spark.operators import rindex as RI
+
+    nodes_rows, ways_rows, rels_rows = gen_update_world(10)
+    batches = gen_update_diffs(nodes_rows, ways_rows, rels_rows)
+    nodes = spark.createDataFrame(nodes_rows, _NODE_ROW)
+    ways = spark.createDataFrame(ways_rows, _WAY_ROW)
+    rels = spark.createDataFrame(rels_rows, _REL_ROW)
+    stores = {k: f"{tmp}/store_{k}" for k in ("nodes", "ways", "rels")}
+    ES.build_entity_store(nodes, stores["nodes"], id_shift=6)
+    ES.build_entity_store(ways, stores["ways"], id_shift=4)
+    ES.build_entity_store(rels, stores["rels"], id_shift=2)
+    g = geometry.with_geometry_cell(
+        geometry.with_envelope(resolve.resolve_ways(ways, nodes))
+    ).withColumn("nbytes", (F.size("pts") * 8 + 64).cast("long"))
+    split = tiling.compute_split_set(
+        g, max_bytes=4 * 1024, base_level=tiling.DEFAULT_BASE_LEVEL
+    )
+    way_table, rindex_nw = f"{tmp}/way_chunks", f"{tmp}/rindex_nw"
+    update.build_way_chunk_table(spark, nodes, ways, way_table, split)
+    RI.build_rindex_store(spark, ways.select("id", "refs"), rindex_nw, id_shift=6)
+    return {
+        "nodes": nodes, "ways": ways, "rels": rels, "split": split,
+        "stores": stores, "way_table": way_table, "rindex_nw": rindex_nw,
+        "batches": batches,
+    }
+
+
 @_q("dirty_tiles_stats", None)
 def dirty_tiles_stats(spark, sf):
     """Tile expiry for the shared update-world diff batches (the public
@@ -2578,12 +2461,8 @@ def dirty_tiles_stats(spark, sf):
 
     nodes_rows, ways_rows, rels_rows = gen_update_world(10)
     b1, b2 = gen_update_diffs(nodes_rows, ways_rows, rels_rows)
-    cur_nodes = spark.createDataFrame(
-        nodes_rows, "id long, version int, lat int, lon int, tags map<string,string>"
-    ).drop("tags")
-    cur_ways = spark.createDataFrame(
-        ways_rows, "id long, version int, refs array<long>, tags map<string,string>"
-    ).drop("tags")
+    cur_nodes = spark.createDataFrame(nodes_rows, _NODE_ROW).drop("tags")
+    cur_ways = spark.createDataFrame(ways_rows, _WAY_ROW).drop("tags")
     out = None
     for bi, batch in enumerate((b1, b2), 1):
         b = spark.createDataFrame(batch, US.DIFF_SCHEMA)
@@ -2638,49 +2517,18 @@ def osc_update_render_stats(spark, sf):
     import shutil
     import tempfile
 
-    from coords_spark.fixtures import gen_update_diffs, gen_update_world
     from coords_spark.operators import entity_store as ES
-    from coords_spark.operators import geometry, render, resolve, tiling, update
+    from coords_spark.operators import render, resolve
     from coords_spark.sources import osc
     from coords_spark.sources.icepick import IcepickTable
     from coords_spark.streaming import update_stream as US
 
-    nodes_rows, ways_rows, rels_rows = gen_update_world(10)
-    b1, b2 = gen_update_diffs(nodes_rows, ways_rows, rels_rows)
     tmp = tempfile.mkdtemp(prefix="osc_e3_")
     try:
-        nodes = spark.createDataFrame(
-            nodes_rows, "id long, version int, lat int, lon int, tags map<string,string>"
-        )
-        ways = spark.createDataFrame(
-            ways_rows, "id long, version int, refs array<long>, tags map<string,string>"
-        )
-        stores = {k: f"{tmp}/store_{k}" for k in ("nodes", "ways", "rels")}
-        ES.build_entity_store(nodes, stores["nodes"], id_shift=6)
-        ES.build_entity_store(ways, stores["ways"], id_shift=4)
-        rels = spark.createDataFrame(
-            rels_rows,
-            "id long, version int, "
-            "members array<struct<mtype: tinyint, ref: long, role: string>>, "
-            "tags map<string,string>",
-        )
-        ES.build_entity_store(rels, stores["rels"], id_shift=2)
-        g = geometry.with_geometry_cell(
-            geometry.with_envelope(resolve.resolve_ways(ways, nodes))
-        ).withColumn("nbytes", (F.size("pts") * 8 + 64).cast("long"))
-        split = tiling.compute_split_set(g, max_bytes=4 * 1024)
-        way_table = f"{tmp}/waychunks"
-        update.build_way_chunk_table(spark, nodes, ways, way_table, split)
-        # r7: persistent node->ways reverse index — the batches below plan
-        # O(diff) (pruned lookups; tests/test_odiff.py checks them against
-        # a full-scan twin)
-        from coords_spark.operators import rindex as RI
-
-        rindex_nw = f"{tmp}/rindex_nw"
-        RI.build_rindex_store(spark, ways.select("id", "refs"), rindex_nw, id_shift=6)
-
+        w = _update_world(spark, tmp)
+        stores = w["stores"]
         dirty_table = f"{tmp}/dirtytiles"
-        for i, batch in enumerate((b1, b2)):
+        for i, batch in enumerate(w["batches"]):
             p = f"{tmp}/diff-{i}.osc.gz"
             osc.write_osc(p, batch)
             US.apply_diff_batch(
@@ -2689,15 +2537,16 @@ def osc_update_render_stats(spark, sf):
                 stores["nodes"],
                 stores["ways"],
                 stores["rels"],
-                way_table,
+                w["way_table"],
                 None,
                 group=f"diff-{i}",
                 dirty_table=dirty_table,
-                rindex_store=rindex_nw,
+                rindex_store=w["rindex_nw"],
             )
 
+        dirty = IcepickTable(dirty_table)
         dirty_base = (
-            spark.read.parquet(*IcepickTable(dirty_table).data_paths())
+            dirty.read(spark, dirty.data_paths())
             .filter(F.col("zoom") == 12)
             .select("tile_x", "tile_y")
             .distinct()
@@ -2737,50 +2586,23 @@ def update_stream_apply(spark, sf):
     import shutil
     import tempfile
 
-    from coords_spark.fixtures import gen_update_diffs, gen_update_world
     from coords_spark.operators import entity_store as ES
-    from coords_spark.operators import geometry, resolve, tiling, update
+    from coords_spark.operators import resolve, update
+    from coords_spark.operators import rindex as RI
     from coords_spark.sources.icepick import IcepickTable
     from coords_spark.streaming import update_stream as US
 
-    nodes_rows, ways_rows, rels_rows = gen_update_world(10)
-    b1, b2 = gen_update_diffs(nodes_rows, ways_rows, rels_rows)
     tmp = tempfile.mkdtemp(prefix="upd_stream_")
     try:
-        nodes = spark.createDataFrame(
-            nodes_rows, "id long, version int, lat int, lon int, tags map<string,string>"
-        )
-        ways = spark.createDataFrame(
-            ways_rows, "id long, version int, refs array<long>, tags map<string,string>"
-        )
-        rels = spark.createDataFrame(
-            rels_rows,
-            "id long, version int, "
-            "members array<struct<mtype: tinyint, ref: long, role: string>>, "
-            "tags map<string,string>",
-        )
-        stores = {k: f"{tmp}/store_{k}" for k in ("nodes", "ways", "rels")}
-        ES.build_entity_store(nodes, stores["nodes"], id_shift=6)
-        ES.build_entity_store(ways, stores["ways"], id_shift=4)
-        ES.build_entity_store(rels, stores["rels"], id_shift=2)
-        g = geometry.with_geometry_cell(
-            geometry.with_envelope(resolve.resolve_ways(ways, nodes))
-        ).withColumn("nbytes", (F.size("pts") * 8 + 64).cast("long"))
-        split = tiling.compute_split_set(
-            g, max_bytes=4 * 1024, base_level=tiling.DEFAULT_BASE_LEVEL
-        )
-        way_table, rel_table = f"{tmp}/way_chunks", f"{tmp}/rel_chunks"
-        update.build_way_chunk_table(spark, nodes, ways, way_table, split)
+        w = _update_world(spark, tmp)
+        stores, rels = w["stores"], w["rels"]
+        rel_table = f"{tmp}/rel_chunks"
         update.build_relation_chunk_table(
-            spark, rels, resolve.resolve_ways(ways, nodes), rel_table, split
+            spark, rels, resolve.resolve_ways(w["ways"], w["nodes"]), rel_table, w["split"]
         )
-        # r7: both persistent reverse indexes (node->ways, way->relations)
-        # — the O(diff) blast-radius path; tests/test_odiff.py checks it
-        # against a full-scan twin
-        from coords_spark.operators import rindex as RI
-
-        rindex_nw, rindex_wr = f"{tmp}/rindex_nw", f"{tmp}/rindex_wr"
-        RI.build_rindex_store(spark, ways.select("id", "refs"), rindex_nw, id_shift=6)
+        # the way->relations reverse index beside the world's node->ways
+        # one: the O(diff) blast-radius path
+        rindex_wr = f"{tmp}/rindex_wr"
         RI.build_rindex_store(
             spark,
             rels.select(
@@ -2794,20 +2616,21 @@ def update_stream_apply(spark, sf):
             ids_col="relation_ids",
             id_shift=4,
         )
-        for i, rows in enumerate((b1, b2)):
+        for i, rows in enumerate(w["batches"]):
             US.apply_diff_batch(
                 spark,
                 spark.createDataFrame(rows, US.DIFF_SCHEMA),
                 stores["nodes"],
                 stores["ways"],
                 stores["rels"],
-                way_table,
+                w["way_table"],
                 rel_table,
                 group=f"diff-{i}",
-                rindex_store=rindex_nw,
+                rindex_store=w["rindex_nw"],
                 rel_rindex_store=rindex_wr,
             )
         pt_sum = "aggregate({c}, 0L, (a, p) -> a + p.lat + p.lon)"
+        way_t, rel_t = IcepickTable(w["way_table"]), IcepickTable(rel_table)
         layers = [
             ES.read_entity_store(spark, stores["nodes"], with_chunk=True)
             .groupBy("chunk_id")
@@ -2836,7 +2659,7 @@ def update_stream_apply(spark, sf):
                 F.sum(F.size("members")).cast("long").alias("a2"),
             )
             .withColumn("layer", F.lit("rels_store")),
-            spark.read.parquet(*IcepickTable(way_table).data_paths())
+            way_t.read(spark, way_t.data_paths())
             .groupBy("chunk_id")
             .agg(
                 F.count("*").alias("n"),
@@ -2845,7 +2668,7 @@ def update_stream_apply(spark, sf):
                 F.sum(F.expr(pt_sum.format(c="pts"))).alias("a2"),
             )
             .withColumn("layer", F.lit("way_chunks")),
-            spark.read.parquet(*IcepickTable(rel_table).data_paths())
+            rel_t.read(spark, rel_t.data_paths())
             .groupBy("chunk_id")
             .agg(
                 F.count("*").alias("n"),
@@ -2968,7 +2791,7 @@ def icepick_time_travel(spark, sf):
             snaps.append(t.current_manifest()["version"])
         rows = []
         for i, v in enumerate(snaps):
-            df = spark.read.parquet(*t.data_paths(version=v))
+            df = t.read(spark, t.data_paths(version=v))
             r = df.agg(
                 F.count("*").alias("n"), F.sum("image_id").alias("s")
             ).collect()[0]
@@ -2988,11 +2811,11 @@ def geo_render_tiles(spark, sf):
     (no table build): exact bbox filter, cell-at-zoom encode, per-tile
     count + key checksum. Golden twin replicates the filter + cell id
     scalar-side."""
-    from coords_spark.operators import ingest
+    from coords_spark.fixtures.lines import LONDON
     from coords_spark.operators.knn import cell_at_level_col
 
     pts = _points_from_orders(spark, sf)
-    lat0, lon0, lat1, lon1 = int(50.0e7), int(-2.0e7), int(53.0e7), int(1.8e7)
+    lat0, lon0, lat1, lon1 = LONDON
     return (
         pts.filter(
             F.col("lat").between(lat0, lat1) & F.col("lon").between(lon0, lon1)

@@ -56,6 +56,8 @@ _TILE_PNGZ_LEVEL = 1
 
 # pyramid level files cluster on tile position
 _TILE_KEYS = ["tile_x", "tile_y"]
+# a pyramid level row: n_src counts ways at the base zoom, children above
+_LEVEL_COLS = ["zoom", "tile_x", "tile_y", "n_src", "n_px", "px_crc", "payload"]
 
 
 def bbox_tile_range(bbox, zoom: int, tile_px: int = 256) -> tuple[int, int, int, int]:
@@ -508,6 +510,16 @@ def _level_table_arrow(z: int, parents: list) -> "pa.Table":
     )
 
 
+def _as_level(tiles: DataFrame, zoom: int, count_col: str) -> DataFrame:
+    """Tile rows as pyramid level `zoom`: `count_col` (n_ways of a render,
+    n_children of an overzoom) becomes n_src, in _LEVEL_COLS order."""
+    return (
+        tiles.withColumnRenamed(count_col, "n_src")
+        .withColumn("zoom", F.lit(zoom).cast("long"))
+        .select(*_LEVEL_COLS)
+    )
+
+
 def _overzoom_level_local(
     t, child_paths: list[str], z: int, tile_px: int, fmt: str, level_partitions: int
 ) -> None:
@@ -553,7 +565,6 @@ def render_tile_pyramid(
     Each level is materialized (localCheckpoint — viewport-bounded tile
     count) before feeding the next, mirroring the write-z/read-z-minus-1
     shape a planet-scale pipeline uses against the tile sink."""
-    cols = ["zoom", "tile_x", "tile_y", "n_src", "n_px", "px_crc", "payload"]
     tx0, tx1, ty0, ty1 = bbox_tile_range(bbox, zoom, tile_px)
     tbl = None
     if (tx1 - tx0 + 1) * (ty1 - ty0 + 1) <= bounded.SMALL_OVERZOOM_TILES:
@@ -574,28 +585,24 @@ def render_tile_pyramid(
             rows = overzoom_rows_local([(r[0], r[1], r[5]) for r in rows], tile_px, fmt)
             parts.append(_level_table_arrow(z, rows))
         return spark.createDataFrame(pa.concat_tables(parts))
-    base = (
-        render_tile_images(spark, table_path, bbox, zoom, tile_px, base_level, fmt)
-        .withColumnRenamed("n_ways", "n_src")
-        .withColumn("zoom", F.lit(zoom).cast("long"))
-        .select(*cols)
-        .localCheckpoint()
-    )
+    base = _as_level(
+        render_tile_images(spark, table_path, bbox, zoom, tile_px, base_level, fmt),
+        zoom,
+        "n_ways",
+    ).localCheckpoint()
     levels = [base]
     cur = base
     for z in range(zoom - 1, min_zoom - 1, -1):
-        cur = (
-            overzoom_tiles(cur.select("tile_x", "tile_y", "payload"), tile_px, fmt)
-            .withColumnRenamed("n_children", "n_src")
-            .withColumn("zoom", F.lit(z).cast("long"))
-            .select(*cols)
-            .localCheckpoint()
-        )
+        cur = _as_level(
+            overzoom_tiles(cur.select("tile_x", "tile_y", "payload"), tile_px, fmt),
+            z,
+            "n_children",
+        ).localCheckpoint()
         levels.append(cur)
     out = levels[0]
     for lvl in levels[1:]:
         out = out.unionByName(lvl)
-    return out.select("zoom", "tile_x", "tile_y", "n_src", "n_px", "px_crc", "payload")
+    return out
 
 
 def build_pyramid_table(
@@ -657,15 +664,10 @@ def build_pyramid_table(
         if tbl is not None:
             _commit(None, zoom, _level_table_arrow(zoom, _tile_rows(tbl)))
         else:
-            base = (
-                render_tile_images(
-                    spark, chunk_table_path, bbox, zoom, tile_px, base_level, fmt
-                )
-                .withColumnRenamed("n_ways", "n_src")
-                .withColumn("zoom", F.lit(zoom).cast("long"))
-                .select("zoom", "tile_x", "tile_y", "n_src", "n_px", "px_crc", "payload")
+            base = render_tile_images(
+                spark, chunk_table_path, bbox, zoom, tile_px, base_level, fmt
             )
-            _commit(base, zoom)
+            _commit(_as_level(base, zoom, "n_ways"), zoom)
     import os as _os
 
     for z in range(zoom - 1, min_zoom - 1, -1):
@@ -693,13 +695,7 @@ def build_pyramid_table(
             .filter(F.col("zoom") == z + 1)
             .select("tile_x", "tile_y", "payload")
         )
-        level = (
-            overzoom_tiles(children, tile_px, fmt)
-            .withColumnRenamed("n_children", "n_src")
-            .withColumn("zoom", F.lit(z).cast("long"))
-            .select("zoom", "tile_x", "tile_y", "n_src", "n_px", "px_crc", "payload")
-        )
-        _commit(level, z)
+        _commit(_as_level(overzoom_tiles(children, tile_px, fmt), z, "n_children"), z)
     return t
 
 
@@ -723,7 +719,6 @@ def _refresh_level_local(
 
     import pyarrow.parquet as _pq
 
-    cols = ["zoom", "tile_x", "tile_y", "n_src", "n_px", "px_crc", "payload"]
     want = set(map(tuple, child_set))
     rows = []
     for e in upper_entries:
@@ -748,7 +743,7 @@ def _refresh_level_local(
             if (tx, ty) not in dirty_set
         ]
         if keep_idx:
-            parts.append(ft.take(keep_idx).select(cols).cast(parts[0].schema))
+            parts.append(ft.take(keep_idx).select(_LEVEL_COLS).cast(parts[0].schema))
     tbl = pa.concat_tables(parts) if len(parts) > 1 else parts[0]
     stage = tempfile.mkdtemp(prefix=f"pyr_refresh_z{z}_")
     bounded.write_sorted(tbl, stage, _TILE_KEYS, 1)
@@ -836,7 +831,6 @@ def refresh_pyramid_table(
         tx0, tx1, ty0, ty1 = view[z]
         if tx0 <= tx <= tx1 and ty0 <= ty <= ty1:
             by_z.setdefault(z, set()).add((tx, ty))
-    cols = ["zoom", "tile_x", "tile_y", "n_src", "n_px", "px_crc", "payload"]
     stats: dict = {}
     levels = list(range(zoom, min_zoom - 1, -1))
 
@@ -852,8 +846,7 @@ def refresh_pyramid_table(
             )
         ]
 
-    def _staged_level(z: int, new_rows, aff: list[dict]):
-        staged = new_rows.select(*cols)
+    def _staged_level(z: int, staged, aff: list[dict]):
         if aff:
             tiles_df = spark.createDataFrame(
                 sorted(by_z[z]), "tile_x long, tile_y long"
@@ -861,7 +854,7 @@ def refresh_pyramid_table(
             keep = (
                 t.read(spark, [_os.path.join(t.path, e["path"]) for e in aff])
                 .join(F.broadcast(tiles_df), ["tile_x", "tile_y"], "left_anti")
-                .select(*cols)
+                .select(*_LEVEL_COLS)
             )
             staged = staged.unionByName(keep)
         return staged
@@ -893,12 +886,12 @@ def refresh_pyramid_table(
             stats[z] = {"dirty": 0, "files_rewritten": 0}
             continue
         if z == zoom:
-            new_rows = (
+            new_rows = _as_level(
                 render_dirty_tiles(
                     spark, chunk_table_path, bbox, tiles, z, tile_px, base_level, fmt
-                )
-                .withColumnRenamed("n_ways", "n_src")
-                .withColumn("zoom", F.lit(z).cast("long"))
+                ),
+                z,
+                "n_ways",
             )
         else:
             child_set = [
@@ -929,11 +922,7 @@ def refresh_pyramid_table(
                 # no file of the level above can hold a child, and Spark
                 # cannot read zero paths
                 children = spark.createDataFrame([], "tile_x long, tile_y long, payload binary")
-            new_rows = (
-                overzoom_tiles(children, tile_px, fmt)
-                .withColumnRenamed("n_children", "n_src")
-                .withColumn("zoom", F.lit(z).cast("long"))
-            )
+            new_rows = _as_level(overzoom_tiles(children, tile_px, fmt), z, "n_children")
         aff = _aff_files(z, tiles)
         stage = tempfile.mkdtemp(prefix=f"pyr_refresh_z{z}_")
         _write_staged(_staged_level(z, new_rows, aff), stage, len(tiles))
@@ -1246,8 +1235,6 @@ def render_polygon_tiles(
     Input: a relation chunk table path (manifest cover-range pruning +
     first-outer-vertex viewport anchor, mirroring the way-table S5 read)
     or a pre-assembled `polys` DataFrame."""
-    import zlib
-
     scale = tile_px << zoom
     tp = tile_px
     tx0, tx1, ty0, ty1 = bbox_tile_range(bbox, zoom, tile_px)

@@ -19,8 +19,6 @@ STATE_SCHEMA = "n long, total double, last_us long"
 
 
 def _update_user(key, pdfs, state):
-    from pyspark.sql.streaming.state import GroupStateTimeout  # noqa: F401
-
     # GroupState.get is a PROPERTY in pyspark 4.x (state.get() would call
     # the returned tuple); only reachable when a key spans micro-batches
     n, total, last_us = state.get if state.exists else (0, 0.0, 0)

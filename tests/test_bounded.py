@@ -108,14 +108,16 @@ def test_write_sorted_empty_table_writes_nothing(tmp_path):
 def test_staging_rule_lives_in_bounded():
     """No COORDS_* environment knob anywhere in the package, every Arrow
     collect goes through bounded.bounded_arrow, every icepick table read
-    in the operators and the streaming layer goes through
-    IcepickTable.read, the streaming layer reads no whole entity store
+    goes through IcepickTable.read (no read.parquet at all in the
+    operators and the streaming layer, and none of data_paths anywhere in
+    the package), the streaming layer reads no whole entity store
     (a per-batch store read is id-range-pruned:
     entity_store.read_entities_for_ids), and no catch-all handler
     (`except Exception`, `except BaseException`, bare `except:`) can send
     a failed driver path down the distributed one."""
     to_arrow = re.compile(r"\.toArrow\(")
     read_parquet = re.compile(r"read\.parquet\(")
+    read_data_paths = re.compile(r"read\.parquet\(\*.*\bdata_paths\(")
     catch_all = re.compile(r"\bexcept\b\s*(:|[^:#]*\b(Exception|BaseException)\b)")
     offenders = []
     for path in sorted(_PKG.rglob("*.py")):
@@ -128,6 +130,10 @@ def test_staging_rule_lives_in_bounded():
             if rel.startswith(("operators/", "streaming/")) and read_parquet.search(line):
                 offenders.append(
                     f"{rel}:{no}: read.parquet outside IcepickTable.read: {line.strip()}"
+                )
+            if read_data_paths.search(line):
+                offenders.append(
+                    f"{rel}:{no}: icepick read outside IcepickTable.read: {line.strip()}"
                 )
             if rel.startswith("streaming/") and "read_entity_store(" in line:
                 offenders.append(f"{rel}:{no}: unpruned store read: {line.strip()}")

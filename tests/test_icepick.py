@@ -8,7 +8,6 @@ import os
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
-from pyspark.sql import functions as F
 
 from coords_spark.sources.icepick import IcepickTable
 
@@ -200,7 +199,8 @@ def table_kinds(spark, tmp_path_factory):
     from test_odiff import _batches, _build_world
 
     from coords_spark.fixtures import gen_nodes, gen_ways
-    from coords_spark.operators import geometry, render, resolve, tiling, update
+    from coords_spark.fixtures.lines import LONDON, line_table, way_chunks
+    from coords_spark.operators import render, update
     from coords_spark.streaming import update_stream as US
 
     d = tmp_path_factory.mktemp("kinds")
@@ -219,24 +219,15 @@ def table_kinds(spark, tmp_path_factory):
         rel_locator=update._locator_path(rel_table),
     )
 
-    nodes = spark.createDataFrame(gen_nodes(2000))
-    ways = spark.createDataFrame(gen_ways(300, 2000))
-    g = geometry.with_geometry_cell(
-        geometry.with_envelope(resolve.resolve_ways(ways, nodes))
-    ).withColumn("nbytes", (F.size("pts") * 8 + 64).cast("long"))
-    chunked = tiling.with_chunk(g, tiling.compute_split_set(g, max_bytes=64 * 1024))
     tiles = str(d / "tiles")
-    tiling.materialize_chunk_table(
-        chunked.select(
-            "way_id", "cell", "chunk_id", "pts",
-            F.expr("pts[0].lat").alias("lat"), F.expr("pts[0].lon").alias("lon"),
-        ),
+    line_table(
         tiles,
-        key_col="way_id",
+        way_chunks(
+            spark.createDataFrame(gen_ways(300, 2000)), spark.createDataFrame(gen_nodes(2000))
+        ),
     )
     kinds["pyramid"] = str(d / "pyramid")
-    bbox = (int(50.0e7), int(-2.0e7), int(53.0e7), int(1.8e7))
-    render.build_pyramid_table(spark, tiles, kinds["pyramid"], bbox, 8, 6, 256)
+    render.build_pyramid_table(spark, tiles, kinds["pyramid"], LONDON, 8, 6, 256)
 
     stage = d / "ts_stage"
     stage.mkdir()

@@ -261,7 +261,13 @@ def test_render_read_matches_bruteforce(spark, engine_result, fetch_path):
 
 
 def test_render_read_empty_viewport(spark, engine_result, fetch_path):
+    """A viewport whose pruned files hold no anchor inside it: the files'
+    [chunk_min, chunk_max] ranges over-cover it, so the scan keeps some
+    files, and the exact anchor filter drops every row they hold. The
+    zero-path miss (a LocalTableScan of the manifest schema) is
+    test_render_read_driver_path_matches_spark[empty]."""
     table, _, out = engine_result
+    assert len(ingest.viewport_scan(out, _PACIFIC_BBOX, 10, BASE_LEVEL).paths) > 0
     df = ingest.render_read(spark, out, _PACIFIC_BBOX, zoom=10, base_level=BASE_LEVEL)
     assert df.count() == 0
     assert "image_id" in df.columns  # schema survives the empty path

@@ -10,6 +10,7 @@ import zlib
 import numpy as np
 from pyspark.sql import functions as F
 
+from coords_spark.fixtures.lines import LONDON, line_table, way_chunks
 from coords_spark.kernels import codec, mercator, raster
 
 
@@ -126,28 +127,18 @@ import pytest
 def chunk_table(spark, tmp_path_factory):
     """Shared chunk table + scalar-resolved rows for the render tests."""
     from coords_spark.fixtures import gen_nodes, gen_ways
-    from coords_spark.operators import geometry, resolve, tiling
 
-    nodes = spark.createDataFrame(gen_nodes(2000))
-    ways = spark.createDataFrame(gen_ways(300, 2000))
-    resolved = resolve.resolve_ways(ways, nodes)
-    g = geometry.with_geometry_cell(geometry.with_envelope(resolved)).withColumn(
-        "nbytes", (F.size("pts") * 8 + 64).cast("long")
-    )
-    split = tiling.compute_split_set(g, max_bytes=64 * 1024)
-    chunked = tiling.with_chunk(g, split)
-    rows = chunked.select(
-        "way_id", "cell", "chunk_id", "pts",
-        F.expr("pts[0].lat").alias("lat"), F.expr("pts[0].lon").alias("lon"),
+    chunked = way_chunks(
+        spark.createDataFrame(gen_ways(300, 2000)), spark.createDataFrame(gen_nodes(2000))
     )
     path = str(tmp_path_factory.mktemp("render") / "tiles")
-    tiling.materialize_chunk_table(rows, path, key_col="way_id")
-    resolved_rows = [(r["way_id"], r["pts"]) for r in resolved.collect()]
+    line_table(path, chunked)
+    resolved_rows = [(r["way_id"], r["pts"]) for r in chunked.select("way_id", "pts").collect()]
     return path, resolved_rows
 
 
 # the chunk_table world's viewport: 15 tiles at zoom 8
-_VIEW = (int(50.0e7), int(-2.0e7), int(53.0e7), int(1.8e7))
+_VIEW = LONDON
 
 
 @pytest.mark.parametrize("path_kind", ["default", "distributed"])
@@ -320,19 +311,30 @@ def _tiles_arrow(df):
     return df.toArrow().sort_by([("tile_x", "ascending"), ("tile_y", "ascending")])
 
 
-@pytest.mark.parametrize("case", ["in_cap", "empty", "over_rows_cap", "over_bytes_cap"])
+# a viewport around cluster 0 of the cluster world, clear of the others
+_CLUSTER0_VIEW = (505_000_000, -1_610_000_000, 525_000_000, -1_480_000_000)
+
+
+@pytest.mark.parametrize(
+    "case", ["in_cap", "empty", "pruned", "over_rows_cap", "over_bytes_cap"]
+)
 def test_render_driver_path_matches_spark(
     spark, chunk_table, force_distributed, monkeypatch, request, tmp_path, case
 ):
     """The driver render and the Spark render return the same Arrow
     output: field names and types, rows and payload bytes. An empty
     mid-Pacific viewport of the local refresh world prunes to zero files
-    and opens none; a viewport whose pruned rows exceed SMALL_REWRITE_ROWS
-    or whose pruned files exceed SMALL_REWRITE_BYTES takes the Spark path."""
+    and opens none; the cluster world chunked at 2 KiB spreads its
+    clusters over files with disjoint chunk ranges, and a viewport on
+    cluster 0 keeps some of them and prunes the rest (at the refresh
+    world's 32 KiB every file holds chunk 0 and none is pruned); a
+    viewport whose pruned rows exceed SMALL_REWRITE_ROWS or whose pruned
+    files exceed SMALL_REWRITE_BYTES takes the Spark path."""
     import pyarrow.parquet as pq
 
     from coords_spark import bounded
     from coords_spark.operators import ingest, render
+    from coords_spark.sources.icepick import IcepickTable
 
     path, _ = chunk_table
     zoom, tp = 8, 256
@@ -342,7 +344,19 @@ def test_render_driver_path_matches_spark(
             request.getfixturevalue("refresh_world")["paths"]["pre"], str(tmp_path / "finest")
         )
         bbox = (int(-45.0e7), int(-155.0e7), int(-44.0e7), int(-154.0e7))
+    if case == "pruned":
+        nodes_t, ways_t = _cluster_world()
+        path = str(tmp_path / "lines")
+        line_table(
+            path,
+            way_chunks(
+                spark.createDataFrame(ways_t), spark.createDataFrame(nodes_t), max_bytes=2048
+            ),
+        )
+        bbox = _CLUSTER0_VIEW
     scan = ingest.viewport_scan(path, bbox, zoom)
+    if case == "pruned":
+        assert 0 < len(scan.paths) < len(IcepickTable(path).data_paths())
     real = raster.segment_tile_pieces
     fanouts = []
 
@@ -365,7 +379,7 @@ def test_render_driver_path_matches_spark(
         monkeypatch.setattr(
             bounded, "SMALL_REWRITE_BYTES", sum(map(os.path.getsize, scan.paths)) - 1
         )
-    driver_renders = int(case in ("in_cap", "empty"))
+    driver_renders = int(case in ("in_cap", "empty", "pruned"))
     got = _tiles_arrow(render.render_tile_images(spark, path, bbox, zoom, tp))
     assert len(fanouts) == driver_renders
     force_distributed()
@@ -458,7 +472,7 @@ def test_render_pyramid_end_to_end(spark, chunk_table):
     from coords_spark.operators import render
 
     path, resolved_rows = chunk_table
-    bbox = (int(50.0e7), int(-2.0e7), int(53.0e7), int(1.8e7))
+    bbox = LONDON
     zoom, min_zoom, tp = 8, 6, 256
     got = render.render_tile_pyramid(spark, path, bbox, zoom, min_zoom, tp).collect()
     by_zoom: dict[int, dict] = {}
@@ -501,7 +515,7 @@ def test_dirty_tiles(spark, tmp_path):
     ways' old+new geometry, (c) each ancestor level is exactly the child
     level shifted right."""
     from coords_spark.fixtures import gen_nodes, gen_ways
-    from coords_spark.operators import geometry, render, resolve, tiling
+    from coords_spark.operators import render
 
     nodes_t, ways_t = gen_nodes(800), gen_ways(120, 800)
     # drop the fixture's 2000-ref mega-way: world-spanning segment
@@ -527,25 +541,16 @@ def test_dirty_tiles(spark, tmp_path):
     )
 
     zoom, min_zoom, tp = 10, 8, 256
-    bbox = (int(50.0e7), int(-2.0e7), int(53.0e7), int(1.8e7))
+    bbox = LONDON
     pre_nodes, post_nodes = spark.createDataFrame(nodes_t), spark.createDataFrame(post_t)
     ways = spark.createDataFrame(ways_t)
 
     rendered = {}
     geoms = {}
     for name, nd in (("pre", pre_nodes), ("post", post_nodes)):
-        resolved = resolve.resolve_ways(ways, nd)
-        g = geometry.with_geometry_cell(geometry.with_envelope(resolved)).withColumn(
-            "nbytes", (F.size("pts") * 8 + 64).cast("long")
-        )
-        split = tiling.compute_split_set(g, max_bytes=64 * 1024)
-        chunked = tiling.with_chunk(g, split)
-        rows = chunked.select(
-            "way_id", "cell", "chunk_id", "pts",
-            F.expr("pts[0].lat").alias("lat"), F.expr("pts[0].lon").alias("lon"),
-        )
+        chunked = way_chunks(ways, nd)
         path = str(tmp_path / name)
-        tiling.materialize_chunk_table(rows, path, key_col="way_id")
+        line_table(path, chunked)
         rendered[name] = {
             (r["zoom"], r["tile_x"], r["tile_y"]): (r["n_src"], r["n_px"], r["px_crc"])
             for r in render.render_tile_pyramid(
@@ -554,7 +559,7 @@ def test_dirty_tiles(spark, tmp_path):
         }
         geoms[name] = {
             r["way_id"]: [(p["lat"], p["lon"]) for p in r["pts"]]
-            for r in resolved.filter(
+            for r in chunked.filter(
                 F.col("way_id").isin([int(w) for w in affected])
             ).collect()
         }
@@ -625,7 +630,7 @@ def test_render_dirty_tiles_worklist(spark, chunk_table):
     from coords_spark.sources.icepick import IcepickTable
 
     path, _resolved_rows = chunk_table
-    bbox = (int(50.0e7), int(-2.0e7), int(53.0e7), int(1.8e7))
+    bbox = LONDON
     zoom, tp = 8, 256
     full = {
         (r["tile_x"], r["tile_y"]): r
@@ -693,7 +698,7 @@ def test_build_pyramid_table(spark, chunk_table, tmp_path):
     from coords_spark.sources.icepick import IcepickTable
 
     path, _ = chunk_table
-    bbox = (int(50.0e7), int(-2.0e7), int(53.0e7), int(1.8e7))
+    bbox = LONDON
     zoom, min_zoom, tp = 8, 6, 256
     want = {
         (r["zoom"], r["tile_x"], r["tile_y"]): (
@@ -741,20 +746,14 @@ def _sink_rows(spark, path):
     }
 
 
-@pytest.fixture(scope="module")
-def refresh_world(spark, tmp_path_factory):
-    """Pre and post chunk tables of a small local world, and the dirty
-    tile list between them: the shared input of the refresh tests."""
+def _cluster_world():
+    """(nodes, ways) pa.Tables of a purpose-built LOCAL world: 8 clusters
+    of short chain-ways, each confined to its own lon band (gen_ways'
+    random global refs would make every way span the planet, dirtying
+    every x range — a real replication diff is local, and locality is
+    exactly what the refresh blast-radius assertion measures)."""
     import pyarrow as pa
 
-    from coords_spark.operators import geometry, render, resolve, tiling
-
-    tmp_path = tmp_path_factory.mktemp("refresh_world")
-    # purpose-built LOCAL world: 8 clusters of short chain-ways, each
-    # confined to its own lon band (gen_ways' random global refs would
-    # make every way span the planet, dirtying every x range — a real
-    # replication diff is local, and locality is exactly what the
-    # blast-radius assertion below measures)
     node_rows, way_rows = [], []
     nid, wid = 1, 1
     for c in range(8):
@@ -786,7 +785,20 @@ def refresh_world(spark, tmp_path_factory):
             "refs": pa.array([r[2] for r in way_rows], pa.list_(pa.int64())),
         }
     )
-    way_refs = {r[0]: list(r[2]) for r in way_rows}
+    return nodes_t, ways_t
+
+
+@pytest.fixture(scope="module")
+def refresh_world(spark, tmp_path_factory):
+    """Pre and post chunk tables of the local cluster world, and the dirty
+    tile list between them: the shared input of the refresh tests."""
+    import pyarrow as pa
+
+    from coords_spark.operators import render
+
+    tmp_path = tmp_path_factory.mktemp("refresh_world")
+    nodes_t, ways_t = _cluster_world()
+    way_refs = dict(zip(ways_t.column("id").to_pylist(), ways_t.column("refs").to_pylist()))
     anchors = {refs[0] for refs in way_refs.values()}
     node_ids = nodes_t.column("id").to_numpy()
     lat = nodes_t.column("lat").to_numpy().copy()
@@ -808,19 +820,10 @@ def refresh_world(spark, tmp_path_factory):
     ways = spark.createDataFrame(ways_t)
     paths, geoms = {}, {}
     for name, nd_t in (("pre", nodes_t), ("post", post_t)):
-        nd = spark.createDataFrame(nd_t)
-        resolved = resolve.resolve_ways(ways, nd)
-        g = geometry.with_geometry_cell(geometry.with_envelope(resolved)).withColumn(
-            "nbytes", (F.size("pts") * 8 + 64).cast("long")
-        )
-        split = tiling.compute_split_set(g, max_bytes=32 * 1024)
-        rows = tiling.with_chunk(g, split).select(
-            "way_id", "cell", "chunk_id", "pts",
-            F.expr("pts[0].lat").alias("lat"), F.expr("pts[0].lon").alias("lon"),
-        )
+        chunked = way_chunks(ways, spark.createDataFrame(nd_t), max_bytes=32 * 1024)
         paths[name] = str(tmp_path / name)
-        tiling.materialize_chunk_table(rows, paths[name], key_col="way_id")
-        geoms[name] = resolved.filter(
+        line_table(paths[name], chunked)
+        geoms[name] = chunked.filter(
             F.col("way_id").isin([int(w) for w in affected])
         ).select("way_id", "pts")
 
@@ -886,7 +889,7 @@ def test_build_pyramid_forced_distributed_matches_default(
     from coords_spark.operators import render
 
     path, _ = chunk_table
-    bbox = (int(50.0e7), int(-2.0e7), int(53.0e7), int(1.8e7))
+    bbox = LONDON
     args = (bbox, 8, 6, 256)
     default = str(tmp_path / "default")
     render.build_pyramid_table(spark, path, default, *args)
@@ -1016,7 +1019,7 @@ def test_vector_tiles(spark, chunk_table):
     from coords_spark.operators import render
 
     path, resolved_rows = chunk_table
-    bbox = (int(50.0e7), int(-2.0e7), int(53.0e7), int(1.8e7))
+    bbox = LONDON
     zoom, tp = 8, 256
     got = {
         (r["tile_x"], r["tile_y"]): r
@@ -1291,7 +1294,7 @@ def test_vector_tile_pyramid_lod(spark, chunk_table):
     from coords_spark.operators import render
 
     path, resolved_rows = chunk_table
-    bbox = (int(50.0e7), int(-2.0e7), int(53.0e7), int(1.8e7))
+    bbox = LONDON
     zoom, min_zoom = 8, 6
 
     # the organic fixture has no sub-2px ways even at z6; inject one whose
@@ -1416,7 +1419,7 @@ def test_render_map_tiles_composite(spark, chunk_table):
 
     path, resolved_rows = chunk_table
     mp, _rel, _rw = _poly_fixture(spark, 15)
-    bbox = (int(50.0e7), int(-2.0e7), int(53.0e7), int(1.8e7))
+    bbox = LONDON
     zoom, tp = 8, 256
     ways = spark.createDataFrame(
         [(w, [{"lat": p["lat"], "lon": p["lon"]} for p in pts])
