@@ -550,7 +550,7 @@ def main() -> None:
                 .select(*ent_cols)
                 .withColumn("version", F.lit(2 + b))
             )
-            ES2.upsert_entities(spark, store, ups, group=f"d{b}")
+            ES2.upsert_entities(spark, store, ups.toArrow(), group=f"d{b}")
         queries["update_stream_fragment"] = time.time() - t0
         st = _IT2(store)
         files_frag, vers_frag = len(st.files()), len(st.versions())

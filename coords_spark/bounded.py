@@ -35,14 +35,13 @@ DIFF_ID_COLLECT_CAP = 500_000
 # second rollup job. Bigger per-cell tables keep the distributed rollup.
 PER_CELL_COLLECT_CAP = 4_000_000
 
-# a diff-sized rewrite (the streaming steady state) writes its staged
-# rows as ONE sorted file — no repartitionByRange, so no boundary-sampling
-# re-pass and one job instead of four. Past these thresholds the range
-# write returns. The same two caps are the shared viewport gate
-# (ingest.ViewportScan.read_arrow): a viewport whose pruned files hold at
-# most SMALL_REWRITE_ROWS manifest rows and SMALL_REWRITE_BYTES on-disk
-# bytes is read on the driver with pyarrow, by the viewport fetch
-# (ingest.render_read) and the viewport tile render (render_tile_images).
+# the driver-read gate (fits_driver): a diff-sized rewrite (the streaming
+# steady state) writes its staged rows as ONE sorted file — no
+# repartitionByRange, so no boundary-sampling re-pass and one job instead
+# of four — and pruned files this small are read on the driver with
+# pyarrow: the viewport reads (ingest.ViewportScan.read_arrow), the
+# entity-store id reads (entity_store.read_ids_arrow) and the locator
+# lookups. Past either threshold the Spark path runs.
 SMALL_REWRITE_BYTES = 48 << 20
 SMALL_REWRITE_ROWS = 200_000
 
@@ -84,6 +83,16 @@ def bounded_arrow(df: DataFrame, cap: int | None = None) -> pa.Table | None:
         return df.toArrow()
     tbl = df.limit(cap + 1).toArrow()
     return tbl if tbl.num_rows <= cap else None
+
+
+def fits_driver(paths: list[str], rows: int) -> bool:
+    """Whether the data files `paths`, holding `rows` rows, are small
+    enough to read or rewrite on the driver: at most SMALL_REWRITE_ROWS
+    rows and SMALL_REWRITE_BYTES on-disk bytes. The one gate of every
+    driver-side file read and staged rewrite."""
+    if rows > SMALL_REWRITE_ROWS:
+        return False
+    return sum(map(os.path.getsize, paths)) <= SMALL_REWRITE_BYTES
 
 
 def spark_schema(schema: pa.Schema) -> StructType:

@@ -137,27 +137,47 @@ def id_frame(spark, ids, name: str = "id") -> DataFrame:
     return bounded.arrow_frame(spark, pa.table({name: pa.array(ids, pa.int64())}))
 
 
+def _pruned_paths(table_path: str, ids) -> tuple[str, IcepickTable, list[str]]:
+    """(id_col, store, data files whose manifest chunk range can hold one
+    of `ids`). A DataFrame's chunk set is collected as merged ranges
+    (diff-bounded, like every planning list); an id array's is ids >> shift,
+    with no Spark job."""
+    id_col, id_shift = load_contract(table_path)
+    t = IcepickTable(table_path)
+    if isinstance(ids, DataFrame):
+        chunks = chunk_set_for_ids(ids, id_shift)
+    else:
+        chunks = np.unique(np.asarray(ids, dtype=np.int64) >> id_shift).tolist()
+    return id_col, t, t.data_paths_ranges(_merge_ranges(chunks))
+
+
 def read_entities_for_ids(
     spark, table_path: str, ids_df, with_chunk: bool = False
 ) -> tuple[DataFrame, int]:
     """Pruned store read: only files whose manifest chunk range can hold
-    one of the ids are opened (O(diff ids / 2^shift) files, never
-    table-proportional). Returns (rows, n_files_read); rows are NOT
-    filtered to the ids — callers semi-join, keeping the filter inside the
-    plan. `ids_df` is a one-column DataFrame, whose chunk set is collected
-    driver-side as merged ranges (bounded by the diff, the same contract
-    as every other planning list in this engine), or a sorted int64 id
-    array already on the driver, whose chunk ranges are ids >> shift with
-    no Spark job."""
-    _id_col, id_shift = load_contract(table_path)
-    t = IcepickTable(table_path)
-    if isinstance(ids_df, DataFrame):
-        chunks = chunk_set_for_ids(ids_df, id_shift)
-    else:
-        chunks = np.unique(np.asarray(ids_df, dtype=np.int64) >> id_shift).tolist()
-    paths = t.data_paths_ranges(_merge_ranges(chunks))
+    one of the ids (a one-column DataFrame or a sorted int64 id array) are
+    opened, O(diff ids / 2^shift) files, never table-proportional. Returns
+    (rows, n_files_read); rows are NOT filtered to the ids — callers
+    semi-join, keeping the filter inside the plan."""
+    _id_col, t, paths = _pruned_paths(table_path, ids_df)
     df = t.read(spark, paths)
     return (df if with_chunk else df.drop("chunk_id")), len(paths)
+
+
+def read_ids_arrow(table_path: str, ids) -> tuple[pa.Table | None, int]:
+    """The zero-job twin of read_entities_for_ids for a sorted int64 id
+    array on the driver: the same pruned files read with pyarrow and
+    filtered to `ids`, without chunk_id. Returns (rows, n_files_read);
+    rows is None when the pruned files fail bounded.fits_driver, and the
+    caller then reads them with Spark."""
+    id_col, t, paths = _pruned_paths(table_path, ids)
+    if not bounded.fits_driver(paths, t.rows_of(paths)):
+        return None, len(paths)
+    tbl = t.read_arrow(paths).drop_columns(["chunk_id"])
+    keep = pc.is_in(
+        tbl.column(id_col), value_set=pa.array(ids, tbl.schema.field(id_col).type)
+    )
+    return tbl.filter(keep), len(paths)
 
 
 def upsert_entities(
@@ -181,32 +201,24 @@ def upsert_entities(
     holds no existing file). Delete-only diffs pass upserts=None.
     `deleted_ids` is a one-column DataFrame or an int64 id array.
 
-    Up to bounded.DIFF_ID_COLLECT_CAP rows the diff is planned on the
-    driver: DataFrame inputs are collected in ONE Arrow query (upserts and
-    deleted ids side by side, told apart by a flag column), driver-side
-    inputs are not collected at all. Past the cap the distributed
-    planning path runs."""
+    The form of the inputs picks the plan. Driver-side inputs (an Arrow
+    table, an id array) are planned on the driver and nothing is
+    collected; any DataFrame input runs the distributed plan, which never
+    collects the rows either."""
     id_col, id_shift = load_contract(table_path)
     t = IcepickTable(table_path)
-    diff = _collect_diff(upserts, deleted_ids, id_col)
-    if diff is not None:
-        up_tbl, del_ids = diff
+    if not isinstance(upserts, DataFrame) and not isinstance(deleted_ids, DataFrame):
+        up_tbl = upserts
         if up_tbl is None:
             up_tbl = t.arrow_schema().empty_table().drop_columns(["chunk_id"])
-        chunk_arr = pc.shift_right(up_tbl.column(id_col).cast(pa.int64()), id_shift)
-        if "chunk_id" in up_tbl.column_names:
-            new_tbl = up_tbl.set_column(
-                up_tbl.column_names.index("chunk_id"), "chunk_id", chunk_arr
-            )
-        else:
-            new_tbl = up_tbl.append_column("chunk_id", chunk_arr)
-        parts = [up_tbl.column(id_col)] + ([] if del_ids is None else [del_ids])
-        all_ids = pa.chunked_array(
-            [a for p in parts for a in pa.chunked_array(p).cast(pa.int64()).chunks],
-            pa.int64(),
+        up_ids = up_tbl.column(id_col)
+        new_tbl = up_tbl.append_column(
+            "chunk_id", pc.shift_right(up_ids.cast(pa.int64()), id_shift)
         )
-        ids = id_array(all_ids).tolist()
-        if all_ids.null_count:
+        ids = np.union1d(
+            id_array(up_ids), id_array([] if deleted_ids is None else deleted_ids)
+        ).tolist()
+        if up_ids.null_count:
             ids.append(None)
         return _apply_way_rewrite(
             spark,
@@ -244,46 +256,3 @@ def upsert_entities(
         stat="affected_entities",
         old_chunks=chunk_set_for_ids(aff, id_shift, id_col),
     )
-
-
-_DELETED = "_deleted"
-
-
-def _collect_diff(upserts, deleted_ids, id_col):
-    """(upsert rows as Arrow or None, deleted ids as an Arrow array or
-    None) when the diff holds at most bounded.DIFF_ID_COLLECT_CAP rows,
-    else None. DataFrame inputs are collected in one query: the deleted
-    ids ride beside the upserts under a boolean flag column."""
-    cap = bounded.DIFF_ID_COLLECT_CAP
-    up_df = upserts if isinstance(upserts, DataFrame) else None
-    del_df = deleted_ids if isinstance(deleted_ids, DataFrame) else None
-    if up_df is not None and del_df is not None:
-        id_type = up_df.schema[id_col].dataType
-        flagged = up_df.withColumn(_DELETED, F.lit(False)).unionByName(
-            del_df.select(
-                F.col(del_df.columns[0]).cast(id_type).alias(id_col),
-                F.lit(True).alias(_DELETED),
-            ),
-            allowMissingColumns=True,
-        )
-        tbl = bounded.bounded_arrow(flagged, cap)
-        if tbl is None:
-            return None
-        deleted = tbl.column(_DELETED)
-        upserts = tbl.filter(pc.invert(deleted)).drop_columns([_DELETED])
-        deleted_ids = tbl.filter(deleted).column(id_col)
-    elif up_df is not None:
-        upserts = bounded.bounded_arrow(up_df, cap)
-        if upserts is None:
-            return None
-    elif del_df is not None:
-        tbl = bounded.bounded_arrow(del_df.select(del_df.columns[0]), cap)
-        if tbl is None:
-            return None
-        deleted_ids = tbl.column(0)
-    if deleted_ids is not None and not isinstance(deleted_ids, (pa.Array, pa.ChunkedArray)):
-        deleted_ids = pa.array(deleted_ids, pa.int64())
-    n = (0 if upserts is None else upserts.num_rows) + (
-        0 if deleted_ids is None else len(deleted_ids)
-    )
-    return (upserts, deleted_ids) if n <= cap else None

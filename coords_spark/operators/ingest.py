@@ -12,7 +12,6 @@ Stages (all DataFrame ops; per-row math in Arrow-batched numpy):
 
 from __future__ import annotations
 
-import os
 from typing import NamedTuple
 
 import numpy as np
@@ -154,11 +153,9 @@ class ViewportScan(NamedTuple):
         by anchor_mask. `columns` projects the read (None = every column)
         and must include lat and lon. None when the pruned files hold more
         than bounded.SMALL_REWRITE_ROWS manifest rows or more than
-        bounded.SMALL_REWRITE_BYTES on disk — the one rule that bounds
-        every driver-side viewport read."""
-        if self.rows > bounded.SMALL_REWRITE_ROWS:
-            return None
-        if sum(map(os.path.getsize, self.paths)) > bounded.SMALL_REWRITE_BYTES:
+        bounded.SMALL_REWRITE_BYTES on disk (bounded.fits_driver, the gate
+        of every driver-side file read)."""
+        if not bounded.fits_driver(self.paths, self.rows):
             return None
         tbl = self.table.read_arrow(self.paths, columns)
         return tbl.filter(self.anchor_mask(tbl.column("lat"), tbl.column("lon")))
@@ -189,8 +186,7 @@ def viewport_scan(
     t = IcepickTable(table_path)
     man = t.current_manifest()
     paths = t.data_paths_ranges(ranges, version=man["version"])
-    kept = set(paths)
-    rows = sum(e["rows"] for e in man["files"] if os.path.join(t.path, e["path"]) in kept)
+    rows = t.rows_of(paths, version=man["version"])
     return ViewportScan(t, paths, rows, (lat0, lat1), (lon0, lon1))
 
 

@@ -173,41 +173,23 @@ def _locator_old_lists(
     spark, table_path: str, aff: DataFrame | None, aff_keys: list, key: str
 ) -> tuple[dict, int]:
     """(key -> old chunk_ids, files_read) for the diff's keys from the
-    `_locator` sidecar. The pruned file set is O(diff keys / 2^shift);
-    when those files are also small (the streaming steady state) they are
-    read DRIVER-SIDE with pyarrow — zero Spark jobs, and only the rows
-    holding an affected key reach Python — else through the pruned Spark
-    read + semi-join collect (post-compact locators can be one large
-    file; scanning that belongs on executors). `aff` None means the keys
-    exist only as `aff_keys`."""
+    `_locator` entity store: read with pyarrow under the driver-read gate
+    (entity_store.read_ids_arrow, zero Spark jobs), else through the
+    pruned Spark read + semi-join collect (post-compact locators can be
+    one large file; scanning that belongs on executors)."""
     from coords_spark.operators import entity_store as ES
 
     loc_path = _locator_path(table_path)
-    _id_col, loc_shift = ES.load_contract(loc_path)
-    loc_t = IcepickTable(loc_path)
-    ranges = ES._merge_ranges(
-        sorted({int(k) >> loc_shift for k in aff_keys if k is not None})
-    )
-    paths = loc_t.data_paths_ranges(ranges)
-    if not paths:
-        return {}, 0
-    if sum(os.path.getsize(p) for p in paths) <= bounded.SMALL_REWRITE_BYTES:
-        import pyarrow.parquet as _pq
-
-        keyset = pa.array([k for k in aff_keys if k is not None], pa.int64())
-        old_map: dict = {}
-        for p in paths:
-            lt = _pq.read_table(p, columns=[key, "chunk_ids"])
-            lt = lt.filter(pc.is_in(lt.column(key), value_set=keyset))
-            for kk, cl in zip(
-                lt.column(key).to_pylist(), lt.column("chunk_ids").to_pylist()
-            ):
-                old_map[kk] = list(cl)
-        return old_map, len(paths)
+    ids = ES.id_array([k for k in aff_keys if k is not None])
+    tbl, n_files = ES.read_ids_arrow(loc_path, ids)
+    if tbl is not None:
+        keys, lists = tbl.column(key).to_pylist(), tbl.column("chunk_ids").to_pylist()
+        return dict(zip(keys, lists)), n_files
     if aff is None:
-        aff = ES.id_frame(spark, aff_keys, key)
-    rows = loc_t.read(spark, paths).join(F.broadcast(aff), key, "semi").collect()
-    return {r[0]: list(r[1]) for r in rows}, len(paths)
+        aff = ES.id_frame(spark, ids, key)
+    rows, n_files = ES.read_entities_for_ids(spark, loc_path, ids)
+    rows = rows.join(F.broadcast(aff), key, "semi").collect()
+    return {r[0]: list(r[1]) for r in rows}, n_files
 
 
 def _stage_small_rewrite_arrow(
@@ -270,7 +252,9 @@ def _apply_way_rewrite(
 
     A caller that holds the diff on the driver passes `aff_keys` and
     `new_tbl` (with `n_aff`) and may leave `aff`/`new_rows` None: a
-    DataFrame of either is then built only if the range write runs.
+    DataFrame of either is then built only if the range write runs. Only
+    rows on the driver are staged driver-side: an entity-store caller's
+    DataFrame `new_rows` keep the range write and are never collected.
 
     Locator crash ordering: the lookup's result is committed back as the
     UNION of old and new chunk ids BEFORE the table commit, and trimmed to
@@ -352,23 +336,12 @@ def _apply_way_rewrite(
     # on way_id — a file's chunk range may span untouched chunks too);
     # re-chunked affected ways append beside existing coverage (reads
     # union overlapping ranges, so untouched files stay untouched)
-    replace_bytes = sum(os.path.getsize(p) for p in replace_paths)
-    small = (
-        replace_bytes <= bounded.SMALL_REWRITE_BYTES and n_aff <= bounded.SMALL_REWRITE_ROWS
-    )
-    if small and new_tbl is None:
-        new_tbl = bounded.bounded_arrow(new_rows)  # None: range write below
-    if small and new_tbl is not None:
-        # diff-sized rewrite (the streaming steady state): survivors + new
-        # rows land as ONE sorted file, staged DRIVER-SIDE. Everything
-        # involved is bounded by the thresholds (the same diff-bounded
-        # contract as every planning list): the new rows collect as Arrow
-        # (one job — or zero, when the locator branch already did), the
-        # small local replaced files filter with pyarrow. A Spark parquet
+    if new_tbl is not None and bounded.fits_driver(replace_paths, n_aff):
+        # diff-sized rewrite (the streaming steady state): the Arrow new
+        # rows and the small local replaced files, filtered with pyarrow,
+        # land as ONE sorted file staged DRIVER-SIDE. A Spark parquet
         # write job costs ~0.4-0.6 s fixed on local (committer setup, task
-        # temp dirs, renames); this path pays a collect instead.
-        if aff_keys is None:
-            aff_keys = [r[0] for r in aff.collect()]
+        # temp dirs, renames).
         _stage_small_rewrite_arrow(staging, replace_paths, aff_keys, new_tbl, key)
     else:
         from coords_spark.operators import entity_store as ES

@@ -590,6 +590,14 @@ class IcepickTable:
     def total_rows(self) -> int:
         return sum(e["rows"] for e in self.files())
 
+    def rows_of(self, paths: list[str], version: int | None = None) -> int:
+        """Summed manifest row count of the data files `paths` (absolute,
+        as data_paths returns them): a size known before any file opens."""
+        kept = set(paths)
+        return sum(
+            e["rows"] for e in self.files(version) if os.path.join(self.path, e["path"]) in kept
+        )
+
     def verify_checksums(self) -> bool:
         for e in self.files():
             if _sha256_file(os.path.join(self.path, e["path"])) != e["checksum"]:

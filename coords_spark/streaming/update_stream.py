@@ -119,7 +119,13 @@ def apply_diff_batch(
     given; a missing one raises ValueError before any Spark job runs.
     Without a `rel_table`, a given `rel_rindex_store` is still maintained.
     `stats['files_read']` reports the per-step pruned file counts so tests
-    can pin the O(diff) claim."""
+    can pin the O(diff) claim.
+
+    Under bounded.DIFF_ID_COLLECT_CAP the batch is collected once and its
+    sets stay on the driver: ids as sorted arrays, upserts and pruned
+    store rows as Arrow (entity_store.read_ids_arrow), so the index
+    lookups and upserts run no Spark job. Past the cap, or for a store
+    read over the driver-read gate, the sets are DataFrames."""
     _require_rindex(rindex_store, rel_table, rel_rindex_store)
     # consolidate to one final state per (kind, id): replication intervals
     # are already consolidated upstream (one row per changed entity, OSC
@@ -137,13 +143,9 @@ def apply_diff_batch(
         .localCheckpoint()
     )
     stats: dict = {}
-    cap = bounded.DIFF_ID_COLLECT_CAP
-    # ONE collect of the consolidated batch picks the path for every
-    # diff-sized set below: under the cap the id sets are sorted arrays and
-    # the upserts Arrow tables on the driver (pruned reads plan with no
-    # job, each derived set is collected once); past it every set stays a
-    # checkpointed DataFrame
-    bt = bounded.bounded_arrow(b, cap)
+    # ONE collect of the consolidated batch picks the form of every set
+    # below; no derived set is collected again
+    bt = bounded.bounded_arrow(b, bounded.DIFF_ID_COLLECT_CAP)
 
     def _part(kind: int, action: str, cols: list[str]):
         if bt is None:
@@ -175,23 +177,9 @@ def apply_diff_batch(
         df = functools.reduce(DataFrame.unionAll, frames).distinct()
         return df.localCheckpoint() if hold else df
 
-    def _collected(df: DataFrame):
-        """`df` (diff-sized) collected once as Arrow, or None on the
-        distributed path or past the cap."""
-        return None if bt is None else bounded.bounded_arrow(df, cap)
-
-    def _hold(df: DataFrame):
-        """`df` materialized once: an Arrow table under the cap, else a
-        checkpointed DataFrame."""
-        t = _collected(df)
-        return df.localCheckpoint() if t is None else t
-
-    def _id_set(df: DataFrame):
-        """Distinct ids of one-column `df`: a sorted array under the cap,
-        else a checkpointed DataFrame with column 'id'."""
-        df = df.select(F.col(df.columns[0]).alias("id")).distinct()
-        t = _collected(df)
-        return df.localCheckpoint() if t is None else ES.id_array(t.column(0))
+    def _hold(x):
+        """`x` materialized once (a driver table already is)."""
+        return x.localCheckpoint() if isinstance(x, DataFrame) else x
 
     def _refs_ids(*tables):
         """Distinct ids in the `refs` lists of driver-side tables."""
@@ -207,7 +195,7 @@ def apply_diff_batch(
     rel_del = _part(KIND_REL, "delete", ["id"])
     # the DataFrame views of the upsert sets (one local relation each on
     # the driver path)
-    node_up_df, way_up_df, rel_up_df = (_frame(x) for x in (node_up, way_up, rel_up))
+    node_up_df, way_up_df = (_frame(x) for x in (node_up, way_up))
 
     files_read: dict = {}
     stats["files_read"] = files_read
@@ -217,19 +205,24 @@ def apply_diff_batch(
     # PRE-diff rows of the diff's own ways/relations, captured before any
     # store moves (pruned reads — diff-bounded): the reverse-index upserts
     # need the OLD refs, and the dirty log needs pre-diff geometry.
-    def _pruned_rows(store: str, ids, tag: str) -> DataFrame:
-        rows, n = ES.read_entities_for_ids(spark, store, ids)
-        files_read[tag] = n
+    def _pruned_rows(store: str, ids, tag: str):
+        """`store`'s rows with an id in `ids`: Arrow under the driver-read
+        gate (no job), else a DataFrame (pruned read + semi-join)."""
+        if not isinstance(ids, DataFrame):
+            tbl, files_read[tag] = ES.read_ids_arrow(store, ids)
+            if tbl is not None:
+                return tbl
+        rows, files_read[tag] = ES.read_entities_for_ids(spark, store, ids)
         return rows.join(F.broadcast(_frame(ids)), "id", "semi")
 
-    way_old = _hold(_pruned_rows(ways_store, way_ch, "way_old").select("id", "refs"))
+    way_old = _hold(_pruned_rows(ways_store, way_ch, "way_old").select(["id", "refs"]))
 
     # ways whose geometry this batch can change: referencing a changed
     # node in the PRE state (pruned reverse-index lookup; an unchanged way
     # keeps its refs, so post-state hits add nothing new) ∪ the way diff
     # itself
     hit_pre, files_read["rindex_lookup"] = RI.rindex_lookup(spark, rindex_store, node_ch)
-    aff_ids = _id_set(hit_pre.unionAll(_frame(way_ch).select("id")))
+    aff_ids = _union_ids(hit_pre, way_ch, hold=True)
 
     # -- 0. tile-expiry log (MUST commit before the stores: the dirty set
     # needs the PRE-diff geometry, so a replay after a store commit could
@@ -247,7 +240,7 @@ def apply_diff_batch(
             stats["dirty_tiles"] = "replayed"
         else:
             ways0_aff = _hold(
-                _pruned_rows(ways_store, aff_ids, "dirty_ways").select("id", "refs")
+                _pruned_rows(ways_store, aff_ids, "dirty_ways").select(["id", "refs"])
             )
             way_up_aff = way_up_df.join(F.broadcast(_frame(aff_ids)), "id", "semi")
             # node files that can hold any ref of the affected ways' OLD
@@ -292,16 +285,16 @@ def apply_diff_batch(
                 rel_hit, files_read["dirty_rel_rindex"] = RI.rindex_lookup(
                     spark, rel_rindex_store, _union_ids(aff_ids, way_del)
                 )
-                aff_rel = _id_set(rel_hit.unionAll(rel_ch))
+                aff_rel = _union_ids(rel_hit, rel_up, rel_del, hold=True)
                 rels0_aff = _frame(
                     _hold(
                         _pruned_rows(rels_store, aff_rel, "dirty_rels").select(
-                            "id", "members"
+                            ["id", "members"]
                         )
                     )
                 )
                 post_r = rels0_aff.join(rel_ch, "id", "anti").unionByName(
-                    rel_up_df.join(F.broadcast(_frame(aff_rel)), "id", "semi").select(
+                    _frame(rel_up).join(F.broadcast(_frame(aff_rel)), "id", "semi").select(
                         "id", "members"
                     )
                 )
@@ -368,12 +361,9 @@ def apply_diff_batch(
     rindexes = [("rindex", rindex_store, way_old, way_up.select(["id", "refs"]), way_del)]
     if rel_rindex_store:
         rel_old = _hold(
-            _pruned_rows(rels_store, _union_ids(rel_up, rel_del), "rel_old").select(
-                "id", _member_way_refs().alias("refs")
-            )
+            _way_refs(_pruned_rows(rels_store, _union_ids(rel_up, rel_del), "rel_old"))
         )
-        rel_new = rel_up_df.select("id", _member_way_refs().alias("refs"))
-        rindexes.append(("rel_rindex", rel_rindex_store, rel_old, rel_new, rel_del))
+        rindexes.append(("rel_rindex", rel_rindex_store, rel_old, _way_refs(rel_up), rel_del))
     for path, up, dele, name in (
         (nodes_store, node_up, node_del, "nodes"),
         (ways_store, way_up, way_del, "ways"),
@@ -404,11 +394,10 @@ def apply_diff_batch(
             stats["way_chunks"] = "replayed"
         else:
             ways_diff = _pruned_rows(ways_store, aff_ids, "way_rows")
-            ways_t = _collected(ways_diff)
-            if ways_t is None:
+            if isinstance(ways_diff, DataFrame):
                 node_ids = ways_diff.select(F.explode("refs").alias("id")).distinct()
             else:
-                ways_diff, node_ids = _frame(ways_t), _refs_ids(ways_t)
+                ways_diff, node_ids = _frame(ways_diff), _refs_ids(ways_diff)
             nodes_aff, n = ES.read_entities_for_ids(spark, nodes_store, node_ids)
             files_read["way_nodes"] = n
             stats["way_chunks"] = update.apply_way_diff(
@@ -425,11 +414,11 @@ def apply_diff_batch(
         rel_hit, files_read["rel_rindex_lookup"] = RI.rindex_lookup(
             spark, rel_rindex_store, _union_ids(aff_ids, way_del)
         )
-        aff_rel_ids = _id_set(rel_hit.unionAll(rel_up_df.select("id")))
+        aff_rel_ids = _union_ids(rel_hit, rel_up, hold=True)
         if group in IcepickTable(rel_table).committed_groups():
             stats["rel_chunks"] = "replayed"
         else:
-            rels_diff = _pruned_rows(rels_store, aff_rel_ids, "rel_rows")
+            rels_diff = _frame(_pruned_rows(rels_store, aff_rel_ids, "rel_rows"))
             # resolve ONLY the member ways of affected relations — the
             # radius-proportional subset, with post-diff node geometry
             member_ways = (
@@ -458,6 +447,23 @@ def _member_way_refs():
     """Column: a relation's way-member ids as a refs array (the parent-refs
     shape upsert_rindex expects)."""
     return F.expr("transform(filter(members, m -> m.mtype = 1), m -> m.ref)")
+
+
+def _way_refs(rels):
+    """(id, refs) of relation rows `rels`, refs = the way-member ids: a
+    DataFrame through _member_way_refs, an Arrow table with the same rule
+    in pyarrow (a null member list gives an empty refs list; both feed
+    upsert_rindex only as (ref, parent) pairs, so they index alike)."""
+    if isinstance(rels, DataFrame):
+        return rels.select("id", _member_way_refs().alias("refs"))
+    members = rels.column("members").combine_chunks()
+    way = pc.fill_null(pc.equal(pc.struct_field(members.values, "mtype"), 1), False)
+    ends = np.append(0, np.cumsum(way.to_numpy(zero_copy_only=False)))
+    refs = pa.ListArray.from_arrays(
+        pa.array(ends[members.offsets.to_numpy()], pa.int32()),
+        pc.struct_field(members.values, "ref").filter(way),
+    )
+    return pa.table({"id": rels.column("id"), "refs": refs})
 
 
 def maintain_tables(

@@ -112,9 +112,13 @@ def test_staging_rule_lives_in_bounded():
     operators and the streaming layer, and none of data_paths anywhere in
     the package), the streaming layer reads no whole entity store
     (a per-batch store read is id-range-pruned:
-    entity_store.read_entities_for_ids), and no catch-all handler
-    (`except Exception`, `except BaseException`, bare `except:`) can send
-    a failed driver path down the distributed one."""
+    entity_store.read_entities_for_ids), every driver-read size test is
+    bounded.fits_driver (no os.path.getsize in the operators and the
+    streaming layer), the entity-store and reverse-index operators never
+    collect their DataFrame inputs (no bounded_arrow in entity_store.py
+    or rindex.py), and no catch-all handler (`except Exception`,
+    `except BaseException`, bare `except:`) can send a failed driver path
+    down the distributed one."""
     to_arrow = re.compile(r"\.toArrow\(")
     read_parquet = re.compile(r"read\.parquet\(")
     read_data_paths = re.compile(r"read\.parquet\(\*.*\bdata_paths\(")
@@ -137,6 +141,12 @@ def test_staging_rule_lives_in_bounded():
                 )
             if rel.startswith("streaming/") and "read_entity_store(" in line:
                 offenders.append(f"{rel}:{no}: unpruned store read: {line.strip()}")
+            if rel.startswith(("operators/", "streaming/")) and "os.path.getsize(" in line:
+                offenders.append(f"{rel}:{no}: size test outside fits_driver: {line.strip()}")
+            if rel in ("operators/entity_store.py", "operators/rindex.py") and (
+                "bounded_arrow(" in line
+            ):
+                offenders.append(f"{rel}:{no}: collects its input: {line.strip()}")
             if catch_all.search(line):
                 offenders.append(f"{rel}:{no}: catch-all except: {line.strip()}")
     assert not offenders, "\n".join(offenders)

@@ -11,6 +11,7 @@ rows, and must self-heal on the next touch."""
 import os
 
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from coords_spark.fixtures import gen_update_diffs, gen_update_world
@@ -234,6 +235,130 @@ def test_rindex_path_results_identical(spark, tmp_path):
     assert got_wr == want_wr
 
 
+# pre-diff parents (id, refs) of a small node->ways index, and the diff:
+# way 10 becomes a closed way repeating its first node, way 11 is deleted
+# (ref 4 loses its only parent), way 12 keeps no refs (ref 5 empties too),
+# way 14 is brand new with a brand-new ref 8; ways 13 and 15 are untouched
+_PRE_PARENTS = {10: [1, 2], 11: [3, 4], 12: [5, 6], 13: [6, 7], 15: [20, 21]}
+_NEW_PARENTS = {10: [1, 2, 3, 1], 12: [], 14: [7, 8]}
+_DELETED_PARENTS = [11]
+_LOOKUP_REFS = [1, 3, 4, 6, 7, 8, 99]
+
+
+def _parent_refs(parents: dict):
+    import pyarrow as pa
+
+    ids = sorted(parents)
+    return pa.table(
+        {
+            "id": pa.array(ids, pa.int64()),
+            "refs": pa.array([parents[i] for i in ids], pa.list_(pa.int64())),
+        }
+    )
+
+
+def _parents_of(x) -> list:
+    """rindex_lookup's parents (a driver array or a DataFrame), sorted."""
+    if isinstance(x, DataFrame):
+        return sorted(r[0] for r in x.collect())
+    return sorted(int(i) for i in x)
+
+
+@pytest.mark.parametrize("path", ["driver", "over_bytes_gate", "distributed"])
+def test_upsert_rindex_paths_match(spark, tmp_path, monkeypatch, path):
+    """One index diff on each plan of upsert_rindex: driver inputs (Arrow
+    refs, an id array) with the pruned store files under the driver-read
+    gate, the same inputs over its byte cap, and DataFrame inputs. Each
+    ends at the reverse index of the post-diff parents, computed here in
+    Python, so the three store copies are equal; the driver plan runs no
+    Spark job. rindex_lookup then gives the same parents for an id array
+    as for a DataFrame, with no job on the driver plan."""
+    import numpy as np
+
+    from coords_spark import bounded
+    from test_bounded import _with_jobs
+
+    store = str(tmp_path / "rindex")
+    RI.build_rindex_store(
+        spark, spark.createDataFrame(_parent_refs(_PRE_PARENTS)), store, id_shift=1
+    )
+    old = _parent_refs({i: _PRE_PARENTS[i] for i in (10, 11, 12)})
+    new = _parent_refs(_NEW_PARENTS)
+    deleted = np.array(_DELETED_PARENTS, np.int64)
+    if path == "distributed":
+        old, new = spark.createDataFrame(old), spark.createDataFrame(new)
+        deleted = spark.createDataFrame([(i,) for i in _DELETED_PARENTS], "id long")
+    elif path == "over_bytes_gate":
+        monkeypatch.setattr(bounded, "SMALL_REWRITE_BYTES", 0)
+    stats, jobs = _with_jobs(
+        spark, lambda: RI.upsert_rindex(spark, store, old, new, deleted, group="d0")
+    )
+    if path == "driver":
+        assert jobs == 0, jobs
+
+    post = {
+        k: v for k, v in _PRE_PARENTS.items()
+        if k not in _NEW_PARENTS and k not in _DELETED_PARENTS
+    } | _NEW_PARENTS
+    want = {}
+    for pid, refs in post.items():
+        for ref in refs:
+            want.setdefault(ref, set()).add(pid)
+    got = {
+        r["node_id"]: list(r["way_ids"])
+        for r in ES.read_entity_store(spark, store).collect()
+    }
+    assert got == {ref: sorted(pids) for ref, pids in want.items()}
+    assert stats["rindex_files_read"] >= 1
+
+    ids = np.array(_LOOKUP_REFS, np.int64)
+    (by_array, _), jobs = _with_jobs(spark, lambda: RI.rindex_lookup(spark, store, ids))
+    by_frame, _ = RI.rindex_lookup(
+        spark, store, spark.createDataFrame([(i,) for i in _LOOKUP_REFS], "node_id long")
+    )
+    want_parents = sorted({p for ref in _LOOKUP_REFS for p in want.get(ref, ())})
+    assert _parents_of(by_array) == _parents_of(by_frame) == want_parents
+    if path == "driver":
+        assert isinstance(by_array, np.ndarray) and jobs == 0
+
+
+def test_upsert_entities_frame_input_stays_distributed(spark, tmp_path, monkeypatch):
+    """upsert_entities given DataFrames runs the distributed plan without
+    collecting them (bounded.bounded_arrow is never called) and writes the
+    same rows as the same diff given as an Arrow table and an id array."""
+    import numpy as np
+
+    from coords_spark import bounded
+
+    rows = [(i, 1, i * 10, -i, {}) for i in range(1, 40)]
+    ups = [(5, 2, 7, 7, {"k": "v"}), (100, 1, 1, 1, {})]
+    dele = [6, 30]
+    paths = {}
+    for form in ("arrow", "frame"):
+        paths[form] = str(tmp_path / form)
+        ES.build_entity_store(
+            spark.createDataFrame(rows, NODES_SCHEMA), paths[form], id_shift=3
+        )
+    ups_df = spark.createDataFrame(ups, NODES_SCHEMA)
+    ES.upsert_entities(
+        spark, paths["arrow"], ups_df.toArrow(), np.array(dele, np.int64), group="d0"
+    )
+
+    def no_collect(*_a, **_k):
+        raise AssertionError("upsert_entities collected a DataFrame input")
+
+    monkeypatch.setattr(bounded, "bounded_arrow", no_collect)
+    ES.upsert_entities(
+        spark, paths["frame"], ups_df,
+        spark.createDataFrame([(i,) for i in dele], "id long"), group="d0",
+    )
+    cols = STORE_COLS[0][1] + ["to_json(tags) as t"]
+    got = {form: _rows(spark, p, cols) for form, p in paths.items()}
+    assert got["frame"] == got["arrow"]
+    ids = [r[0] for r in got["arrow"]]
+    assert 100 in ids and 6 not in ids and 30 not in ids and len(ids) == 38
+
+
 @pytest.fixture(scope="module")
 def raise_world(spark, tmp_path_factory):
     d = tmp_path_factory.mktemp("raise")
@@ -282,9 +407,10 @@ def test_diff_apply_without_rindex_store_raises(spark, raise_world, missing):
 
 # Spark jobs one default apply_diff_batch of the n_rel=10 world runs
 # (diff, dirty log, three stores, both reverse-index stores, way and
-# relation tables): every diff-sized set costs at most one Spark action,
-# so a change that re-collects or re-checkpoints a set shows up here
-BATCH_JOB_CEILING = 63
+# relation tables): the batch is collected once, store rows and index
+# lookups/upserts run no job, so a change that re-collects or
+# re-checkpoints a set shows up here
+BATCH_JOB_CEILING = 36
 
 
 def test_diff_batch_forced_distributed_matches_default(
